@@ -49,9 +49,9 @@ class FakeApis:
     """Transport factory; `batch` is the gather result of the current
     cycle, served as two explore-sorts pages."""
 
-    def __init__(self, seed: int, batch: list[dict] | None = None):
+    def __init__(self, seed: int):
         self.seed = seed
-        self.batch = batch or []
+        self.batch: list[dict] = []
 
     def __call__(self):
         return self.transport

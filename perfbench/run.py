@@ -1,12 +1,11 @@
 """Benchmark of the engine on this host.
 
-    python3 perfbench/run.py --workload api_read --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload api_read --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. Generates its inputs from --seed (nothing
-outside the checkout is read), sets the engine up SETUPS times and
-reports the median set-up time, measures the workload for --seconds,
-checks every answer, and prints a detail line followed by one result
-line:
+outside the checkout is read), sets the engine up SETUPS times, warms
+the last set-up up, measures the workload for --seconds, checks every
+answer, and prints a detail line followed by one result line:
 
     {"correct": true, "attempted": N, "failed": 0, "metrics": {...}}
 
@@ -35,6 +34,7 @@ HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 PACKAGE = "roblox_vector_search_datagen_spark"
 SETUPS = 3
+SAMPLE_PERIOD = 0.2  # seconds between samples of RSS and cached RDDs
 DRIVER_MEMORY = "2g"
 HTTP_KINDS = ("text", "vector", "similar", "games", "stats", "post", "check")
 
@@ -104,11 +104,11 @@ def descendants() -> list[int]:
 
 class Sampler(threading.Thread):
     """Peak RSS of this process and its descendants (JVM, Python
-    workers) and, when `sc` is given, samples of the persisted RDDs."""
+    workers) and samples of the persisted RDDs, from start() to stop()."""
 
-    def __init__(self, sc=None, period: float = 0.2):
+    def __init__(self, sc):
         super().__init__(daemon=True)
-        self.sc, self.period = sc, period
+        self.sc = sc
         self.peak = 0
         self.storage: list[dict] = []
         self._halt = threading.Event()
@@ -124,17 +124,21 @@ class Sampler(threading.Thread):
                 pass
         return total
 
-    def run(self) -> None:
+    def sample(self) -> None:
         from spans import storage_sample
 
-        while not self._halt.wait(self.period):
-            self.peak = max(self.peak, self.tree_rss())
-            if self.sc is not None:
-                self.storage.append(storage_sample(self.sc))
+        self.peak = max(self.peak, self.tree_rss())
+        self.storage.append(storage_sample(self.sc))
+
+    def run(self) -> None:
+        while not self._halt.wait(SAMPLE_PERIOD):
+            self.sample()
 
     def stop(self) -> None:
+        """Stop sampling, then take the closing sample."""
         self._halt.set()
         self.join()
+        self.sample()
 
 
 def stop_spark(spark) -> None:
@@ -178,7 +182,7 @@ def pct(xs: list[float], q: float) -> float:
     return statistics.quantiles(xs, n=100, method="inclusive")[int(q) - 1]
 
 
-def e2e_metrics(wl, phase, setup_s: list[float]) -> dict:
+def e2e_metrics(wl, phase, setup_s: list[float], warmup_s: float) -> dict:
     good = [(k, ms) for k, ms, ok in phase.ops if ok]
     primary = [ms for k, ms in good if k == "job"] if wl.name == "ingest_mixed" else [
         ms for k, ms in good if k not in ("post", "check")]
@@ -187,7 +191,7 @@ def e2e_metrics(wl, phase, setup_s: list[float]) -> dict:
     else:
         ops_per_s = len(primary) / phase.seconds
     return {
-        "setup_s": (statistics.median(setup_s), "s"),
+        "setup_s": (statistics.median(setup_s) + warmup_s, "s"),
         "p50_ms": (statistics.median(primary), "ms"),
         "p90_ms": (pct(primary, 90), "ms"),
         "ops_per_s": (ops_per_s, "1/s"),
@@ -220,8 +224,8 @@ def traced_metrics(wl, tracer, base, phase, sampler: "Sampler") -> tuple[dict, d
     served = getattr(wl, "served", None)
     files, size = dir_stats(served.corpus.data_dir) if served else (0, 0)
     storage = sampler.storage
-    cached = max((sum(b for _, b in s.values()) for s in storage), default=0)
-    waits = getattr(wl, "waits_ms", [])
+    cached = sum(b for _, b in storage[-1].values())  # at the end of the phase
+    waits = phase.extra.get("job_wait_ms", [])
     layers.update({
         "corpus.files": files,
         "corpus.disk_mb": size / MIB,
@@ -262,6 +266,8 @@ def run(args, work: Path) -> tuple[dict, dict]:
     inputs = wl.prepare(str(work), args.seed)
     wall["prepare"] = time.perf_counter() - t0
 
+    # Session start and corpus import, SETUPS times: the first includes the
+    # JVM launch, the others build a new session in the same JVM.
     setup_s, spark = [], None
     for i in range(SETUPS):
         t0 = time.perf_counter()
@@ -275,11 +281,11 @@ def run(args, work: Path) -> tuple[dict, dict]:
     wall["setups"] = sum(setup_s)
     t0 = time.perf_counter()
     try:
+        # the first run of the workload's operations in this JVM, up to
+        # the first timed one; it counts in setup_s
         wl.warmup()
         wall["warmup"] = time.perf_counter() - t0
         t0, steal0 = time.perf_counter(), steal_seconds()
-        sampler = Sampler(spark.sparkContext if args.trace else None)
-        sampler.start()
         if args.trace:
             from spans import Tracer
 
@@ -287,15 +293,17 @@ def run(args, work: Path) -> tuple[dict, dict]:
             # follow the same amount of warm-up
             settle = wl.measure(args.seconds / 2)
             tracer = Tracer(spark)
+            sampler = Sampler(spark.sparkContext)
             tracer.instrument()
+            sampler.start()
             try:
                 phase = wl.measure(args.seconds / 2, tracer)
             finally:
+                sampler.stop()
                 tracer.uninstrument()
             base = wl.measure(args.seconds / 2)
         else:
             phase = wl.measure(args.seconds)
-        sampler.stop()
         wall["measure"] = time.perf_counter() - t0
         wall["measure_cpu_steal"] = steal_seconds() - steal0
         t0 = time.perf_counter()
@@ -303,7 +311,7 @@ def run(args, work: Path) -> tuple[dict, dict]:
         if args.trace:
             metrics, report = traced_metrics(wl, tracer, base, phase, sampler)
         else:
-            metrics, report = e2e_metrics(wl, phase, setup_s), None
+            metrics, report = e2e_metrics(wl, phase, setup_s, wall["warmup"]), None
         wall["check_and_report"] = time.perf_counter() - t0
         detail = {
             "workload": wl.name,

@@ -4,7 +4,7 @@ Each workload has the same life cycle, driven by run.py:
 
     prepare(work, seed)   inputs, before Spark starts
     setup(spark, index)   corpus import and server start (run SETUPS times)
-    warmup()              untimed first operations, once, after the last setup
+    warmup()              first operations, once, after the last setup
     measure(seconds, tr)  the timed loop; returns a Phase
     check()               correctness checks kept out of the timed loop
     teardown()
@@ -52,7 +52,15 @@ class ApiRead:
         self.work, self.seed, self.next_request = work, seed, 0
         self.sf_dir = os.path.join(work, "fixtures")
         sizes = datagen.write_fixtures(self.sf_dir, self.sf, seed, DOMAIN_TABLES)
-        self.requests = datagen.request_mix(seed, self.n_requests, list(range(sizes["embeddings"])))
+        ids = list(range(sizes["embeddings"]))
+        self.requests = datagen.request_mix(seed, self.n_requests, ids)
+        # warm-up requests come from a draw of their own, so the timed loop
+        # does not start with requests the server has just answered
+        drawn = datagen.request_mix(datagen.stable_int(seed, "warmup"), datagen.MIX_BLOCK, ids)
+        first: dict[str, tuple] = {}
+        for r in drawn:
+            first.setdefault(r[0], r)
+        self.warm = list(first.values())
         self.answers: dict[tuple, object] = {}
         return {"sf": self.sf, "tables": sizes, "loop": "closed", "clients": self.clients,
                 "mix": dict(datagen.MIX), "limits": datagen.LIMITS,
@@ -61,13 +69,12 @@ class ApiRead:
 
     def setup(self, spark, index: int) -> None:
         self.served = Served(spark, os.path.join(self.work, f"served{index}"), self.sf_dir)
+        self.seen: set[tuple] = set()  # requests this server has answered
 
     def warmup(self) -> None:
-        seen = set()
-        for op, path, params in self.requests:  # one request of each kind
-            if op not in seen:
-                seen.add(op)
-                self.served.client.call("GET", path, params)
+        for _, path, params in self.warm:  # one request of each kind
+            self.served.client.call("GET", path, params)
+            self.seen.add(_key(path, params))
 
     def measure(self, seconds: float, tracer=None) -> Phase:
         phase, lock = Phase(unit="request"), threading.Lock()
@@ -102,9 +109,12 @@ class ApiRead:
         # correctness, outside the timed loop: every response against the
         # DuckDB oracle's answer to the same request
         orc = oracle.Oracle(self.sf_dir)
-        for i, ms, status, body in responses:
+        repeated = 0
+        for i, ms, status, body in sorted(responses, key=lambda r: r[0]):
             op, path, params = self.requests[i % len(self.requests)]
-            key = (path, tuple(sorted(params.items())))
+            key = _key(path, params)
+            repeated += key in self.seen
+            self.seen.add(key)
             if key not in self.answers:
                 self.answers[key] = orc.api_answer(op, path, params)
             ok = status == 200 and oracle.same(oracle.canonical_json(body), self.answers[key])
@@ -113,6 +123,9 @@ class ApiRead:
         orc.close()
         phase.n_units = len(phase.ops)
         phase.extra["distinct_requests_checked"] = len(self.answers)
+        # requests whose endpoint and parameters the server had already
+        # answered (a result cache could serve them)
+        phase.extra["repeated_share"] = repeated / max(len(responses), 1)
         self.next_request = next(counter)
         return phase
 
@@ -121,6 +134,10 @@ class ApiRead:
 
     def teardown(self) -> None:
         self.served.close()
+
+
+def _key(path: str, params: dict) -> tuple:
+    return path, tuple(sorted(params.items()))
 
 
 class BatchRegistry:
@@ -137,6 +154,7 @@ class BatchRegistry:
         orc = oracle.Oracle(self.sf_dir)
         self.answers = {q: oracle.canonical(*orc.rows(QUERIES[q].oracle)) for q in self.queries}
         orc.close()
+        self.results: list[tuple[str, object]] = []  # (query, arrow table) of the warm-up
         return {"sf": self.sf, "tables": sizes, "loop": "closed", "clients": 1,
                 "queries": list(self.queries)}
 
@@ -148,13 +166,10 @@ class BatchRegistry:
             tables.load_table(spark, self.sf_dir, t)
 
     def warmup(self) -> None:
-        """One untimed pass, which also checks each query's rows against
-        its registry oracle."""
-        self.mismatched = 0
+        """One pass that collects each query's rows, which check() compares
+        with the registry oracle."""
         for q in self.queries:
-            table = self.registry[q].builder(self.spark, self.sf_dir).toArrow()
-            got = oracle.canonical(table.column_names, [list(r.values()) for r in table.to_pylist()])
-            self.mismatched += not oracle.same(got, self.answers[q])
+            self.results.append((q, self.registry[q].builder(self.spark, self.sf_dir).toArrow()))
 
     def measure(self, seconds: float, tracer=None) -> Phase:
         phase = Phase(unit="query")
@@ -203,7 +218,11 @@ class BatchRegistry:
             tracer.end(span)
 
     def check(self) -> tuple[int, int]:
-        return len(self.queries), self.mismatched  # checked in warmup()
+        mismatched = 0
+        for q, table in self.results:
+            got = oracle.canonical(table.column_names, [list(r.values()) for r in table.to_pylist()])
+            mismatched += not oracle.same(got, self.answers[q])
+        return len(self.results), mismatched
 
     def teardown(self) -> None:
         pass
@@ -239,7 +258,7 @@ class IngestMixed:
         self.embedded = set(emb.column(0).to_pylist())
         self.cycle = 0
         self.terminal: dict[str, tuple[float, dict]] = {}
-        self.waits_ms: list[float] = []
+        self.waits_ms: list[float] = []  # of the jobs of the current phase
         self.cond = threading.Condition()
         self.served.jobs.on_job_updated(self._on_job)
         self.spark = spark
@@ -267,6 +286,7 @@ class IngestMixed:
     def measure(self, seconds: float, tracer=None) -> Phase:
         phase = Phase(unit="cycle")
         client = self.served.client
+        self.waits_ms = []
         while phase.n_units == 0 or phase.seconds < seconds:
             t_cycle = time.perf_counter()
             batch = datagen.ingest_batch(self.seed, self.cycle, list(self.model), self.n_new,
@@ -300,6 +320,7 @@ class IngestMixed:
             ok = status == 200 and stats == expected_stats(self.model, self.embedded)
             phase.ops.append(("check", (time.perf_counter() - t0) * 1000.0, ok))
             phase.failed += not ok
+        phase.extra["job_wait_ms"] = self.waits_ms
         return phase
 
     def _reads(self, fresh: list[int]) -> list[tuple]:
