@@ -190,6 +190,8 @@ class BatchRegistry:
         phase.seconds = time.perf_counter() - t_start
         phase.n_units = len(phase.ops)
         phase.extra["pass_s"] = passes
+        phase.extra["query_ms"] = {q: [ms for k, ms, ok in phase.ops if k == q and ok]
+                                   for q in self.queries}
         return phase
 
     def _run(self, q: str, tracer) -> None:
