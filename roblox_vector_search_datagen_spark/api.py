@@ -18,6 +18,11 @@ Reference behaviors kept:
 * async-job POSTs create a pending job, run the command in the
   background, and return the job id immediately
   (gatherGames.post.ts:29-57; setImmediate -> a driver thread pool)
+
+Where the reference reloads its JSON files on every request, the read
+endpoints here answer from the corpus snapshot of the current version
+(corpus.py): cached games and scoring frames and the /stats row, dropped
+by every corpus write.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .corpus import Corpus
 from .functions import vector as V
@@ -94,8 +100,8 @@ class ApiService:
         self.embed_model = embed_model
         self._pool = ThreadPoolExecutor(max_workers=max_workers)
         # corpus mutations rewrite parquet dirs with a stage-then-swap
-        # that has no internal locking — serialize the pipeline jobs so
-        # two concurrent POSTs can't interleave the swap and lose a table
+        # whose staging writes are not locked — serialize the pipeline
+        # jobs so two concurrent POSTs can't interleave and lose a table
         self._mutation_lock = threading.Lock()
 
     # -- synchronous query endpoints ---------------------------------------
@@ -103,14 +109,14 @@ class ApiService:
     def get_games(self, limit: int | None = None) -> list[dict]:
         """GET /games (games.get.ts:50-66): name-sorted listing."""
         lim = _clamp_limit(limit, default=0, lo=1, hi=1_000_000) if limit is not None else None
-        df = search.list_games_df(self.corpus.games(), lim)
+        df = search.list_games_df(self.corpus.snapshot().games, lim)
         return _validated(_rows(df), ("universeId", "name", "rootPlaceId"))
 
     def get_search(self, q: str, limit: int | None = None) -> list[dict]:
         """GET /search (search.get.ts:72-202): text scoring cascade."""
         if not q:
             raise ApiError(400, "q is required")
-        df = search.text_search_df(self.corpus.games(), q, _clamp_limit(limit))
+        df = search.text_search_df(self.corpus.snapshot().games, q, _clamp_limit(limit))
         cols = SEARCH_COLUMNS[:-1] + ("matchType", "score")
         return _validated(_rows(df), cols)
 
@@ -122,27 +128,26 @@ class ApiService:
         if not q:
             raise ApiError(400, "q is required")
         df = search.vector_search_df(
-            self.corpus.games(), self.corpus.embeddings(), V.embed_query(q), _clamp_limit(limit)
+            self.corpus.snapshot().scoring, V.embed_query(q), _clamp_limit(limit)
         )
         return _validated(_rows(df), SEARCH_COLUMNS)
 
     def get_similar_search(self, universe_id: int, limit: int | None = None) -> list[dict]:
-        """GET /similar-search/:universeId (similarSearch.get.ts:74-159)."""
+        """GET /similar-search/:universeId (similarSearch.get.ts:74-159).
+        Only an empty result pays the probe that tells 404 from []."""
         try:
             target = int(universe_id)
         except (TypeError, ValueError):
             raise ApiError(400, "universeId must be an integer")
-        if self.corpus.embeddings().filter(f"universeId = {target}").isEmpty():
+        scoring = self.corpus.snapshot().scoring
+        rows = _rows(search.similar_search_df(scoring, target, _clamp_limit(limit)))
+        if not rows and scoring.filter(F.col("universeId") == target).isEmpty():
             raise ApiError(404, f"no embedding for universe {target}")
-        df = search.similar_search_df(
-            self.corpus.games(), self.corpus.embeddings(), target, _clamp_limit(limit)
-        )
-        return _validated(_rows(df), SEARCH_COLUMNS)
+        return _validated(rows, SEARCH_COLUMNS)
 
     def get_stats(self) -> dict:
         """GET /stats (stats.get.ts:45-113)."""
-        row = search.stats_df(self.corpus.games(), self.corpus.embeddings()).collect()[0]
-        return row.asDict()
+        return dict(self.corpus.snapshot().stats)
 
     # -- jobs endpoints ----------------------------------------------------
 
@@ -221,6 +226,7 @@ class ApiService:
 
     def shutdown(self) -> None:
         self._pool.shutdown(wait=True)
+        self.corpus.drop_snapshot()
 
     def openapi_spec(self) -> dict:
         """Swagger-docs parity (scripts/generate-swagger.ts:72-108 emits

@@ -314,14 +314,16 @@ def count_games(corpus: Corpus) -> dict:
     return search.count_games_df(corpus.games()).collect()[0].asDict()
 
 def find_similar_games(corpus: Corpus, target: int, limit: int = 10) -> DataFrame:
-    return search.similar_search_df(corpus.games(), corpus.embeddings(), target, limit)
+    return search.similar_search_df(
+        search.scoring_df(corpus.games(), corpus.embeddings()), target, limit
+    )
 
 def search_games(corpus: Corpus, query: str, limit: int = 10) -> DataFrame:
     """CLI `search` (search.ts:7-108): embed the query (S16 — the
     deterministic local encoder; swap embed_query for a live transport
     call in production) then vector top-k."""
     return search.vector_search_df(
-        corpus.games(), corpus.embeddings(), V.embed_query(query), limit
+        search.scoring_df(corpus.games(), corpus.embeddings()), V.embed_query(query), limit
     )
 
 def clear_gameplay_descriptions(corpus: Corpus) -> int:

@@ -9,23 +9,85 @@ batch analog of the reference's whole-file JSON overwrite
 (gatherGames.ts:93). On a real cluster this table would be Delta/Iceberg
 and the swap a MERGE/replace; the staging pattern keeps the same
 restart-safety (the live directory is always a complete table).
+
+Reads for the HTTP API come from a *snapshot* of the current version
+(`Corpus.snapshot()`): the games table and the search scoring frame
+(operators/search.py `scoring_df`), both cached, plus the /stats row.
+Each part is built once per version, under `_lock`, and every write to
+games or embeddings drops the whole snapshot under the same lock before
+it swaps or appends to a live directory.
+
+The drop must be synchronous: Spark's CacheManager substitutes a cached
+scan into any later plan over the same path, so while the old entry is
+cached even a fresh `spark.read.parquet(live)` returns the old rows. A
+lazily checked signature (a directory mtime, say) would let such reads
+through. All writers must therefore go through the Corpus object that
+serves the reads.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import threading
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators import search
 from .schemas import EMBEDDING_SCHEMA, GAME_SCHEMA, IMAGE_SCHEMA
 from .sources import jsonio
+
+class Snapshot:
+    """Cached reads of one corpus version: the games table, the search
+    scoring frame and the /stats row. Each part is built on first use,
+    under the corpus lock that writers hold while they drop the snapshot;
+    a part asked of a dropped snapshot comes from the current one, so no
+    cache entry outlives its version."""
+
+    def __init__(self, corpus: Corpus):
+        self._corpus = corpus
+        self._parts: dict[str, object] = {}
+
+    def _part(self, name: str, build: Callable[[], object]):
+        with self._corpus._lock:
+            if self._corpus._snapshot is not self:
+                return getattr(self._corpus.snapshot(), name)
+            if name not in self._parts:
+                self._parts[name] = build()
+            return self._parts[name]
+
+    @property
+    def games(self) -> DataFrame:
+        return self._part("games", lambda: self._corpus.games().cache())
+
+    @property
+    def scoring(self) -> DataFrame:
+        return self._part(
+            "scoring", lambda: search.scoring_df(self.games, self._corpus.embeddings()).cache()
+        )
+
+    @property
+    def stats(self) -> dict:
+        # plain reads: a /stats alone caches nothing, and once the games
+        # part exists the CacheManager substitutes it here anyway
+        c = self._corpus
+        return self._part(
+            "stats", lambda: search.stats_df(c.games(), c.embeddings()).collect()[0].asDict()
+        )
+
+    def unpersist(self) -> None:
+        for name in ("scoring", "games"):
+            if name in self._parts:
+                self._parts[name].unpersist(blocking=True)
 
 class Corpus:
     def __init__(self, spark: SparkSession, data_dir: str):
         self.spark = spark
         self.data_dir = data_dir
         os.makedirs(data_dir, exist_ok=True)
+        self._lock = threading.RLock()
+        self._snapshot: Snapshot | None = None
 
     def _path(self, name: str) -> str:
         return os.path.join(self.data_dir, name)
@@ -44,6 +106,18 @@ class Corpus:
             return self.spark.createDataFrame([], IMAGE_SCHEMA)
         return self.spark.read.schema(IMAGE_SCHEMA).parquet(path)
 
+    def snapshot(self) -> Snapshot:
+        with self._lock:
+            if self._snapshot is None:
+                self._snapshot = Snapshot(self)
+            return self._snapshot
+
+    def drop_snapshot(self) -> None:
+        with self._lock:
+            if self._snapshot is not None:
+                self._snapshot.unpersist()
+                self._snapshot = None
+
     # -- writes ------------------------------------------------------------
 
     def _rewrite(self, df: DataFrame, name: str) -> None:
@@ -60,11 +134,13 @@ class Corpus:
         invalidate the other plan's captured file listing."""
         for name, df in updates.items():
             df.write.mode("overwrite").parquet(self._path(name + ".staging"))
-        for name in updates:
-            live = self._path(name)
-            if os.path.exists(live):
-                shutil.rmtree(live)
-            os.replace(self._path(name + ".staging"), live)
+        with self._lock:
+            self.drop_snapshot()
+            for name in updates:
+                live = self._path(name)
+                if os.path.exists(live):
+                    shutil.rmtree(live)
+                os.replace(self._path(name + ".staging"), live)
 
     def write_games(self, df: DataFrame) -> None:
         self._rewrite(df.select(*[f.name for f in GAME_SCHEMA.fields]), "games.parquet")
@@ -72,7 +148,9 @@ class Corpus:
     def write_embeddings(self, df: DataFrame, mode: str = "overwrite") -> None:
         cols = df.select(*[f.name for f in EMBEDDING_SCHEMA.fields])
         if mode == "append":
-            cols.write.mode("append").parquet(self._path("embeddings.parquet"))
+            with self._lock:
+                self.drop_snapshot()
+                cols.write.mode("append").parquet(self._path("embeddings.parquet"))
         else:
             self._rewrite(cols, "embeddings.parquet")
 

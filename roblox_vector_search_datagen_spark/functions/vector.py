@@ -65,8 +65,10 @@ def norm_expr_sql(a: str) -> str:
         f"(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
     )
 
-def cosine_expr_sql(a: str, b: str) -> str:
-    denom = f"{norm_expr_sql(a)} * {norm_expr_sql(b)}"
+def cosine_expr_sql(a: str, b: str, norm_a: str | None = None, norm_b: str | None = None) -> str:
+    """`norm_a`/`norm_b` name precomputed norm_expr_sql values (a column
+    of a cached frame) in place of recomputing them per row."""
+    denom = f"{norm_a or norm_expr_sql(a)} * {norm_b or norm_expr_sql(b)}"
     return (
         f"CASE WHEN {denom} = 0 THEN CAST(NULL AS DOUBLE) "
         f"ELSE {dot_expr_sql(a, b)} / ({denom}) END"

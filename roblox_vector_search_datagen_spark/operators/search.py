@@ -4,18 +4,26 @@ listing, stats and counts.
 Reference endpoints: src/endpoints/vectorSearch.get.ts,
 similarSearch.get.ts, search.get.ts, games.get.ts, stats.get.ts and CLI
 countGames.ts. The reference loads both JSON datasets wholesale per
-request and scores in a JS loop; here each query is a declarative plan:
+request and scores in a JS loop; here each search is one Spark-SQL
+statement. Vector and similar search rank over a *scoring frame*
+(`scoring_df`):
 
-  scan (pruned cols) -> narrow left join for the popularity factor
-  -> Catalyst cosine / scoring cascade -> TakeOrderedAndProject top-k
-  -> broadcast decoration join of the tiny top-k against games
+  embeddings LEFT JOIN games, once: the six returned game columns, a
+  has_game flag, each vector's norm and the popularity factor
+  -> cosine * popularity -> ORDER BY ... LIMIT :k -> WHERE has_game
 
-The two-phase join matters at scale: ranking happens on narrow rows
-(id, sim), so the sort never carries wide text columns, and the
-decoration join broadcasts k<=100 rows instead of shuffling the corpus.
+The HTTP API passes the corpus snapshot's cached frame (corpus.py), so a
+vector search is one Spark job and a similar search two; the registry
+and the CLI pass an uncached frame over the parquet scans. Filtering on
+has_game after the LIMIT keeps the reference's slice-then-drop order
+(vectorSearch.get.ts:154-168), which can return fewer than k rows. User
+text, k and ids travel as named parameter markers (`:q`, `:k`), never
+formatted into the SQL text.
 """
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,30 +32,61 @@ from ..functions import vector as V
 from ..sources import tables
 
 GAME_COLS = ["universeId", "rootPlaceId", "name", "description", "gameplayDescription", "playerCount"]
+_OUT = ", ".join(GAME_COLS)
 
-def popularity_factor(player_count):
-    """min(0.2, playerCount/500) + 0.8 — reference search.get.ts:120-121,
-    vectorSearch.get.ts:141-142 (missing playerCount counts as 0)."""
-    return F.least(F.lit(0.2), F.coalesce(player_count, F.lit(0)).cast("double") / 500.0) + 0.8
-
+# min(0.2, playerCount/500) + 0.8 — reference search.get.ts:120-121,
+# vectorSearch.get.ts:141-142 (missing playerCount counts as 0)
 POPULARITY_SQL = "(least(0.2, CAST(coalesce({pc}, 0) AS DOUBLE) / 500.0) + 0.8)"
 
-def _decorate_topk(topk: DataFrame, games_df: DataFrame) -> DataFrame:
-    """J7 decoration join. The reference slices top-k first and *then*
-    drops ids with no game row (filter(g !== null),
-    vectorSearch.get.ts:154-168) — so the inner join runs after limit
-    and can legitimately return fewer than k rows. topk is tiny; Spark
-    broadcasts it against the corpus-sized games table."""
-    return (
-        games_df.join(F.broadcast(topk), "universeId", "inner")
-        .select(*GAME_COLS, "similarity")
-    )
+_SCORING_SQL = f"""
+SELECT e.universeId, g.rootPlaceId, g.name, g.description, g.gameplayDescription, g.playerCount,
+       g.universeId IS NOT NULL AS has_game, e.embedding,
+       {V.norm_expr_sql("e.embedding")} AS norm,
+       {POPULARITY_SQL.format(pc="g.playerCount")} AS pop
+FROM {{emb}} e LEFT JOIN {{games}} g ON g.universeId = e.universeId
+"""
 
-def vector_search_df(
-    games_df: DataFrame, emb_df: DataFrame, query_vec: list[float], limit: int = 10
+def _sql(text: str, args: dict, **frames: DataFrame) -> DataFrame:
+    """`spark.sql(text, args)` with each `{name}` slot of the (constant)
+    text bound to a DataFrame through a temp view for the analysis.
+    The views are dropped through the session catalog: Catalog.
+    dropTempView (what spark.sql's own DataFrame kwargs use) would also
+    uncache the frame a view was made from, i.e. the corpus snapshot."""
+    spark = next(iter(frames.values())).sparkSession
+    names = {slot: f"_rvs_{slot}_{uuid.uuid4().hex}" for slot in frames}
+    for slot, df in frames.items():
+        df.createOrReplaceTempView(names[slot])
+    try:
+        return spark.sql(text.format(**names), args=args)
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)
+
+def scoring_df(games_df: DataFrame, emb_df: DataFrame) -> DataFrame:
+    """Every embedding row with what ranking and the response need."""
+    return _sql(_SCORING_SQL, {}, emb=emb_df, games=games_df)
+
+def _top_k(
+    scoring: DataFrame, cosine: str, source: str, args: dict, limit: int, hint: str = ""
 ) -> DataFrame:
-    """DataFrame-level core of semantic search — shared by the fixture
-    registry query and the corpus CLI/API surface.
+    """Rank `source` (rows `s` of the scoring frame) by rounded cosine x
+    popularity, cut k, then drop ids with no game row."""
+    text = f"""
+SELECT {_OUT}, similarity FROM (
+  SELECT {hint} s.*, round(({cosine}) * s.pop, 6) AS similarity FROM {source}
+  ORDER BY similarity DESC NULLS LAST, universeId LIMIT :k
+) WHERE has_game
+"""
+    k = max(1, min(100, limit))  # clamp, vectorSearch.get.ts:84-90
+    return _sql(text, {**args, "k": k}, scoring=scoring)
+
+def vector_search_df(scoring: DataFrame, query_vec: list[float], limit: int = 10) -> DataFrame:
+    """Semantic search over a scoring frame — shared by the fixture
+    registry query, the CLI and the HTTP API.
+
+    The query vector enters the plan as a literal array (numbers only,
+    so it is safe in the SQL text); its norm constant-folds.
 
     Deliberate deviation: similarity is rounded to 6dp BEFORE top-k
     ranking (the reference sorts unrounded and rounds after slicing,
@@ -56,31 +95,17 @@ def vector_search_df(
     the last bits — agree on near-tie ordering, with universeId as the
     deterministic tie-break. At 6dp the rank inversion window is ~1e-6,
     far below embedding noise."""
-    limit = max(1, min(100, limit))  # clamp, vectorSearch.get.ts:84-90
-    qv = V.vector_lit_spark_sql(query_vec)
-    sim = (
-        f"round(({V.cosine_expr_sql('embedding', qv)})"
-        f" * {POPULARITY_SQL.format(pc='playerCount')}, 6)"
-    )
-    scored = (
-        emb_df.filter(F.size("embedding") == len(query_vec))  # P11 guard, search.ts:74-76
-        .join(games_df.select("universeId", "playerCount"), "universeId", "left")
-        .selectExpr("universeId", f"{sim} AS similarity")
-    )
-    topk = scored.orderBy(F.col("similarity").desc_nulls_last(), F.col("universeId")).limit(limit)
-    return _decorate_topk(topk, games_df)
+    cosine = V.cosine_expr_sql("s.embedding", V.vector_lit_spark_sql(query_vec), norm_a="s.norm")
+    source = "{scoring} s WHERE size(s.embedding) = :dim"  # P11 guard, search.ts:74-76
+    return _top_k(scoring, cosine, source, {"dim": len(query_vec)}, limit)
 
 def vector_search(
     spark: SparkSession, sf_dir: str, query_text: str = "deep space mining adventure", limit: int = 10
 ) -> DataFrame:
-    """Semantic search (vectorSearch.get.ts:72-168).
-
-    Query embedding is computed once on the driver and enters the plan
-    as a literal array — broadcast with the task closures, no join.
-    """
+    """Semantic search (vectorSearch.get.ts:72-168). The query embedding
+    is computed once, before planning."""
     return vector_search_df(
-        tables.games(spark, sf_dir),
-        tables.game_embeddings(spark, sf_dir),
+        scoring_df(tables.games(spark, sf_dir), tables.game_embeddings(spark, sf_dir)),
         V.embed_query(query_text),
         limit,
     )
@@ -106,41 +131,24 @@ SELECT g.universeId, g.rootPlaceId, g.name, g.description, g.gameplayDescription
 FROM topk t JOIN games g ON g.universeId = t.universeId
 """)
 
-def similar_search_df(
-    games_df: DataFrame, emb_df: DataFrame, target: int, limit: int = 10
-) -> DataFrame:
-    """DataFrame-level core of item-to-item similarity."""
-    limit = max(1, min(100, limit))
-    target_vec = F.broadcast(
-        emb_df.filter(F.col("universeId") == target).select(F.col("embedding").alias("qv"))
-    )
-    scored = (
-        emb_df.filter(F.col("universeId") != target)  # J8
-        .crossJoin(target_vec)
-        .join(games_df.select("universeId", "playerCount"), "universeId", "left")
-        .select(
-            "universeId",
-            F.round(
-                V.cosine_expr(F.col("embedding"), F.col("qv"))
-                * popularity_factor(F.col("playerCount")),
-                6,
-            ).alias("similarity"),
-        )
-    )
-    topk = scored.orderBy(F.col("similarity").desc_nulls_last(), F.col("universeId")).limit(limit)
-    return _decorate_topk(topk, games_df)
-
-def similar_search(spark: SparkSession, sf_dir: str, target: int = 7, limit: int = 10) -> DataFrame:
+def similar_search_df(scoring: DataFrame, target: int, limit: int = 10) -> DataFrame:
     """Item-to-item similarity (similarSearch.get.ts:104-159): seed
     vector from the stored embedding of `target`, score everything else
-    (J8 self-exclusion), boost, top-k, decorate.
+    (J8 self-exclusion), boost, top-k, drop ids with no game row.
 
-    The single-row target side is broadcast — a degenerate
-    broadcast-nested-loop join, exactly the right physical plan for
-    one-vs-all at any scale.
-    """
+    The target side is one row, broadcast against the frame — a
+    degenerate broadcast-nested-loop join, the right physical plan for
+    one-vs-all at any scale. A missing target yields no rows."""
+    cosine = V.cosine_expr_sql("s.embedding", "q.qv", norm_a="s.norm", norm_b="q.qnorm")
+    source = (
+        "{scoring} s CROSS JOIN (SELECT embedding AS qv, norm AS qnorm FROM {scoring}"
+        " WHERE universeId = :target) q WHERE s.universeId <> :target"
+    )
+    return _top_k(scoring, cosine, source, {"target": int(target)}, limit, "/*+ BROADCAST(q) */")
+
+def similar_search(spark: SparkSession, sf_dir: str, target: int = 7, limit: int = 10) -> DataFrame:
     return similar_search_df(
-        tables.games(spark, sf_dir), tables.game_embeddings(spark, sf_dir), target, limit
+        scoring_df(tables.games(spark, sf_dir), tables.game_embeddings(spark, sf_dir)), target, limit
     )
 
 def similar_search_oracle(target: int = 7, limit: int = 10) -> str:
@@ -167,64 +175,51 @@ FROM topk t JOIN games g ON g.universeId = t.universeId
 # Text search (search.get.ts:104-202) — pure Catalyst, zero UDFs.
 # ---------------------------------------------------------------------------
 
-def _word_overlap_ratio(text_col, qwords, n_qwords: int):
-    """F6: fraction of query words contained in at least one word of the
-    text (search.get.ts:143-152) — higher-order array functions; the
-    text token array is let-bound so the split runs once per row."""
-    from ..functions.hashing import let_expr
+_WS = r"'\\s+'"  # Spark-SQL literal of the regex \s+
 
-    overlap = let_expr(
-        F.split(F.lower(text_col), r"\s+"),
-        lambda twords: F.size(
-            F.filter(qwords, lambda w: F.exists(twords, lambda t: t.contains(w)))
-        ),
+def _overlap_sql(col: str) -> str:
+    """F6: fraction of query words contained in at least one word of the
+    text (search.get.ts:143-152)."""
+    return (
+        f"CAST(size(filter(split(:q, {_WS}), w -> exists(split(lower({col}), {_WS}),"
+        f" t -> contains(t, w)))) AS DOUBLE) / :nq"
     )
-    return overlap.cast("double") / float(n_qwords)
+
+def _present(col: str) -> str:
+    return f"{col} IS NOT NULL AND trim({col}) <> ''"
+
+_TEXT_SQL = f"""
+SELECT {_OUT}, matchType, round(base_score * {POPULARITY_SQL.format(pc="playerCount")}, 2) AS score
+FROM (
+  SELECT *,
+    CASE
+      WHEN contains(lower(name), :q) THEN
+        100.0D + CASE WHEN lower(name) = :q THEN 50.0D
+                      WHEN startswith(lower(name), :q) THEN 25.0D ELSE 0.0D END
+      WHEN {_present("description")} AND contains(lower(description), :q) THEN
+        50.0D + {_overlap_sql("description")} * 20.0D
+      WHEN {_present("gameplayDescription")} AND contains(lower(gameplayDescription), :q) THEN
+        25.0D + {_overlap_sql("gameplayDescription")} * 15.0D
+    END AS base_score,
+    CASE
+      WHEN contains(lower(name), :q) THEN 'title'
+      WHEN {_present("description")} AND contains(lower(description), :q) THEN 'description'
+      WHEN {_present("gameplayDescription")} AND contains(lower(gameplayDescription), :q)
+        THEN 'gameplayDescription'
+    END AS matchType
+  FROM {{games}}
+)
+WHERE base_score IS NOT NULL
+ORDER BY score DESC NULLS LAST, universeId LIMIT :k
+"""
 
 def text_search_df(games_df: DataFrame, q: str = "blue rod", limit: int = 10) -> DataFrame:
     """F7 scoring cascade, first-match-wins priority title > description
     > gameplayDescription (search.get.ts:123-187), popularity boost,
     2-decimal rounding (F10), top-k."""
-    limit = max(1, min(100, limit))
     ql = q.lower()
-    n_qwords = max(1, len(ql.split()))
-    qwords = F.split(F.lit(ql), r"\s+")
-    g = games_df
-
-    name_l = F.lower(F.col("name"))
-    title_hit = name_l.contains(ql)
-    title_score = (
-        F.lit(100.0)
-        + F.when(name_l == ql, 50.0).when(name_l.startswith(ql), 25.0).otherwise(0.0)
-    )
-    desc_ok = F.col("description").isNotNull() & (F.trim("description") != "")
-    desc_hit = desc_ok & F.lower(F.col("description")).contains(ql)
-    desc_score = F.lit(50.0) + _word_overlap_ratio(F.col("description"), qwords, n_qwords) * 20.0
-    gp_ok = F.col("gameplayDescription").isNotNull() & (F.trim("gameplayDescription") != "")
-    gp_hit = gp_ok & F.lower(F.col("gameplayDescription")).contains(ql)
-    gp_score = F.lit(25.0) + _word_overlap_ratio(F.col("gameplayDescription"), qwords, n_qwords) * 15.0
-
-    scored = g.select(
-        *GAME_COLS,
-        F.when(title_hit, title_score)
-        .when(desc_hit, desc_score)
-        .when(gp_hit, gp_score)
-        .alias("base_score"),
-        F.when(title_hit, "title")
-        .when(desc_hit, "description")
-        .when(gp_hit, "gameplayDescription")
-        .alias("matchType"),
-    ).filter(F.col("base_score").isNotNull())
-
-    return (
-        scored.select(
-            *GAME_COLS,
-            "matchType",
-            F.round(F.col("base_score") * popularity_factor(F.col("playerCount")), 2).alias("score"),
-        )
-        .orderBy(F.col("score").desc_nulls_last(), F.col("universeId"))
-        .limit(limit)
-    )
+    args = {"q": ql, "nq": float(max(1, len(ql.split()))), "k": max(1, min(100, limit))}
+    return _sql(_TEXT_SQL, args, games=games_df)
 
 def text_search(spark: SparkSession, sf_dir: str, q: str = "blue rod", limit: int = 10) -> DataFrame:
     return text_search_df(tables.games(spark, sf_dir), q, limit)

@@ -22,8 +22,8 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 def test_vector_search_broadcasts_topk(spark, sf_dir):
-    """The decoration join must broadcast the k<=100 top-k rows against
-    the corpus-sized games table — never sort-merge."""
+    """The scoring frame's embeddings-to-games join must broadcast —
+    never sort-merge."""
     p = plan_of(search.vector_search(spark, sf_dir))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
