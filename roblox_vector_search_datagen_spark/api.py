@@ -157,7 +157,7 @@ class ApiService:
         lim = _clamp_limit(limit, default=100, lo=1, hi=1000)
         return [
             {**r, "created_at": str(r["created_at"])}
-            for r in (x.asDict() for x in self.jobs.list_jobs(lim, max(0, int(offset))).collect())
+            for r in self.jobs.list_jobs(lim, max(0, int(offset)))
         ]
 
     def get_job(self, job_id: str) -> dict:

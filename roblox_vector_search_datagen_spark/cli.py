@@ -484,9 +484,10 @@ def main(argv: list[str] | None = None) -> int:
     elif cmd == "generateEmbeddings":
         print(generate_embeddings(corpus, tf, base_url=emb, model="local"))
     elif cmd == "exportJobsDb":
-        # bridge the Spark job log to a reference-format data/jobs.db
-        # (byte-level DDL parity — the reference can open the file
-        # directly; usage: exportJobsDb [--log dir] [--db path])
+        # copy the job store under --log to a reference-format
+        # data/jobs.db (byte-level DDL parity, second-precision
+        # timestamps — the reference can open the file directly;
+        # usage: exportJobsDb [--log dir] [--db path])
         from .jobs.manager import JobManager
         from .sources import sqlite_jobs
 
@@ -496,8 +497,8 @@ def main(argv: list[str] | None = None) -> int:
         n = sqlite_jobs.write_jobs_db(JobManager(spark, log).current(), db)
         print(json.dumps({"db": db, "jobs": n}))
     elif cmd == "importJobsDb":
-        # seed the Spark job log from a reference data/jobs.db snapshot
-        # (usage: importJobsDb [--db path] [--log dir])
+        # load a reference data/jobs.db snapshot into the job store
+        # under --log (usage: importJobsDb [--db path] [--log dir])
         from .jobs.manager import JobManager
         from .sources import sqlite_jobs
 

@@ -508,23 +508,12 @@ def _encode_block(writer, coef, pred, dc_codes, ac_codes) -> int:
     return dc
 
 
-def _block_at(rows: list[list[int]], x0: int, y0: int) -> list[list[int]]:
-    """8x8 block at (x0, y0), edge-replicated past the image bounds."""
-    h = len(rows)
-    w = len(rows[0])
-    return [
-        [rows[min(y0 + y, h - 1)][min(x0 + x, w - 1)] for x in range(8)]
-        for y in range(8)
-    ]
-
-
 def _edge_padded(rows: list[list[int]], mult: int) -> "_np.ndarray":
     """The image as an int array edge-replicated up to multiples of
-    `mult` — one np.pad per image replaces the per-block min()-clamped
-    _block_at loop nest (r13 profile: ~0.3 s of the media chain).
-    np.pad(mode='edge') repeats the last row/column, exactly the
-    min(idx, dim-1) clamp _block_at applies, so every sliced block is
-    value-identical."""
+    `mult`, so the encoders slice whole 8x8 blocks out of one array.
+    np.pad(mode='edge') repeats the last row/column: a block past the
+    image bounds reads pixel (min(y, h-1), min(x, w-1)), the JPEG
+    edge-replication rule."""
     a = _np.asarray(rows, dtype=_np.int64)
     h, w = a.shape
     ph = (h + mult - 1) // mult * mult

@@ -1,50 +1,57 @@
 """Job orchestration layer (S17 / SURVEY.md §3.3): the reference's
-SQLite-backed jobManager (src/lib/jobManager.ts:46-268) re-expressed for
-Spark storage.
+SQLite-backed jobManager (src/lib/jobManager.ts:46-268) over the same
+store: one stdlib-sqlite3 table at `<log_dir>/jobs.db` with the
+reference DDL, status CHECK constraint and indexes (sources.sqlite_jobs).
+Job state is control-plane data, O(commands run), so every call is a
+driver-side SQL statement and none starts a Spark job; `current()` is the
+one Spark view, for the reference-format export and analytics.
 
-Spark tables have no in-place row UPDATE, so the state machine is an
-**append-only transition log** + a keep-last *current-state view* — the
-same pattern a streaming upsert sink uses. Every transition appends one
-row (JOB_SCHEMA plus a monotonically increasing `seq`); `current()`
-resolves the latest row per job with a window. At reference scale the
-log is tiny; at cluster scale the append is a parquet file-add (no
-read-modify-write race between jobs) and the view compacts via
-`compact()` whenever the log grows.
+Each transition is one `BEGIN IMMEDIATE` transaction: read the row, check
+the move against `_ALLOWED`, UPDATE. The write lock is taken before the
+read, so two threads or two processes over one directory cannot both
+move a job out of `running`.
+
+Timestamps are fixed-width '%Y-%m-%d %H:%M:%S.%f' UTC text: it sorts
+chronologically and keeps microseconds (exportJobsDb truncates to the
+reference's seconds).
 
 State machine (jobManager.ts:6, 245-268):
 
     pending --start--> running --+--> completed (result)
                                  +--> failed    (error)
-
-Transitions are validated; the reference enforces the same set with a
-CHECK constraint (jobManager.ts:50).
 """
 
 from __future__ import annotations
 
+import os
+import sqlite3
 import uuid
+from contextlib import closing, contextmanager
 from datetime import datetime, timezone
-from typing import Callable
+from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import JOB_SCHEMA, JOB_STATUSES
+from ..sources.sqlite_jobs import COLUMNS, JOBS_DDL, JOBS_INDEXES, decode_row, encode_row
 
-LOG_SCHEMA = T.StructType(JOB_SCHEMA.fields + [T.StructField("seq", T.LongType(), False)])
+_TS_FMT = "%Y-%m-%d %H:%M:%S.%f"
+_SELECT = f"SELECT {', '.join(COLUMNS)} FROM jobs"
+_INTO = f"INTO jobs ({', '.join(COLUMNS)}) VALUES ({', '.join('?' * len(COLUMNS))})"
+_UPDATE = f"UPDATE jobs SET {', '.join(f'{c} = ?' for c in COLUMNS)} WHERE id = ?"
 
 _ALLOWED = {
     ("pending", "running"),
     ("running", "completed"),
     ("running", "failed"),
-    # progress updates re-append the current status
+    # progress updates keep the current status
     ("running", "running"),
     ("pending", "pending"),
 }
 
+
 class JobManager:
-    """Append-only job log at `log_dir` (parquet directory).
+    """Job table at `<log_dir>/jobs.db`.
 
     `clock` is injectable so tests are deterministic; production default
     is wall-clock UTC (reference uses SQLite datetime('now'),
@@ -54,6 +61,7 @@ class JobManager:
     def __init__(self, spark: SparkSession, log_dir: str, clock: Callable[[], datetime] | None = None):
         self.spark = spark
         self.log_dir = log_dir
+        self.db_path = os.path.join(log_dir, "jobs.db")
         self._clock = clock or (lambda: datetime.now(timezone.utc).replace(tzinfo=None))
         # jobUpdated observers (jobManager.ts:188-192 emits an
         # EventEmitter notification on every job mutation; the API's
@@ -61,72 +69,46 @@ class JobManager:
         # full post-transition row dict. Observer errors are isolated —
         # a bad listener must not fail the job transition itself.
         self._observers: list[Callable[[dict], None]] = []
-        # resume the sequence from the persisted log: a manager built
-        # over an existing log (process restart, second worker) must not
-        # append transitions with seq below rows already present, or
-        # current()'s keep-last would resolve to stale state
-        self._seq = self._load_seq()
+        os.makedirs(log_dir, exist_ok=True)
+        with self._write() as con:
+            con.execute(JOBS_DDL)
+            for ix in JOBS_INDEXES:
+                con.execute(ix)
 
-    # -- log primitives ----------------------------------------------------
+    # -- store primitives --------------------------------------------------
 
-    def _load_seq(self) -> int:
-        try:
-            mx = self._log().agg(F.max("seq")).collect()[0][0]
-            return int(mx) if mx is not None else 0
-        except Exception:  # PATH_NOT_FOUND: fresh log directory
-            return 0
+    def _connect(self) -> sqlite3.Connection:
+        # autocommit mode: transactions are opened explicitly by _write
+        return sqlite3.connect(self.db_path, timeout=30, isolation_level=None)
 
-    def _append(self, row: dict) -> None:
-        self._seq += 1
-        row = {**row, "seq": self._seq}
-        self.spark.createDataFrame([row], LOG_SCHEMA).coalesce(1).write.mode("append").parquet(
-            self.log_dir
-        )
+    @contextmanager
+    def _write(self) -> Iterator[sqlite3.Connection]:
+        """One write transaction, holding the write lock from its first
+        statement to COMMIT (rolled back if the body raises)."""
+        with closing(self._connect()) as con:
+            con.execute("BEGIN IMMEDIATE")
+            try:
+                yield con
+            except BaseException:
+                con.execute("ROLLBACK")
+                raise
+            con.execute("COMMIT")
 
-    def _log(self) -> DataFrame:
-        return self.spark.read.schema(LOG_SCHEMA).parquet(self.log_dir)
+    def _select(self, where: str = "", params: tuple = ()) -> list[dict]:
+        with closing(self._connect()) as con:
+            return [decode_row(v) for v in con.execute(f"{_SELECT} {where}", params)]
 
     def current(self) -> DataFrame:
-        """Latest state per job (keep-last by seq — T2 window dedup).
-        Ties on seq (two writers that resumed from the same log high-
-        water mark) break on the most recent transition timestamp, so a
-        completed/failed row beats a concurrent progress update."""
-        latest_ts = F.coalesce("completed_at", "started_at", "created_at")
-        w = Window.partitionBy("id").orderBy(F.col("seq").desc(), latest_ts.desc_nulls_last())
-        return (
-            self._log()
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "seq")
-        )
-
-    def compact(self) -> None:
-        """Rewrite the log to one row per job. Keeps the read path O(jobs)
-        instead of O(transitions) when the log has grown."""
-        snapshot = [r.asDict() for r in self.current().collect()]
-        rows = [{**r, "seq": i + 1} for i, r in enumerate(snapshot)]
-        self._seq = len(rows)  # compacted log renumbers from 1
-        df = self.spark.createDataFrame(rows, LOG_SCHEMA)
-        df.write.mode("overwrite").parquet(self.log_dir + "_compact")
-        self.spark.read.schema(LOG_SCHEMA).parquet(self.log_dir + "_compact").write.mode(
-            "overwrite"
-        ).parquet(self.log_dir)
+        """Every job's current row as a Spark DataFrame (JOB_SCHEMA)."""
+        return self.spark.createDataFrame(self._select(), JOB_SCHEMA)
 
     def seed_from(self, jobs_df: DataFrame) -> int:
-        """Append a current-state snapshot (e.g. a reference jobs.db
-        read through sources.sqlite_jobs) into the log — each imported
-        row becomes one transition, sequenced after any existing rows
-        so current() resolves imported state only where the log has no
-        newer transition for that id. Returns rows imported."""
-        snapshot = [r.asDict() for r in jobs_df.collect()]
-        rows = []
-        for r in snapshot:
-            self._seq += 1
-            rows.append({**r, "seq": self._seq})
-        if rows:
-            self.spark.createDataFrame(rows, LOG_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.log_dir)
+        """Load a current-state snapshot (e.g. a reference jobs.db read
+        through sources.sqlite_jobs); an imported row replaces the
+        stored row with the same id. Returns rows imported."""
+        rows = [encode_row(r.asDict(), _TS_FMT) for r in jobs_df.collect()]
+        with self._write() as con:
+            con.executemany(f"INSERT OR REPLACE {_INTO}", rows)
         return len(rows)
 
     # -- reference API surface (jobManager.ts:70-243) ----------------------
@@ -146,24 +128,30 @@ class JobManager:
             "started_at": None,
             "completed_at": None,
         }
-        self._append(row)
+        with self._write() as con:
+            con.execute(f"INSERT {_INTO}", encode_row(row, _TS_FMT))
         self._notify(row)
         return job_id
 
     def get_job(self, job_id: str) -> dict | None:
-        rows = self.current().filter(F.col("id") == job_id).collect()
-        return rows[0].asDict() if rows else None
+        rows = self._select("WHERE id = ?", (job_id,))
+        return rows[0] if rows else None
 
-    def _transition(self, job_id: str, status: str, **updates) -> dict:
-        if status not in JOB_STATUSES:
+    def _transition(self, job_id: str, status: str | None, **updates) -> dict:
+        """Move `job_id` to `status` (None keeps its current status) and
+        apply `updates`, all in one write transaction."""
+        if status is not None and status not in JOB_STATUSES:
             raise ValueError(f"unknown status {status!r}")
-        cur = self.get_job(job_id)
-        if cur is None:
-            raise KeyError(job_id)
-        if (cur["status"], status) not in _ALLOWED:
-            raise ValueError(f"illegal transition {cur['status']} -> {status} for {job_id}")
-        nxt = {**cur, "status": status, **updates}
-        self._append(nxt)
+        with self._write() as con:
+            found = con.execute(f"{_SELECT} WHERE id = ?", (job_id,)).fetchone()
+            if found is None:
+                raise KeyError(job_id)
+            cur = decode_row(found)
+            status = status or cur["status"]
+            if (cur["status"], status) not in _ALLOWED:
+                raise ValueError(f"illegal transition {cur['status']} -> {status} for {job_id}")
+            nxt = {**cur, "status": status, **updates}
+            con.execute(_UPDATE, (*encode_row(nxt, _TS_FMT), job_id))
         self._notify(nxt)
         return nxt
 
@@ -171,7 +159,7 @@ class JobManager:
 
     def on_job_updated(self, callback: Callable[[dict], None]) -> Callable[[], None]:
         """Subscribe to every job mutation (creation + each transition,
-        including progress re-appends). Returns an unsubscribe thunk."""
+        including progress updates). Returns an unsubscribe thunk."""
         self._observers.append(callback)
         return lambda: self._observers.remove(callback)
 
@@ -186,12 +174,9 @@ class JobManager:
         return self._transition(job_id, "running", started_at=self._clock())
 
     def update_progress(self, job_id: str, current: int, total: int, message: str | None = None) -> dict:
-        cur = self.get_job(job_id)
-        if cur is None:
-            raise KeyError(job_id)
         return self._transition(
             job_id,
-            cur["status"],
+            None,
             progress_current=current,
             progress_total=total,
             progress_message=message,
@@ -215,35 +200,22 @@ class JobManager:
 
     # -- queries (jobManager.ts:93-102, 218-243) ---------------------------
 
-    def list_jobs(self, limit: int = 100, offset: int = 0) -> DataFrame:
+    def list_jobs(self, limit: int = 100, offset: int = 0) -> list[dict]:
         """Newest-first page; limit clamped to the reference's 1..1000
-        (jobsList.get.ts:95-100). Offset via row_number window — at
-        driver-metadata scale the single-partition window is fine."""
+        (jobsList.get.ts:95-100)."""
         limit = max(1, min(1000, limit))
-        w = Window.orderBy(F.col("created_at").desc(), F.col("id").desc())
-        return (
-            self.current()
-            .withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") > offset) & (F.col("_rn") <= offset + limit))
-            .drop("_rn")
-        )
+        return self._select("ORDER BY created_at DESC, id DESC LIMIT ? OFFSET ?", (limit, offset))
 
-    def counts_by_status(self) -> DataFrame:
-        return self.current().groupBy("status").count()
+    def counts_by_status(self) -> list[dict]:
+        with closing(self._connect()) as con:
+            rows = con.execute("SELECT status, COUNT(*) FROM jobs GROUP BY status ORDER BY status")
+            return [{"status": s, "count": n} for s, n in rows]
 
     def delete_old_jobs(self, cutoff: datetime) -> int:
         """deleteOldJobs (jobManager.ts:209-216): drop completed/failed
-        jobs created before the cutoff; rewrites the compacted log."""
-        keep = self.current().filter(
-            ~(F.col("status").isin("completed", "failed") & (F.col("created_at") < F.lit(cutoff)))
-        )
-        rows = [r.asDict() for r in keep.collect()]
-        removed = self.current().count() - len(rows)
-        rows = [{**r, "seq": i + 1} for i, r in enumerate(rows)]
-        self._seq = len(rows)
-        df = self.spark.createDataFrame(rows, LOG_SCHEMA)
-        df.write.mode("overwrite").parquet(self.log_dir + "_compact")
-        self.spark.read.schema(LOG_SCHEMA).parquet(self.log_dir + "_compact").write.mode(
-            "overwrite"
-        ).parquet(self.log_dir)
-        return removed
+        jobs created before the cutoff. Returns rows deleted."""
+        with self._write() as con:
+            return con.execute(
+                "DELETE FROM jobs WHERE status IN ('completed', 'failed') AND created_at < ?",
+                (cutoff.strftime(_TS_FMT),),
+            ).rowcount

@@ -1192,8 +1192,12 @@ def token_shards_store(
             # sequential reads for the loader, long run-lengths for the
             # encoder. At 100 TB the repartition width would be a
             # multiple of the shard count; 1:1 is right at fixture scale.
+            # The sort leads with `shard`: a partitioned write requires
+            # its rows ordered by the partition column, and a sort on
+            # (doc_id, pos) alone does not satisfy that, so the planner
+            # adds a Sort on `shard` and drops ours as redundant.
             .repartition(shards, "shard")
-            .sortWithinPartitions("doc_id", "pos")
+            .sortWithinPartitions("shard", "doc_id", "pos")
             .write.mode("overwrite")
             .partitionBy("shard")
             .parquet(path)

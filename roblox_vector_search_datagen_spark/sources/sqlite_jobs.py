@@ -7,10 +7,10 @@ Scale rationale: jobs metadata is control-plane state — O(commands
 run), not O(data). A driver-side read/write is therefore the correct
 execution strategy even on a 1000-executor cluster; distributing a
 few-hundred-row control table through executors would only add
-overhead. The DATA-plane jobs analytics (jobs_by_status, jobs_page,
-old_jobs) stay on the Spark log/view in jobs.manager — this module is
-the interchange bridge so a reference deployment can hand its jobs.db
-to this engine (or take one back) without a conversion step.
+overhead. This module is the interchange bridge so a reference
+deployment can hand its jobs.db to this engine (or take one back)
+without a conversion step; jobs.manager keeps its own store in the
+same DDL.
 
 Timestamps: the reference stores DATETIME strings via SQLite
 datetime('now') — 'YYYY-MM-DD HH:MM:SS' in UTC. Spark-side the column
@@ -51,7 +51,7 @@ JOBS_INDEXES = (
     "CREATE INDEX IF NOT EXISTS idx_jobs_command ON jobs(command)",
 )
 
-_COLS = [f.name for f in JOB_SCHEMA.fields]
+COLUMNS = [f.name for f in JOB_SCHEMA.fields]
 _TS_COLS = ("created_at", "started_at", "completed_at")
 _TS_FMT = "%Y-%m-%d %H:%M:%S"
 
@@ -59,13 +59,27 @@ _TS_FMT = "%Y-%m-%d %H:%M:%S"
 def _parse_ts(v: str | None) -> datetime | None:
     if v is None:
         return None
-    # tolerate fractional seconds if another writer added them
+    # jobs.manager's store keeps fractional seconds; the reference does not
     fmt = _TS_FMT + (".%f" if "." in v else "")
     return datetime.strptime(v, fmt)
 
 
-def _format_ts(v: datetime | None) -> str | None:
-    return None if v is None else v.strftime(_TS_FMT)
+def decode_row(values: tuple) -> dict:
+    """A jobs-table row (COLUMNS order) as a JOB_SCHEMA dict with
+    datetime timestamps."""
+    rec = dict(zip(COLUMNS, values))
+    for c in _TS_COLS:
+        rec[c] = _parse_ts(rec[c])
+    return rec
+
+
+def encode_row(rec: dict, ts_fmt: str = _TS_FMT) -> tuple:
+    """A JOB_SCHEMA dict as jobs-table values in COLUMNS order, with
+    timestamps as `ts_fmt` text (default: the reference's seconds)."""
+    return tuple(
+        (None if rec[c] is None else rec[c].strftime(ts_fmt)) if c in _TS_COLS else rec[c]
+        for c in COLUMNS
+    )
 
 
 def read_jobs_db(spark: SparkSession, db_path: str) -> DataFrame:
@@ -74,17 +88,13 @@ def read_jobs_db(spark: SparkSession, db_path: str) -> DataFrame:
     carried into the state machine."""
     con = sqlite3.connect(db_path)
     try:
-        rows = con.execute(f"SELECT {', '.join(_COLS)} FROM jobs").fetchall()
+        rows = con.execute(f"SELECT {', '.join(COLUMNS)} FROM jobs").fetchall()
     finally:
         con.close()
-    recs = []
-    for row in rows:
-        rec = dict(zip(_COLS, row))
+    recs = [decode_row(row) for row in rows]
+    for rec in recs:
         if rec["status"] not in JOB_STATUSES:
             raise ValueError(f"jobs.db row {rec['id']!r} has unknown status {rec['status']!r}")
-        for c in _TS_COLS:
-            rec[c] = _parse_ts(rec[c])
-        recs.append(rec)
     return spark.createDataFrame(recs, JOB_SCHEMA)
 
 
@@ -94,7 +104,7 @@ def write_jobs_db(df: DataFrame, db_path: str) -> int:
     per job, full-replace semantics (the reference treats jobs.db as
     the single source of truth, so a partial merge would be wrong).
     Returns the row count written."""
-    rows = [r.asDict() for r in df.select(*_COLS).collect()]
+    rows = [encode_row(r.asDict()) for r in df.select(*COLUMNS).collect()]
     con = sqlite3.connect(db_path)
     try:
         con.execute(JOBS_DDL)
@@ -102,14 +112,8 @@ def write_jobs_db(df: DataFrame, db_path: str) -> int:
             con.execute(ix)
         con.execute("DELETE FROM jobs")
         con.executemany(
-            f"INSERT INTO jobs ({', '.join(_COLS)}) VALUES ({', '.join('?' * len(_COLS))})",
-            [
-                tuple(
-                    _format_ts(rec[c]) if c in _TS_COLS else rec[c]
-                    for c in _COLS
-                )
-                for rec in rows
-            ],
+            f"INSERT INTO jobs ({', '.join(COLUMNS)}) VALUES ({', '.join('?' * len(COLUMNS))})",
+            rows,
         )
         con.commit()
     finally:

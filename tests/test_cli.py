@@ -336,10 +336,9 @@ def test_query_vector_index_command(spark, sf_dir, tmp_path, monkeypatch, capsys
     assert len(rows) == 5
     assert rows[0]["rank"] == 1 and "cosine" in rows[0]
 
-@pytest.mark.slow
 def test_jobs_db_export_import_roundtrip(spark, tmp_path, monkeypatch, capsys):
-    """exportJobsDb writes a reference-DDL jobs.db from the Spark log;
-    importJobsDb seeds a fresh log from it; states survive the trip."""
+    """exportJobsDb writes a reference-DDL jobs.db from the job store;
+    importJobsDb seeds a fresh store from it; states survive the trip."""
     from roblox_vector_search_datagen_spark.jobs.manager import JobManager
 
     monkeypatch.setenv("RVSD_DATA_DIR", str(tmp_path / "data"))

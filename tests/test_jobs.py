@@ -1,13 +1,20 @@
-"""Job state machine (S17 / §3.3): lifecycle transitions, keep-last
-current view, paging, cleanup — deterministic via an injected clock."""
+"""Job state machine (S17 / §3.3): lifecycle transitions, paging,
+cleanup, serialized concurrent transitions, and the SQLite store's cost
+(no Spark job, one file) — deterministic via an injected clock."""
 
 from __future__ import annotations
 
+import os
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta
 
 import pytest
 
 from roblox_vector_search_datagen_spark.jobs.manager import JobManager
+
+from .test_api import _jobs
 
 class FakeClock:
     def __init__(self):
@@ -21,7 +28,6 @@ class FakeClock:
 def jm(spark, tmp_path):
     return JobManager(spark, str(tmp_path / "joblog"), clock=FakeClock())
 
-@pytest.mark.slow
 def test_lifecycle_completed(jm):
     jid = jm.create_job("generateEmbeddings")
     assert jm.get_job(jid)["status"] == "pending"
@@ -36,7 +42,6 @@ def test_lifecycle_completed(jm):
     assert job["status"] == "completed" and job["result"] == "ok"
     assert job["completed_at"] > job["started_at"] > job["created_at"]
 
-@pytest.mark.slow
 def test_run_job_failure_path(jm):
     jid = jm.create_job("gatherGames")
 
@@ -49,7 +54,6 @@ def test_run_job_failure_path(jm):
     with pytest.raises(ValueError):
         jm.start_job(jid)
 
-@pytest.mark.slow
 def test_illegal_transitions(jm):
     jid = jm.create_job("x")
     with pytest.raises(ValueError):
@@ -57,22 +61,17 @@ def test_illegal_transitions(jm):
     with pytest.raises(KeyError):
         jm.start_job("nope")
 
-@pytest.mark.slow
 def test_listing_counts_and_cleanup(jm):
     ids = [jm.create_job(f"cmd{i}") for i in range(5)]
     jm.run_job(ids[0], lambda: "r0")
     jm.run_job(ids[1], lambda: (_ for _ in ()).throw(RuntimeError("e")))
     # newest-first page over CURRENT state only (one row per job)
-    page = jm.list_jobs(limit=3).collect()
+    page = jm.list_jobs(limit=3)
     assert len(page) == 3
     created = [r["created_at"] for r in page]
     assert created == sorted(created, reverse=True)
-    counts = {r["status"]: r["count"] for r in jm.counts_by_status().collect()}
+    counts = {r["status"]: r["count"] for r in jm.counts_by_status()}
     assert counts == {"pending": 3, "completed": 1, "failed": 1}
-    # compaction preserves the current view
-    before = sorted(map(tuple, jm.current().collect()))
-    jm.compact()
-    assert sorted(map(tuple, jm.current().collect())) == before
     # cleanup drops only terminal jobs older than cutoff
     removed = jm.delete_old_jobs(cutoff=datetime(2040, 1, 1))
     assert removed == 2
@@ -82,7 +81,6 @@ def test_listing_counts_and_cleanup(jm):
 # SQLite interchange (byte-level parity with the reference's data/jobs.db)
 # ---------------------------------------------------------------------------
 
-@pytest.mark.slow
 def test_sqlite_roundtrip_preserves_current_state(jm, spark, tmp_path):
     import sqlite3
 
@@ -137,7 +135,6 @@ def test_sqlite_read_rejects_unknown_status(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown status"):
         sqlite_jobs.read_jobs_db(spark, db)
 
-@pytest.mark.slow
 def test_job_updated_events(jm):
     """jobUpdated observer hook (jobManager.ts:188-192): every mutation
     notifies subscribers with the post-transition row; unsubscribe
@@ -162,3 +159,68 @@ def test_job_updated_events(jm):
     off()
     jid2 = jm.create_job("gatherGames")
     assert all(i != jid2 for i, _ in seen)
+
+def test_concurrent_terminal_transitions_serialize(jm, spark):
+    """Eight threads, over two managers of one store, race to finish one
+    running job: exactly one wins, the rest see a terminal job and get
+    ValueError, and one terminal row remains. A manager opened later
+    over the same directory (restart, second worker) sees that row and
+    rejects an illegal transition."""
+    other = JobManager(spark, jm.log_dir)
+    jid = jm.create_job("gatherGames")
+    jm.start_job(jid)
+    barrier = threading.Barrier(8)
+
+    def race(i):
+        mgr = (jm, other)[i % 2]
+        barrier.wait(timeout=30)
+        try:
+            if i < 4:
+                mgr.complete_job(jid, f"r{i}")
+            else:
+                mgr.fail_job(jid, f"e{i}")
+        except ValueError:
+            return False
+        return True
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            won = list(pool.map(race, range(8), timeout=60))
+    finally:
+        sys.setswitchinterval(interval)
+    assert won.count(True) == 1
+    rows = [r for r in jm.list_jobs() if r["id"] == jid]
+    assert len(rows) == 1 and rows[0]["status"] in ("completed", "failed")
+    i = won.index(True)
+    assert (rows[0]["result"], rows[0]["error"]) == ((f"r{i}", None) if i < 4 else (None, f"e{i}"))
+
+    restarted = JobManager(spark, jm.log_dir)
+    assert restarted.get_job(jid) == rows[0]
+    with pytest.raises(ValueError):
+        restarted.start_job(jid)
+    assert restarted.get_job(jid) == rows[0]
+
+def test_bookkeeping_starts_no_spark_job(jm, spark):
+    """Every job call is a driver-side SQLite statement: none starts a
+    Spark job, and the store stays one file however many transitions
+    it takes."""
+    jid = jm.create_job("warmup")
+    calls = {
+        "create_job": lambda: jm.create_job("gatherGames"),
+        "start_job": lambda: jm.start_job(jid),
+        "update_progress": lambda: jm.update_progress(jid, 1, 2, "half"),
+        "complete_job": lambda: jm.complete_job(jid, "ok"),
+        "get_job": lambda: jm.get_job(jid),
+        "list_jobs": jm.list_jobs,
+        "counts_by_status": jm.counts_by_status,
+    }
+    assert {name: _jobs(spark, fn)[0] for name, fn in calls.items()} == dict.fromkeys(calls, 0)
+
+    busy = jm.create_job("generateEmbeddings")
+    jm.start_job(busy)
+    for step in range(48):
+        jm.update_progress(busy, step, 48)
+    jm.complete_job(busy, "done")  # 50 transitions on one job
+    assert os.listdir(jm.log_dir) == ["jobs.db"]
