@@ -68,6 +68,11 @@ def _validated(rows: list[dict], columns: tuple[str, ...]) -> list[dict]:
 def _rows(df: DataFrame) -> list[dict]:
     return [r.asDict(recursive=True) for r in df.collect()]
 
+def _job_json(job: dict) -> dict:
+    """A job row with every non-null `*_at` timestamp as its `str()`,
+    so the HTTP layer's `json.dumps` can encode it."""
+    return {k: (str(v) if k.endswith("_at") and v is not None else v) for k, v in job.items()}
+
 SEARCH_COLUMNS = (
     "universeId",
     "rootPlaceId",
@@ -155,17 +160,14 @@ class ApiService:
         """GET /jobs (jobsList.get.ts:92-107): newest first, limit
         clamped 1..1000."""
         lim = _clamp_limit(limit, default=100, lo=1, hi=1000)
-        return [
-            {**r, "created_at": str(r["created_at"])}
-            for r in self.jobs.list_jobs(lim, max(0, int(offset)))
-        ]
+        return [_job_json(r) for r in self.jobs.list_jobs(lim, max(0, int(offset)))]
 
     def get_job(self, job_id: str) -> dict:
         """GET /jobs/:id (job.get.ts:73-83)."""
         job = self.jobs.get_job(job_id)
         if job is None:
             raise ApiError(404, f"job {job_id} not found")
-        return {k: (str(v) if k.endswith("_at") and v is not None else v) for k, v in job.items()}
+        return _job_json(job)
 
     # -- async pipeline POSTs (§3.3) ---------------------------------------
 

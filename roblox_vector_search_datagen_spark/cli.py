@@ -413,11 +413,6 @@ COMMANDS = (
     "findNearDuplicateImages",
     "audioStats",
     "findDuplicateAudio",
-    "videoStats",
-    "findDuplicateVideos",
-    "findNearDuplicateVideos",
-    "fingerprintCatalog",
-    "videoCaptions",
 )
 
 def _int_flag(args: list[str], flag: str, default: int) -> int | None:
@@ -878,89 +873,6 @@ def main(argv: list[str] | None = None) -> int:
             print("usage: findDuplicateAudio [sf_dir] [--cap n]", file=sys.stderr)
             return 2
         show(mm_ops.audio_dup_pairs(spark, sf_dir, bucket_cap=cap))
-    elif cmd == "videoStats":
-        # per-clip profile over REAL decoded y4m frames, or the
-        # scene-cut segmentation / per-frame perceptual hashes /
-        # per-frame motion intensity
-        # (usage: videoStats [sf_dir] [--cuts | --hashes | --motion])
-        from .operators import multimodal as mm_ops
-
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
-        if "--cuts" in args:
-            show(mm_ops.video_scene_cuts(spark, sf_dir))
-        elif "--hashes" in args:
-            show(mm_ops.video_frame_phash(spark, sf_dir))
-        elif "--motion" in args:
-            show(mm_ops.video_motion_profile(spark, sf_dir))
-        else:
-            show(mm_ops.video_features(spark, sf_dir))
-    elif cmd == "findDuplicateVideos":
-        # resolution/colorspace-invariant video duplicate pairs by
-        # frame-hash-sequence fingerprint collision
-        # (usage: findDuplicateVideos [sf_dir] [--cap n])
-        from .operators import multimodal as mm_ops
-
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
-        cap = _int_flag(args, "--cap", mm_ops.PHASH_BUCKET_CAP)
-        if cap is None:
-            print("usage: findDuplicateVideos [sf_dir] [--cap n]", file=sys.stderr)
-            return 2
-        show(mm_ops.video_dup_pairs(spark, sf_dir, bucket_cap=cap))
-    elif cmd == "findNearDuplicateVideos":
-        # max-aligned-frame-Hamming<=t clip near-dups — the logo
-        # overlays/brightness edits identical-fingerprint dedup misses
-        # (usage: findNearDuplicateVideos [sf_dir] [--max-hamming t]
-        # [--cap n])
-        from .operators import multimodal as mm_ops
-
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
-        usage = "usage: findNearDuplicateVideos [sf_dir] [--max-hamming t] [--cap n]"
-        t = _int_flag(args, "--max-hamming", mm_ops.PHASH_NEAR_MAX_HAMMING)
-        cap = _int_flag(args, "--cap", mm_ops.PHASH_BUCKET_CAP)
-        if t is None or cap is None:
-            print(usage, file=sys.stderr)
-            return 2
-        if not 0 <= t <= mm_ops.PHASH_NEAR_MAX_HAMMING:
-            # past the pigeonhole bound the frame-0 banded join is no
-            # longer complete — refuse, don't under-report
-            print(
-                f"--max-hamming must be 0..{mm_ops.PHASH_NEAR_MAX_HAMMING} "
-                f"(4x16 banding is only complete to {mm_ops.PHASH_NEAR_MAX_HAMMING})",
-                file=sys.stderr,
-            )
-            return 2
-        show(
-            mm_ops.video_near_dup_pairs(
-                spark, sf_dir, max_hamming=t, band_cap=cap
-            )
-        )
-    elif cmd == "videoCaptions":
-        # parsed caption cues, or the (scene, caption, keyframe-hash)
-        # training pairs (usage: videoCaptions [sf_dir] [--pairs])
-        from .operators import multimodal as mm_ops
-
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
-        if "--pairs" in args:
-            show(mm_ops.video_caption_pairs(spark, sf_dir))
-        else:
-            show(mm_ops.video_captions(spark, sf_dir))
-    elif cmd == "fingerprintCatalog":
-        # the cross-modality perceptual-identity catalog
-        # (usage: fingerprintCatalog [sf_dir])
-        from .operators import multimodal as mm_ops
-
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
-        show(mm_ops.media_fingerprint_catalog(spark, sf_dir))
     elif cmd == "commitIngest":
         # the continuous-ingestion commit step as an operational
         # command: clear every sf_dir-keyed memo and persisted cache,

@@ -1,20 +1,23 @@
-"""Multimodal columns: image/audio/video as opaque binary columns with
-typed metadata, processed by Arrow-batched mapInPandas stages.
+"""Multimodal columns: the `media` table carries image/audio/video
+rows as opaque binary columns with typed metadata; decode and analysis
+run in Arrow-batched mapInPandas stages.
 
 The decode stage is REAL for PNG and baseline-JPEG images: PIL when
 installed, else the vendored pure-stdlib readers (`functions/png.py`,
 `functions/jpeg.py`) — all yielding the same ITU-R 601-2 luminance —
-and only blobs no backend can decode (audio/video, non-image bytes
-such as the synthetic fixtures, progressive JPEG) take the
-deterministic md5 stub. The Spark-side contract (schema, batch shape,
-partitioning, UDF signature) is identical either way, and swapping in
-ffmpeg for the remaining modalities changes one function, not the
-plan.
+and the synthetic audio corpus decodes through the vendored RIFF/WAVE
+PCM16 codec (`functions/wav.py`). Video rows are metadata only:
+`frame_sample_plan`, `media_inventory` and `media_dedup` read their
+duration and bytes, and nothing decodes them. Blobs no backend can
+decode (non-image bytes such as the synthetic fixtures, progressive
+JPEG) take the deterministic md5 stub; the Spark-side contract
+(schema, batch shape, partitioning, UDF signature) is identical
+either way.
 
 Reference parity anchor: the reference's only binary pipeline is PNG
 icon/thumbnail download + base64 into an LLM prompt
 (downloadImages.ts:42-44, generateGameplayDescriptions.ts:67-97); the
-media table mirrors that shape generalized to three modalities.
+media table mirrors that shape generalized to three media types.
 """
 
 from __future__ import annotations
@@ -2016,9 +2019,10 @@ def audio_ingest_dedup(
     arriving recording is dropped when its sign-sequence fingerprint
     already appears in the known corpus, so the same waveform
     re-recorded at a different gain never lands (a byte-level digest
-    admits those — amplitude changes every PCM byte). Completes the
-    front-door family across all three modalities (text, image, video
-    front doors already exist). Roles on the square-wave lattice,
+    admits those — amplitude changes every PCM byte). The audio member
+    of the front-door family, beside the text (`streaming/ingest.
+    ingest_dedup`) and image (`media_ingest_dedup`) doors. Roles on the
+    square-wave lattice,
     whose collision classes are the k%20 cells ((n_samples, half) has
     period lcm(5,4)); the classes are parity-pure (20 is even), so
     roles split WITHIN each parity: arriving = k%40 >= 20; known =
@@ -2062,1603 +2066,6 @@ known AS (
 )
 SELECT doc_id, fingerprint FROM ak
 WHERE k % 40 >= 20 AND fingerprint NOT IN (SELECT fingerprint FROM known)
-"""
-
-
-# ---------------------------------------------------------------------------
-# VIDEO: the third modality goes REAL (r12) — vendored YUV4MPEG2 codec
-# (functions/y4m.py: raw planar frames, losslessly decodable), one
-# Arrow decode pass emitting per-frame 8x8 luma cells, and every
-# analysis query (features, per-frame perceptual hash, scene-cut
-# segmentation, duplicate pairs) pure Catalyst over that one table —
-# the decode-once-analyze-in-JVM split the audio family established.
-# Reference parity anchor: the reference has no video pipeline at all
-# (its only binary path is PNG icon download, downloadImages.ts:42-44);
-# this family is part of the beyond-reference multimodal mandate.
-
-VIDEO_FPS_NUM = 25  # the corpus frame rate (PAL-style 25:1)
-VIDEO_FPS_DEN = 1
-VIDEO_DUP_GROUP = 4  # consecutive k sharing one logical video
-VIDEO_CUT_THRESHOLD = 4.0  # mean |Y diff| above which a frame is a cut
-# xxHash public prime constants (decorrelated from _PHASH_MIX so the
-# video lattice never aliases the image-dup lattice)
-_VIDEO_MIX_CUTS = 2246822519  # -> per-group scene-cut flag word
-_VIDEO_MIX_SEG = 3266489917  # -> per-segment pattern step
-_I63 = 9223372036854775808  # 2^63: the shared signed-BIGINT-safe modulus
-
-
-def synthetic_video_media(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """Generative video corpus on the residue-(3*modulo/8) docs
-    (disjoint from the four image corpora and the audio corpus): doc
-    k = doc_id/modulo carries a YUV4MPEG2 stream of n = (jdx%5+2)
-    frames at 25 fps, jdx = k/4 — every VIDEO_DUP_GROUP consecutive k
-    share one logical video (same frames, same cuts) while k picks the
-    dims ((k%4+1)*16 x ((k/2)%2+1)*16) and the colorspace (Cmono for
-    even k, C420jpeg with neutral chroma for odd) — so the same clip
-    appears at different resolutions AND different pixel layouts, the
-    duplicate classes byte-level dedup is blind to by construction.
-
-    Frame f's luma is an 8x8 cell grid scaled to the pixel dims (dims
-    are multiples of 16, so every cell is an exact integer rectangle):
-    the group's cut-flag word g = (jdx*2246822519 + 1) mod 2^63 marks
-    frame f a scene cut iff bit f of g is set; the frame's SEGMENT s
-    is the running cut count, and its cell pattern is the low-32-bit
-    expansion of p = (jdx*2654435761 + s*3266489917 + 1) mod 2^63
-    (even cell i takes bit i/2 of p, odd its complement — exactly half
-    the cells are 255, and consecutive segments ALWAYS differ: the
-    pattern step is nonzero mod 2^32, so the low 32 bits move on every
-    segment and a cut's mean |Y diff| is >= 255*2/64, clear of the
-    4.0 threshold by construction). Every feature, per-frame hash, cut
-    flag, and duplicate pair is therefore pure doc_id arithmetic —
-    the `synthetic_dup_media` evidence pattern extended to the third
-    modality, with the decode LOSSLESS (raw planar y4m), so no
-    rounding-margin analysis is needed at all. `docs` admits a
-    streaming doc_id source (the generator is a stateless
-    mapInPandas)."""
-    import pandas as pd
-
-    d = _spread_gen_input(
-        spark,
-        sf_dir,
-        (tables.load_table(spark, sf_dir, "documents") if docs is None else docs)
-        .filter(F.col("doc_id") % modulo == 3 * modulo // 8)
-        .select("doc_id"),
-        batch=docs is None,
-    )
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import y4m as _y4mmod
-
-        for pdf in batches:
-            metas, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = doc_id // modulo
-                w = (k % 4 + 1) * 16
-                h = ((k // 2) % 2 + 1) * 16
-                cs = "mono" if k % 2 == 0 else "420jpeg"
-                frames = [
-                    [
-                        [
-                            255 * bits[(r * 8 // h) * 8 + (c * 8 // w)]
-                            for c in range(w)
-                        ]
-                        for r in range(h)
-                    ]
-                    for bits in _video_expected_frames(k // VIDEO_DUP_GROUP)
-                ]
-                blobs.append(
-                    _y4mmod.encode_y4m(frames, VIDEO_FPS_NUM, VIDEO_FPS_DEN, cs)
-                )
-                metas.append(
-                    {
-                        "width": w,
-                        "height": h,
-                        "duration_ms": len(frames)
-                        * 1000
-                        * VIDEO_FPS_DEN
-                        // VIDEO_FPS_NUM,
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": ["video"] * len(blobs),
-                    "content": blobs,
-                    "meta": metas,
-                }
-            )
-
-    return d.mapInPandas(gen, MEDIA_SCHEMA)
-
-
-def _video_pattern_bits(jdx: int, segment: int) -> list[int]:
-    """The 64-cell pattern a (logical video, scene segment) encodes:
-    even cell i takes bit i/2 of p = (jdx*MIXP + s*MIXS + 1) mod 2^63,
-    odd cell its complement — exact half/half balance, and reduced mod
-    2^63 (not 2^64) for the same signed-BIGINT-overflow reason as
-    `_phash_expected_bits`."""
-    p = (jdx * _PHASH_MIX + segment * _VIDEO_MIX_SEG + 1) % _I63
-    out = []
-    for idx in range(64):
-        base = (p >> (idx // 2)) & 1
-        out.append(base if idx % 2 == 0 else 1 - base)
-    return out
-
-
-def _video_expected_frames(jdx: int) -> list[list[int]]:
-    """The frame-pattern sequence of logical video jdx: n = jdx%5+2
-    frames, frame f opens a new scene iff bit f of the cut word g is
-    set (f >= 1), and each frame renders its segment's pattern."""
-    g = (jdx * _VIDEO_MIX_CUTS + 1) % _I63
-    n = jdx % 5 + 2
-    seg, out = 0, []
-    for f in range(n):
-        if f and (g >> f) & 1:
-            seg += 1
-        out.append(_video_pattern_bits(jdx, seg))
-    return out
-
-
-def _frame_cells(fr_mat: list[list[int]]) -> list[int]:
-    """One frame's 64-cell analysis grid: the 8x8 box resample of its
-    luma, flattened row-major — THE cell derivation every video decode
-    body shares (per-frame table, clip fingerprints, ledger), so a
-    resample change can never desynchronize the family's consumers."""
-    from ..functions import resample as _resample
-
-    return [v for row in _resample.resample_gray_box(fr_mat, 8, 8) for v in row]
-
-
-def _clip_cells(content: bytes) -> tuple[str, list[list[int]]]:
-    """Decode one blob to (colorspace, per-frame cell grids); a blob
-    the strict codec refuses degrades to the ('', []) stub — the
-    shared decode core of the clip-level stages."""
-    from ..functions import y4m as _y4mmod
-
-    try:
-        _w, _h, _fn, _fd, cs, frames = _y4mmod.decode_y4m(content)
-    except ValueError:
-        return "", []
-    return cs, [_frame_cells(fr) for fr in frames]
-
-
-VIDEO_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("colorspace", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("fps_num", T.IntegerType(), False),
-        T.StructField("fps_den", T.IntegerType(), False),
-        T.StructField("frame", T.IntegerType(), False),
-        T.StructField("y_sum", T.LongType(), False),
-        T.StructField("cells", T.ArrayType(T.IntegerType()), False),
-        T.StructField("arm", T.StringType(), False),
-    ]
-)
-
-
-def video_frames(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    media_df: DataFrame | None = None,
-) -> DataFrame:
-    """The video decode boundary: one Arrow-batched mapInPandas pass
-    through the vendored y4m reader, emitting one row per FRAME with
-    its luma byte total and its 8x8 box-resampled cell grid — the LAST
-    Python stage in the video family; features, per-frame perceptual
-    hash, scene-cut segmentation, and duplicate pairs are all Catalyst
-    over these columns (the decode-once-analyze-in-JVM split the audio
-    family established). Undecodable blobs take arm='stub' with a
-    single empty frame row (pytest negative arm; the strict codec
-    refuses rather than mis-decodes). Persisted at default args for
-    its four registry consumers.
-
-    Scale shape: column-pruned documents scan -> stateless synthesize
-    -> stateless decode fanning one row per frame; per-row
-    partition-local work, zero shuffles, zero driver collection."""
-    import pandas as pd
-
-    from ..functions.caching import persist_if
-
-    invariant = media_df is None and modulo == CONTRACT_MODULO
-    corpus = (
-        synthetic_video_media(spark, sf_dir, modulo) if media_df is None else media_df
-    )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import y4m as _y4mmod
-
-        cols = (
-            "doc_id", "colorspace", "width", "height",
-            "fps_num", "fps_den", "frame", "y_sum", "cells", "arm",
-        )
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    w, h, fn, fd, cs, frames = _y4mmod.decode_y4m(bytes(content))
-                    rows = [
-                        (
-                            cs, w, h, fn, fd, f,
-                            sum(map(sum, fr)),
-                            _frame_cells(fr),
-                            "real",
-                        )
-                        for f, fr in enumerate(frames)
-                    ]
-                except ValueError:
-                    rows = [("", 0, 0, 0, 0, 0, 0, [], "stub")]
-                for r in rows:
-                    out["doc_id"].append(doc_id)
-                    for c, v in zip(cols[1:], r):
-                        out[c].append(v)
-            yield pd.DataFrame(out)
-
-    return persist_if(corpus.mapInPandas(run, VIDEO_FRAMES_SCHEMA), invariant)
-
-
-def _video_sql_ctes(modulo: int) -> str:
-    """The shared per-frame derivation every video oracle embeds — ONE
-    definition of the lattice (dims/colorspace/frame count), the cut
-    word, the running segment, and the segment pattern word, so a
-    formula change can never make the gate queries disagree. All mix
-    products run in HUGEINT and reduce mod 2^63 exactly like the
-    Python side (`_video_pattern_bits`)."""
-    return f"""v AS (
-  SELECT doc_id, k, jdx,
-         CAST(jdx % 5 + 2 AS INT) AS n,
-         CAST((k % 4 + 1) * 16 AS INT) AS width,
-         CAST(((k // 2) % 2 + 1) * 16 AS INT) AS height,
-         CASE WHEN k % 2 = 0 THEN 'mono' ELSE '420jpeg' END AS colorspace,
-         CAST((CAST(jdx AS HUGEINT) * {_VIDEO_MIX_CUTS} + 1) % {_I63} AS BIGINT) AS g
-  FROM (
-    SELECT doc_id, doc_id // {modulo} AS k,
-           (doc_id // {modulo}) // {VIDEO_DUP_GROUP} AS jdx
-    FROM documents WHERE doc_id % {modulo} = {3 * modulo // 8}
-  )
-),
-seg AS (
-  SELECT v.*, CAST(f AS INT) AS frame,
-         CASE WHEN f = 0 THEN 0 ELSE CAST((g >> CAST(f AS INT)) & 1 AS INT) END AS cutbit,
-         CAST(SUM(CASE WHEN f = 0 THEN 0 ELSE (g >> CAST(f AS INT)) & 1 END)
-              OVER (PARTITION BY doc_id ORDER BY f) AS INT) AS segment
-  FROM v, unnest(range(0, n)) AS t(f)
-),
-pw AS (
-  SELECT seg.*,
-         CAST((CAST(jdx AS HUGEINT) * {_PHASH_MIX}
-               + CAST(segment AS HUGEINT) * {_VIDEO_MIX_SEG} + 1) % {_I63} AS BIGINT) AS p
-  FROM seg
-),
-fbits AS (
-  SELECT doc_id, frame, i,
-         CASE WHEN i % 2 = 0 THEN (p >> CAST(i // 2 AS INT)) & 1
-              ELSE 1 - ((p >> CAST(i // 2 AS INT)) & 1) END AS b
-  FROM pw, range(64) t(i)
-),
-fphash AS (
-  SELECT doc_id, frame, string_agg(CAST(b AS VARCHAR), '' ORDER BY i) AS phash
-  FROM fbits GROUP BY doc_id, frame
-)"""
-
-
-def video_features(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-) -> DataFrame:
-    """Per-clip profile over REAL decoded frames: colorspace, dims,
-    frame rate, frame count, duration, and the total luma mass — the
-    triage columns a video-corpus build keys its filtering on (black/
-    blank detection via y_total, duration buckets, resolution tiers).
-    One whole-stage-codegen aggregation over the persisted decode pass
-    — no second Python stage — and on the constructed corpus every
-    value is doc_id arithmetic, so DuckDB value-pins the decode (plane
-    sizes, frame alignment, every luma byte) per clip. The duration
-    division is guarded: the stub arm carries fps_num=0 and ANSI `div`
-    would throw DIVIDE_BY_ZERO, crashing the job the stub arm exists
-    to survive (the r9/r12 ANSI-division trap)."""
-    fr = video_frames(spark, sf_dir, modulo)
-    return (
-        fr.groupBy("doc_id", "colorspace", "width", "height", "fps_num", "fps_den", "arm")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_frames"),
-            F.sum("y_sum").alias("y_total"),
-        )
-        .select(
-            "doc_id",
-            "colorspace",
-            "width",
-            "height",
-            "fps_num",
-            "fps_den",
-            "n_frames",
-            F.expr(
-                "CAST(CASE WHEN fps_num = 0 THEN 0 "
-                "ELSE n_frames * 1000 * fps_den div fps_num END AS INT)"
-            ).alias("duration_ms"),
-            "y_total",
-            "arm",
-        )
-    )
-
-
-def video_features_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    """Closed-form re-derivation from the k lattice: half the cells of
-    every frame are 255, so y_total = n * 255 * w * h / 2 exactly —
-    if the decoder misreads a plane length, a frame boundary, or any
-    single luma byte, the clip's integers change and the hash reds."""
-    return f"""
-WITH {_video_sql_ctes(modulo)}
-SELECT doc_id, colorspace, width, height,
-       CAST({VIDEO_FPS_NUM} AS INT) AS fps_num,
-       CAST({VIDEO_FPS_DEN} AS INT) AS fps_den,
-       n AS n_frames,
-       CAST(n * 1000 * {VIDEO_FPS_DEN} // {VIDEO_FPS_NUM} AS INT) AS duration_ms,
-       CAST(n AS BIGINT) * 255 * width * height // 2 AS y_total,
-       'real' AS arm
-FROM v
-"""
-
-
-def video_frame_phash(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    media_df: DataFrame | None = None,
-) -> DataFrame:
-    """Per-frame perceptual hash: threshold each frame's 8x8 luma
-    cells at their own mean (strictly-greater — the same average-hash
-    rule as `media_phash`), emitting the 64 bits as a '0'/'1' string.
-    Two clips showing the same frame at different resolutions or pixel
-    layouts hash identically frame-for-frame — the primitive under
-    video dedup, near-dup search, and keyframe indexing. Pure Catalyst
-    over the persisted decode pass (aggregate for the mean, let-bound
-    so it evaluates once; transform+concat for the bits). Every stage
-    is stateless, so the identical plan runs append-mode on a stream
-    (`streaming/ingest.stream_video_frame_phash`); `media_df` feeds
-    the decode from a caller-supplied (possibly streaming) blob
-    source."""
-    fr = video_frames(spark, sf_dir, modulo, media_df=media_df)
-    return fr.select(
-        "doc_id", "frame", _cells_phash_expr("cells").alias("phash"), "arm"
-    )
-
-
-def video_frame_phash_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    """Value-level re-derivation from the segment-pattern formula: if
-    the decode, the box resample, or the threshold drifts by one bit
-    on any frame, that row's 64-char hash string changes."""
-    return f"""
-WITH {_video_sql_ctes(modulo)}
-SELECT doc_id, frame, phash, 'real' AS arm
-FROM fphash
-"""
-
-
-def _frame_l1_dist(prev) -> F.Column:
-    """Mean absolute cell difference between the current row's cells
-    and a previous frame's — THE distance formula under scene-cut
-    detection AND the motion profile; one definition so the numeric
-    signal and its thresholded boolean can never desynchronize."""
-    return F.aggregate(
-        F.zip_with("cells", prev, lambda a, b: F.abs(a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x.cast("long"),
-    ) / 64.0
-
-
-def _with_scene_segments(fr: DataFrame, threshold: float) -> DataFrame:
-    """Append is_cut and segment to a per-frame cells table — THE
-    scene-boundary construction (lag window, L1 cell distance, running
-    cut count) shared by `video_scene_cuts` and `video_keyframes`, so
-    a threshold or distance-formula change can never desynchronize
-    them (or their shared oracle CTEs)."""
-    w_ord = Window.partitionBy("doc_id").orderBy("frame")
-    dist = _frame_l1_dist(F.lag("cells").over(w_ord))
-    seg = F.sum(F.col("is_cut").cast("int")).over(
-        w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return fr.withColumn(
-        "is_cut", F.coalesce(dist > threshold, F.lit(False))
-    ).withColumn("segment", seg.cast("int"))
-
-
-def video_scene_cuts(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    threshold: float = VIDEO_CUT_THRESHOLD,
-) -> DataFrame:
-    """Scene-cut segmentation: frame f is a cut when its mean absolute
-    luma-cell difference from frame f-1 exceeds `threshold`; the
-    running cut count is the frame's scene segment — the shot-boundary
-    primitive under keyframe selection and per-scene sampling. Pure
-    Catalyst over the persisted decode pass: lag window for the
-    previous frame's cells, zip_with+aggregate for the L1 distance,
-    running-sum window for the segment. The per-doc window partitions
-    by clip, so the one exchange is bounded by clip count, never by
-    frame count.
-
-    On the constructed corpus the detection is exact by construction:
-    consecutive segment patterns always differ in >= 2 of 64 cells
-    (mean diff >= 7.97 > 4.0) and frames within a segment are
-    identical (diff 0), so `is_cut` equals the group's cut-flag word
-    bit-for-bit and DuckDB value-pins the whole chain."""
-    fr = video_frames(spark, sf_dir, modulo)
-    return _with_scene_segments(fr, threshold).select(
-        "doc_id", "frame", "is_cut", "segment"
-    )
-
-
-def video_scene_cuts_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    return f"""
-WITH {_video_sql_ctes(modulo)}
-SELECT doc_id, frame, cutbit = 1 AS is_cut, segment
-FROM seg
-"""
-
-
-def _cells_phash_expr(cells) -> F.Column:
-    """The average-hash rule over one frame's 64 luma cells as a
-    Catalyst expression — THE definition of the per-frame hash, shared
-    by `video_frame_phash`, the clip-fingerprint aggregation, and the
-    streaming front door, so the formula can never drift between
-    consumers. `cells` is a column (or lambda variable) holding
-    array<int>."""
-    from ..functions.hashing import let_expr
-
-    mean = F.aggregate(
-        cells, F.lit(0).cast("long"), lambda acc, x: acc + x.cast("long")
-    ) / 64.0
-    return let_expr(
-        mean,
-        lambda m: F.array_join(
-            F.transform(cells, lambda c: F.when(c > m, "1").otherwise("0")), ""
-        ),
-    )
-
-
-def _video_fingerprints(
-    spark: SparkSession, sf_dir: str, modulo: int = CONTRACT_MODULO
-) -> DataFrame:
-    """Per-clip fingerprint table from the persisted decode pass: the
-    portable h60 of the per-frame average-hashes in frame order —
-    identical footage at any resolution or colorspace collides. One
-    exchange (the per-clip collect_list); every front-door role and
-    pair query filters THIS table rather than paying its own decode
-    chain (the r12 media_ingest_dedup plan-fix discipline). Emits
-    (doc_id, colorspace, fingerprint)."""
-    from ..functions import hashing as H
-
-    fr = video_frames(spark, sf_dir, modulo)
-    return (
-        fr.select("doc_id", "colorspace", "frame", _cells_phash_expr("cells").alias("phash"))
-        .groupBy("doc_id", "colorspace")
-        .agg(
-            H.h60_expr(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("frame", "phash"))),
-                        lambda x: x["phash"],
-                    ),
-                    "",
-                )
-            ).alias("fingerprint")
-        )
-    )
-
-
-def video_motion_profile(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-) -> DataFrame:
-    """Per-frame motion intensity: each frame's mean absolute luma-
-    cell difference from its predecessor (frame 0 reads 0.0) — the
-    NUMERIC signal `video_scene_cuts` thresholds into a boolean, and
-    the triage column a video pipeline keys static-content filtering
-    and sampling-rate decisions on. Same lag-window L1 construction,
-    emitted as a rounded double so the oracle pins the distance
-    VALUES, not just their threshold crossings: on the constructed
-    corpus motion is 0 within a scene and exactly
-    255 * (2 * differing base bits) / 64 at each cut. Emits
-    (doc_id, frame, motion)."""
-    fr = video_frames(spark, sf_dir, modulo)
-    w_ord = Window.partitionBy("doc_id").orderBy("frame")
-    dist = _frame_l1_dist(F.lag("cells").over(w_ord))
-    return fr.select(
-        "doc_id",
-        "frame",
-        F.round(F.coalesce(dist, F.lit(0.0)), 6).alias("motion"),
-    )
-
-
-def video_motion_profile_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    """The distances re-derived from the expected per-frame hash
-    strings: hamming of consecutive frame patterns scaled to the mean
-    — a cut's exact magnitude is pinned, not just its existence."""
-    return f"""
-WITH {_video_sql_ctes(modulo)}
-SELECT doc_id, frame,
-       round(coalesce(
-         255.0 * hamming(lag(phash) OVER (PARTITION BY doc_id ORDER BY frame),
-                         phash) / 64.0,
-         0.0), 6) AS motion
-FROM fphash
-"""
-
-
-def video_dup_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    bucket_cap: int = PHASH_BUCKET_CAP,
-) -> DataFrame:
-    """Resolution- and layout-invariant video duplicate pairs: clips
-    whose per-frame perceptual-hash SEQUENCES collide — the same
-    footage re-encoded at a different size or colorspace — via the
-    hash-keyed self-join discipline every pair query in the repo
-    carries (`media_phash_dup_pairs` / `audio_dup_pairs`): the clip
-    fingerprint is the portable h60 of the frame hashes in frame
-    order, the shuffle key is that fingerprint, buckets wider than
-    bucket_cap are dropped (cap mirrored exactly in the oracle), and
-    the pair space never materializes beyond actual collisions. On the
-    constructed corpus the collision classes are exactly the
-    VIDEO_DUP_GROUP lattice groups, so every expected pair is doc_id
-    arithmetic; cross-colorspace pairs are flagged (mono vs 420 copies
-    of one clip — the pairs a byte-level digest can never see).
-
-    Scale shape: the persisted decode pass feeds the per-clip
-    aggregation (one exchange on doc_id) and both join sides of the
-    fingerprint self-join (one exchange on fingerprint); the window
-    cap rides the join key's partitioning."""
-    fp = _video_fingerprints(spark, sf_dir, modulo)
-    wb = Window.partitionBy("fingerprint")
-    capped = (
-        fp.withColumn("bucket_n", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bucket_n") <= bucket_cap)
-        .drop("bucket_n")
-    )
-    left = capped.select(
-        "fingerprint",
-        F.col("doc_id").alias("doc_a"),
-        F.col("colorspace").alias("cs_a"),
-    )
-    right = capped.select(
-        "fingerprint",
-        F.col("doc_id").alias("doc_b"),
-        F.col("colorspace").alias("cs_b"),
-    )
-    return (
-        left.join(right, "fingerprint")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "fingerprint",
-            (F.col("cs_a") != F.col("cs_b")).alias("cross_colorspace"),
-        )
-    )
-
-
-def video_dup_pairs_oracle(
-    modulo: int = CONTRACT_MODULO, bucket_cap: int = PHASH_BUCKET_CAP
-) -> str:
-    """Pairs re-derived by self-joining the SAME fingerprint formula
-    (the shared `_video_sql_ctes` frame hashes, concatenated in frame
-    order, through the same portable h60) — parity holds even if
-    distinct groups ever collided to one fingerprint, because both
-    engines join on the fingerprint, not on the lattice group."""
-    from ..functions import hashing as H
-
-    seq = "string_agg(phash, '' ORDER BY frame)"
-    return f"""
-WITH {_video_sql_ctes(modulo)},
-fp AS (
-  SELECT doc_id, {H.h60_sql(seq)} AS fingerprint
-  FROM fphash GROUP BY doc_id
-),
-fpc AS (
-  SELECT fp.doc_id, fp.fingerprint, v.colorspace
-  FROM fp JOIN v USING (doc_id)
-),
-bcnt AS (SELECT fingerprint, count(*) AS n FROM fpc GROUP BY 1),
-capped AS (
-  SELECT fpc.* FROM fpc JOIN bcnt USING (fingerprint) WHERE bcnt.n <= {bucket_cap}
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.fingerprint,
-       a.colorspace <> b.colorspace AS cross_colorspace
-FROM capped a JOIN capped b
-  ON a.fingerprint = b.fingerprint AND a.doc_id < b.doc_id
-"""
-
-
-def video_keyframes(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    threshold: float = VIDEO_CUT_THRESHOLD,
-) -> DataFrame:
-    """Keyframe extraction: the FIRST frame of every scene segment
-    (frame 0, plus each frame whose luma-cell distance from its
-    predecessor crosses the cut threshold) with its perceptual hash —
-    the downsampling primitive under captioning, embedding, and
-    preview pipelines: one representative frame per shot instead of
-    every frame, with the hash ready for cross-clip lookup. Pure
-    Catalyst over the persisted decode pass (the scene-cut lag window
-    plus the shared average-hash expression); output is bounded by
-    scene count, not frame count."""
-    fr = video_frames(spark, sf_dir, modulo)
-    return (
-        _with_scene_segments(fr, threshold)
-        .filter((F.col("frame") == 0) | F.col("is_cut"))
-        .select(
-            "doc_id",
-            "segment",
-            "frame",
-            _cells_phash_expr("cells").alias("phash"),
-        )
-    )
-
-
-def video_keyframes_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    """Keyframes re-derived from the lattice: frame 0 and every
-    cut-flagged frame, each carrying its segment pattern's hash."""
-    return f"""
-WITH {_video_sql_ctes(modulo)}
-SELECT seg.doc_id, seg.segment, seg.frame, fphash.phash
-FROM seg JOIN fphash ON seg.doc_id = fphash.doc_id AND seg.frame = fphash.frame
-WHERE seg.frame = 0 OR seg.cutbit = 1
-"""
-
-
-VIDEO_CLIP_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("colorspace", T.StringType(), False),
-        T.StructField("frames", T.ArrayType(T.ArrayType(T.IntegerType())), False),
-        T.StructField("arm", T.StringType(), False),
-    ]
-)
-
-
-def video_clip_fingerprints(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    media_df: DataFrame | None = None,
-) -> DataFrame:
-    """Per-clip fingerprints WITHOUT a per-clip aggregation: the
-    decode stage emits one row per CLIP holding the per-frame cell
-    grids as array<array<int>>, and the fingerprint is pure Catalyst
-    over that nested array (the shared `_cells_phash_expr` per frame,
-    concatenated in stream order, through the portable h60) — no
-    groupBy, no shuffle, no stream state, which is what lets the
-    STREAMING front door fingerprint arriving clips per microbatch in
-    append mode (`streaming/ingest.stream_video_ingest_dedup`). The
-    batch front door prefers `_video_fingerprints` (it reuses the
-    persisted per-frame decode instead of paying a second one); the
-    stream==batch test pins the two formulations to identical values.
-    Emits (doc_id, colorspace, fingerprint, arm)."""
-    import pandas as pd
-
-    from ..functions import hashing as H
-
-    corpus = (
-        synthetic_video_media(spark, sf_dir, modulo) if media_df is None else media_df
-    )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in ("doc_id", "colorspace", "frames", "arm")}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                cs, cells = _clip_cells(bytes(content))
-                out["doc_id"].append(doc_id)
-                out["colorspace"].append(cs)
-                out["frames"].append(cells)
-                out["arm"].append("stub" if cells == [] else "real")
-            yield pd.DataFrame(out)
-
-    clips = corpus.mapInPandas(run, VIDEO_CLIP_SCHEMA)
-    fp = H.h60_expr(
-        F.array_join(F.transform("frames", lambda fc: _cells_phash_expr(fc)), "")
-    )
-    return clips.select("doc_id", "colorspace", fp.alias("fingerprint"), "arm")
-
-
-def video_ingest_dedup(
-    spark: SparkSession, sf_dir: str, modulo: int = CONTRACT_MODULO
-) -> DataFrame:
-    """The VIDEO front door — perceptual dedup-at-ingest for clips: an
-    arriving video is dropped when its frame-hash-sequence fingerprint
-    already appears in the known corpus, so a re-encoded or rescaled
-    copy of footage the corpus already holds never lands (a byte-level
-    digest admits those). Roles on the constructed lattice: arriving =
-    odd k (the 420jpeg members); known = even k (mono) in EVEN jdx
-    groups only — so even-jdx arrivals are rejected (their footage is
-    known at a different resolution AND colorspace: every rejection is
-    a cross-encoding catch by construction) and odd-jdx arrivals are
-    admitted, exercising both branches at every SF. Within-stream
-    duplicates are admitted here and collapse in `video_dup_pairs` —
-    the same division of labor as the text and image front doors.
-
-    Scale shape: both roles FILTER the shared `_video_fingerprints`
-    table (one decode pass + one per-clip aggregation for the whole
-    family — the r12 media_ingest_dedup plan-fix discipline); the
-    known side reduces to DISTINCT fingerprints (footage count, not
-    clip count) and broadcasts; the arriving side anti-joins without
-    shuffling. The streaming twin fingerprints arrivals statelessly
-    per microbatch via `video_clip_fingerprints`. Emits
-    (doc_id, colorspace, fingerprint) survivors."""
-    fp = _video_fingerprints(spark, sf_dir, modulo)
-    k = _dup_k(modulo)
-    jdx = F.expr(f"(doc_id div {modulo}) div {VIDEO_DUP_GROUP}")
-    known = (
-        fp.filter((k % 2 == 0) & (jdx % 2 == 0)).select("fingerprint").distinct()
-    )
-    arrived = fp.filter(k % 2 == 1)
-    return arrived.join(F.broadcast(known), "fingerprint", "left_anti").select(
-        "doc_id", "colorspace", "fingerprint"
-    )
-
-
-def video_ingest_dedup_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    """Both roles re-derived from the shared fingerprint CTE — the
-    known set, the arriving set, and the anti-join all in SQL, so the
-    Spark side's real decode of BOTH roles is value-pinned."""
-    from ..functions import hashing as H
-
-    seq = "string_agg(phash, '' ORDER BY frame)"
-    return f"""
-WITH {_video_sql_ctes(modulo)},
-fp AS (
-  SELECT doc_id, {H.h60_sql(seq)} AS fingerprint
-  FROM fphash GROUP BY doc_id
-),
-fpc AS (
-  SELECT fp.doc_id, fp.fingerprint, v.colorspace, v.k, v.jdx
-  FROM fp JOIN v USING (doc_id)
-),
-known AS (
-  SELECT DISTINCT fingerprint FROM fpc WHERE k % 2 = 0 AND jdx % 2 = 0
-)
-SELECT doc_id, colorspace, fingerprint FROM fpc
-WHERE k % 2 = 1 AND fingerprint NOT IN (SELECT fingerprint FROM known)
-"""
-
-
-_VIDEO_LEDGER_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("colorspace", T.StringType(), False),
-        T.StructField("digest", T.StringType(), False),
-        T.StructField("frames", T.ArrayType(T.ArrayType(T.IntegerType())), False),
-    ]
-)
-
-
-def video_ingest_decision_report(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """The video front door's admission ledger — the observability
-    twin `video_ingest_dedup` lacks (it emits survivors only): one row
-    per ARRIVING clip with its verdict, `exact_dup` (byte digest
-    already in the corpus) > `perceptual_dup` (frame-hash-sequence
-    fingerprint already known) > `accepted` — the same precedence and
-    audit-trail role as the text and image ledgers. Roles are the
-    ingest lattice's: arriving = odd k, known = even k in even jdx
-    groups.
-
-    Scale shape: arriving features (digest + per-frame cell stacks)
-    come from ONE stateless decode mapInPandas pass, with the
-    fingerprint folded over the nested array in Catalyst (the shared
-    `_cells_phash_expr` — no per-clip groupBy, so `docs` lets
-    `streaming/ingest.stream_video_ingest_decision_report` feed the
-    arriving side from an unbounded stream); the known digest set is
-    codegen'd md5 over the known blobs (no decode — digests need
-    bytes, not pixels) and the known fingerprint set filters the
-    shared `_video_fingerprints` table (decode shared with the
-    family); both known sets reduce to DISTINCT keys and broadcast.
-    Emits (doc_id, colorspace, is_exact_dup, is_perceptual_dup,
-    verdict)."""
-    import pandas as pd
-
-    from ..functions import hashing as H
-
-    k = _dup_k(modulo)
-    jdx = F.expr(f"(doc_id div {modulo}) div {VIDEO_DUP_GROUP}")
-    corpus = synthetic_video_media(spark, sf_dir, modulo)
-    arriving = (
-        synthetic_video_media(spark, sf_dir, modulo, docs=docs).filter(k % 2 == 1)
-        if docs is not None
-        else corpus.filter(k % 2 == 1)
-    )
-
-    def feats(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in ("doc_id", "colorspace", "digest", "frames")}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                content = bytes(content)
-                cs, cells = _clip_cells(content)
-                out["doc_id"].append(doc_id)
-                out["colorspace"].append(cs)
-                out["digest"].append(hashlib.md5(content).hexdigest())
-                out["frames"].append(cells)
-            yield pd.DataFrame(out)
-
-    fp = H.h60_expr(
-        F.array_join(F.transform("frames", lambda fc: _cells_phash_expr(fc)), "")
-    )
-    arr = arriving.mapInPandas(feats, _VIDEO_LEDGER_SCHEMA).select(
-        "doc_id", "colorspace", "digest", fp.alias("fingerprint")
-    )
-    known_digests = (
-        corpus.filter((k % 2 == 0) & (jdx % 2 == 0))
-        .select(F.md5("content").alias("digest"))
-        .distinct()
-        .withColumn("d_hit", F.lit(1))
-    )
-    known_fps = (
-        _video_fingerprints(spark, sf_dir, modulo)
-        .filter((k % 2 == 0) & (jdx % 2 == 0))
-        .select("fingerprint")
-        .distinct()
-        .withColumn("p_hit", F.lit(1))
-    )
-    return (
-        arr.join(F.broadcast(known_digests), "digest", "left")
-        .join(F.broadcast(known_fps), "fingerprint", "left")
-        .select(
-            "doc_id",
-            "colorspace",
-            F.col("d_hit").isNotNull().alias("is_exact_dup"),
-            F.col("p_hit").isNotNull().alias("is_perceptual_dup"),
-            F.when(F.col("d_hit").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("p_hit").isNotNull(), F.lit("perceptual_dup"))
-            .otherwise(F.lit("accepted"))
-            .alias("verdict"),
-        )
-    )
-
-
-def video_ingest_decision_report_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    """Fingerprint verdicts re-derived from the shared lattice CTEs;
-    the known fingerprint set comes from the data (not closed form),
-    so partial tail groups are handled. is_exact_dup is pinned FALSE
-    by construction — arriving clips are C420jpeg (odd k), known clips
-    Cmono (even k), so their y4m headers (and plane layouts) can never
-    byte-match; the Spark side still runs a REAL digest probe, and any
-    false match reds the hash."""
-    from ..functions import hashing as H
-
-    seq = "string_agg(phash, '' ORDER BY frame)"
-    return f"""
-WITH {_video_sql_ctes(modulo)},
-fp AS (
-  SELECT doc_id, {H.h60_sql(seq)} AS fingerprint
-  FROM fphash GROUP BY doc_id
-),
-fpc AS (
-  SELECT fp.doc_id, fp.fingerprint, v.colorspace, v.k, v.jdx
-  FROM fp JOIN v USING (doc_id)
-),
-known AS (
-  SELECT DISTINCT fingerprint FROM fpc WHERE k % 2 = 0 AND jdx % 2 = 0
-)
-SELECT doc_id, colorspace,
-       FALSE AS is_exact_dup,
-       fingerprint IN (SELECT fingerprint FROM known) AS is_perceptual_dup,
-       CASE WHEN fingerprint IN (SELECT fingerprint FROM known)
-            THEN 'perceptual_dup' ELSE 'accepted' END AS verdict
-FROM fpc WHERE k % 2 = 1
-"""
-
-
-def synthetic_near_dup_video(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """Generative corpus of CONSTRUCTED video NEAR-twins on the
-    residue-(7*modulo/8) docs (disjoint from the six sibling media
-    corpora): every VIDEO_DUP_GROUP consecutive k render the same clip
-    (jdx = k/4 picks the `_video_expected_frames` sequence — same
-    frames, same cuts) with member t = k%4 complementing the cells in
-    PHASH_NEAR_FLIP_SETS[t] in EVERY frame — a logo overlay /
-    letterbox / brightness-edit stand-in that moves each frame's
-    average-hash by exactly the flip-set size, so identical-
-    fingerprint dedup (`video_dup_pairs`) misses the pair but
-    Hamming<=3 frame banding must find it (the flip sets are the image
-    near-twin family's: see their comment for the per-pair distances
-    and which banding path each pair exercises). Dims and colorspace
-    vary per member on coordinates decorrelated from the member index
-    (the residue-pinning discipline) so the pair search also spans the
-    resample and both plane layouts. Flipping <= 8 of 64 cells keeps
-    each frame's ones-count in [24, 40] — the cell mean stays strictly
-    between the two cell values, and the y4m decode is lossless, so
-    the threshold is exact. Deterministic in doc_id alone."""
-    import pandas as pd
-
-    d = _spread_gen_input(
-        spark,
-        sf_dir,
-        (tables.load_table(spark, sf_dir, "documents") if docs is None else docs)
-        .filter(F.col("doc_id") % modulo == 7 * modulo // 8)
-        .select("doc_id"),
-        batch=docs is None,
-    )
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import y4m as _y4mmod
-
-        for pdf in batches:
-            metas, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = doc_id // modulo
-                t = k % VIDEO_DUP_GROUP
-                flips = PHASH_NEAR_FLIP_SETS[t]
-                w = ((k + k // 4) % 4 + 1) * 16
-                h = ((k // 2) % 2 + 1) * 16
-                cs = "mono" if (k + k // 8) % 2 == 0 else "420jpeg"
-                flipped = [
-                    [1 - b if i in flips else b for i, b in enumerate(bits)]
-                    for bits in _video_expected_frames(k // VIDEO_DUP_GROUP)
-                ]
-                frames = [
-                    [
-                        [255 * fb[(r * 8 // h) * 8 + (c * 8 // w)] for c in range(w)]
-                        for r in range(h)
-                    ]
-                    for fb in flipped
-                ]
-                blobs.append(
-                    _y4mmod.encode_y4m(frames, VIDEO_FPS_NUM, VIDEO_FPS_DEN, cs)
-                )
-                metas.append(
-                    {
-                        "width": w,
-                        "height": h,
-                        "duration_ms": len(frames)
-                        * 1000
-                        * VIDEO_FPS_DEN
-                        // VIDEO_FPS_NUM,
-                    }
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": ["video"] * len(blobs),
-                    "content": blobs,
-                    "meta": metas,
-                }
-            )
-
-    return d.mapInPandas(gen, MEDIA_SCHEMA)
-
-
-def _video_near_phash(
-    spark: SparkSession, sf_dir: str, modulo: int = CONTRACT_MODULO
-) -> DataFrame:
-    """(doc_id, frame, phash) over the near-twin video corpus — the
-    persisted decode subtree the banded pair search references on both
-    join sides AND in the verify join (Catalyst never shares a subtree
-    across a self-join; without the cache the synthesize+decode chain
-    runs once per reference)."""
-    from ..functions.caching import persist_if
-
-    ph = video_frame_phash(
-        spark,
-        sf_dir,
-        modulo,
-        media_df=synthetic_near_dup_video(spark, sf_dir, modulo),
-    ).select("doc_id", "frame", "phash")
-    return persist_if(ph, modulo == CONTRACT_MODULO)
-
-
-def video_near_dup_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    max_hamming: int = PHASH_NEAR_MAX_HAMMING,
-    band_cap: int = PHASH_BUCKET_CAP,
-) -> DataFrame:
-    """Video NEAR-duplicate pairs: clips with the same frame count
-    whose aligned frames each differ in <= max_hamming of 64 hash bits
-    — the logo overlays, letterboxes, and brightness edits that flip a
-    few threshold cells in every frame and escape the identical-
-    fingerprint path (`video_dup_pairs` is the t=0 fast path; this is
-    the production video dedup, the image family's r12 escalation
-    applied to the third modality). Candidate generation banding rides
-    frame 0 ONLY — sound by pigeonhole: a qualifying pair's frame 0 is
-    within Hamming <= 3, so it agrees exactly on >= 1 of frame 0's 4
-    prefix bands — and keeps the unpivot at 4 rows per CLIP, not per
-    frame. The verify is an aligned per-frame join over the persisted
-    hash table: per candidate pair, every frame's Hamming (codegen'd
-    conv/xor/bit_count — no UDF) aggregates to a max, and differing
-    frame counts disqualify. Band buckets above band_cap are dropped,
-    cap mirrored exactly in the oracle (`media_phash_dropped_bands`'
-    cap discipline).
-
-    Scale shape: ONE persisted synthesize+decode pass feeds the band
-    unpivot (both sides) and the verify join (both sides); exchanges
-    are the band equi-join and the per-pair aggregation — pair space
-    never materializes beyond frame-0 band collisions. Emits
-    (doc_a, doc_b, n_frames, max_hamming)."""
-    ph = _video_near_phash(spark, sf_dir, modulo)
-    f0 = ph.filter(F.col("frame") == 0)
-    bands = f0.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("band"),
-                    F.substring(
-                        "phash", 1 + j * PHASH_NEAR_BAND_BITS, PHASH_NEAR_BAND_BITS
-                    ).alias("val"),
-                )
-                for j in range(PHASH_NEAR_BANDS)
-            ])
-        ).alias("b"),
-    ).select("doc_id", F.col("b.band").alias("band"), F.col("b.val").alias("val"))
-    wb = Window.partitionBy("band", "val")
-    kept = (
-        bands.withColumn("bucket_n", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bucket_n") <= band_cap)
-        .drop("bucket_n")
-    )
-    cand = (
-        kept.select("band", "val", F.col("doc_id").alias("doc_a"))
-        .join(kept.select("band", "val", F.col("doc_id").alias("doc_b")), ["band", "val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    fa = ph.select(
-        F.col("doc_id").alias("doc_a"), "frame", F.col("phash").alias("fp_a")
-    )
-    fb = ph.select(
-        F.col("doc_id").alias("doc_b"), "frame", F.col("phash").alias("fp_b")
-    )
-    n_by_doc = ph.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    verified = (
-        cand.join(fa, "doc_a")
-        .join(fb, ["doc_b", "frame"])
-        .withColumn("h", _bits_hamming(F.col("fp_a"), F.col("fp_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_frames"),
-            F.max("h").alias("max_hamming"),
-        )
-    )
-    return (
-        verified.join(
-            n_by_doc.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            n_by_doc.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
-        .filter(
-            (F.col("n_frames") == F.col("n_a"))
-            & (F.col("n_frames") == F.col("n_b"))
-            & (F.col("max_hamming") <= max_hamming)
-        )
-        .select("doc_a", "doc_b", F.col("n_frames").cast("int").alias("n_frames"), "max_hamming")
-    )
-
-
-def _video_near_sql_ctes(modulo: int) -> str:
-    """The near-twin video corpus's per-frame hash derivation — the
-    shared `_video_sql_ctes` lattice with the flip predicate GENERATED
-    from PHASH_NEAR_FLIP_SETS (one definition, both engines), on the
-    7*modulo/8 residue."""
-    flip_cond = " OR ".join(
-        f"(t = {m} AND i IN ({', '.join(str(i) for i in sorted(cells))}))"
-        for m, cells in enumerate(PHASH_NEAR_FLIP_SETS)
-        if cells
-    )
-    return f"""v AS (
-  SELECT doc_id, k, jdx,
-         CAST(k % {VIDEO_DUP_GROUP} AS INT) AS t,
-         CAST(jdx % 5 + 2 AS INT) AS n,
-         CAST((CAST(jdx AS HUGEINT) * {_VIDEO_MIX_CUTS} + 1) % {_I63} AS BIGINT) AS g
-  FROM (
-    SELECT doc_id, doc_id // {modulo} AS k,
-           (doc_id // {modulo}) // {VIDEO_DUP_GROUP} AS jdx
-    FROM documents WHERE doc_id % {modulo} = {7 * modulo // 8}
-  )
-),
-seg AS (
-  SELECT v.*, CAST(f AS INT) AS frame,
-         CAST(SUM(CASE WHEN f = 0 THEN 0 ELSE (g >> CAST(f AS INT)) & 1 END)
-              OVER (PARTITION BY doc_id ORDER BY f) AS INT) AS segment
-  FROM v, unnest(range(0, n)) AS t2(f)
-),
-pw AS (
-  SELECT seg.*,
-         CAST((CAST(jdx AS HUGEINT) * {_PHASH_MIX}
-               + CAST(segment AS HUGEINT) * {_VIDEO_MIX_SEG} + 1) % {_I63} AS BIGINT) AS p
-  FROM seg
-),
-fbits AS (
-  SELECT doc_id, frame, i,
-         CASE WHEN {flip_cond} THEN 1 - b0 ELSE b0 END AS b
-  FROM (
-    SELECT doc_id, t, frame, i,
-           CASE WHEN i % 2 = 0 THEN (p >> CAST(i // 2 AS INT)) & 1
-                ELSE 1 - ((p >> CAST(i // 2 AS INT)) & 1) END AS b0
-    FROM pw, range(64) u(i)
-  )
-),
-fphash AS (
-  SELECT doc_id, frame, string_agg(CAST(b AS VARCHAR), '' ORDER BY i) AS phash
-  FROM fbits GROUP BY doc_id, frame
-)"""
-
-
-def video_near_dup_pairs_oracle(
-    modulo: int = CONTRACT_MODULO,
-    max_hamming: int = PHASH_NEAR_MAX_HAMMING,
-    band_cap: int = PHASH_BUCKET_CAP,
-) -> str:
-    """The full discipline re-derived in SQL — frame-0 band unpivot,
-    bucket cap, equi-join, aligned per-frame Hamming verify (DuckDB's
-    hamming() text function vs Spark's conv/xor/bit_count), equal
-    frame counts — cap included."""
-    return f"""
-WITH {_video_near_sql_ctes(modulo)},
-f0bands AS (
-  SELECT doc_id, CAST(j AS INT) AS band,
-         substring(phash, 1 + CAST(j AS INT) * {PHASH_NEAR_BAND_BITS},
-                   {PHASH_NEAR_BAND_BITS}) AS val
-  FROM fphash, range({PHASH_NEAR_BANDS}) u(j) WHERE frame = 0
-),
-bcnt AS (SELECT band, val, count(*) AS cnt FROM f0bands GROUP BY 1, 2),
-kept AS (
-  SELECT b.* FROM f0bands b JOIN bcnt USING (band, val) WHERE bcnt.cnt <= {band_cap}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM kept a JOIN kept b
-    ON a.band = b.band AND a.val = b.val AND a.doc_id < b.doc_id
-),
-nf AS (SELECT doc_id, count(*) AS n FROM fphash GROUP BY 1),
-verified AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS n_frames,
-         max(hamming(fa.phash, fb.phash)) AS max_h
-  FROM cand c
-  JOIN fphash fa ON fa.doc_id = c.doc_a
-  JOIN fphash fb ON fb.doc_id = c.doc_b AND fb.frame = fa.frame
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT v.doc_a, v.doc_b, CAST(v.n_frames AS INT) AS n_frames,
-       CAST(v.max_h AS BIGINT) AS max_hamming
-FROM verified v
-JOIN nf na ON na.doc_id = v.doc_a
-JOIN nf nb ON nb.doc_id = v.doc_b
-WHERE v.n_frames = na.n AND v.n_frames = nb.n AND v.max_h <= {max_hamming}
-"""
-
-
-def synthetic_poster_media(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """Generative POSTER-image corpus on the residue-(5*modulo/8) docs
-    (disjoint from the seven sibling media corpora): doc k renders the
-    opening-scene cell pattern of video lattice group k
-    (`_video_pattern_bits(k, 0)` — exactly what the residue-6 video
-    corpus's groups show at frame 0) as a standalone image, at its own
-    dims lattice and codec split (PNG even k, baseline JPEG odd). The
-    still-to-footage stand-in: a thumbnail, cover art, or scraped
-    screenshot of a clip the corpus also holds as video. Each pattern
-    has exactly 32 of 64 cells set, so the average-hash is bit-stable
-    under the JPEG arm's DCT rounding (the `synthetic_dup_media`
-    margin argument)."""
-    import pandas as pd
-
-    d = _spread_gen_input(
-        spark,
-        sf_dir,
-        (tables.load_table(spark, sf_dir, "documents") if docs is None else docs)
-        .filter(F.col("doc_id") % modulo == 5 * modulo // 8)
-        .select("doc_id"),
-        batch=docs is None,
-    )
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import jpeg as _jpegmod
-        from ..functions import png as _pngmod
-
-        for pdf in batches:
-            metas, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = doc_id // modulo
-                w = (k % 8 + 1) * 8
-                h = (k % 4 + 1) * 8
-                bits = _video_pattern_bits(k, 0)
-                rows = [
-                    [255 * bits[(r * 8 // h) * 8 + (c * 8 // w)] for c in range(w)]
-                    for r in range(h)
-                ]
-                encode = (
-                    _pngmod.encode_png_gray if k % 2 == 0 else _jpegmod.encode_jpeg_gray
-                )
-                blobs.append(encode(rows))
-                metas.append({"width": w, "height": h, "duration_ms": None})
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": ["image"] * len(blobs),
-                    "content": blobs,
-                    "meta": metas,
-                }
-            )
-
-    return d.mapInPandas(gen, MEDIA_SCHEMA)
-
-
-def video_poster_matches(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    bucket_cap: int = PHASH_BUCKET_CAP,
-) -> DataFrame:
-    """CROSS-MODALITY perceptual join: still images matched to the
-    video keyframes they depict — the image-to-video grounding
-    primitive (which clip does this thumbnail/cover/screenshot come
-    from?) that neither byte dedup nor within-modality perceptual
-    dedup can answer. Both sides reduce to the SAME 64-bit average-
-    hash space: poster images through the image decode
-    (`media_phash`), clips through the video decode's keyframe table
-    (`video_keyframes` — one hash per scene, so a poster matches each
-    clip at most once per depicted scene, not once per frame). The
-    join is hash-keyed with the repo's bucket-cap discipline on both
-    sides (cap mirrored exactly in the oracle). On the constructed
-    corpora, poster k shows video group k's opening scene, so the
-    expected match set — every group-k clip's frame-0 keyframe — is
-    pure doc_id arithmetic and DuckDB value-pins BOTH modality decode
-    chains in one query.
-
-    Scale shape: the poster side is one stateless synthesize+decode
-    pass; the keyframe side reuses the persisted video decode; one
-    exchange on the hash; pair space bounded by real hash collisions
-    and the cap. Emits (poster_doc_id, video_doc_id, frame, phash)."""
-    posters = media_phash(
-        spark,
-        sf_dir,
-        modulo,
-        media_df=synthetic_poster_media(spark, sf_dir, modulo),
-    ).select(F.col("doc_id").alias("poster_doc_id"), "phash")
-    keyframes = video_keyframes(spark, sf_dir, modulo).select(
-        F.col("doc_id").alias("video_doc_id"), "frame", "phash"
-    )
-    wb = Window.partitionBy("phash")
-    p_kept = (
-        posters.withColumn("bucket_n", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bucket_n") <= bucket_cap)
-        .drop("bucket_n")
-    )
-    k_kept = (
-        keyframes.withColumn("bucket_n", F.count(F.lit(1)).over(wb))
-        .filter(F.col("bucket_n") <= bucket_cap)
-        .drop("bucket_n")
-    )
-    return p_kept.join(k_kept, "phash").select(
-        "poster_doc_id", "video_doc_id", "frame", "phash"
-    )
-
-
-def video_poster_matches_oracle(
-    modulo: int = CONTRACT_MODULO, bucket_cap: int = PHASH_BUCKET_CAP
-) -> str:
-    """Both modality chains re-derived: the poster hash from the video
-    pattern formula at segment 0 on the poster residue, the keyframe
-    hashes from the shared video CTEs filtered to segment firsts, the
-    capped join on the hash — one oracle spanning two decode
-    pipelines."""
-    return f"""
-WITH {_video_sql_ctes(modulo)},
-keyf AS (
-  SELECT seg.doc_id AS video_doc_id, seg.frame, fphash.phash
-  FROM seg JOIN fphash ON seg.doc_id = fphash.doc_id AND seg.frame = fphash.frame
-  WHERE seg.frame = 0 OR seg.cutbit = 1
-),
-pm AS (
-  SELECT doc_id AS poster_doc_id,
-         CAST((CAST(doc_id // {modulo} AS HUGEINT) * {_PHASH_MIX} + 1)
-              % {_I63} AS BIGINT) AS p
-  FROM documents WHERE doc_id % {modulo} = {5 * modulo // 8}
-),
-pbits AS (
-  SELECT poster_doc_id, i,
-         CASE WHEN i % 2 = 0 THEN (p >> CAST(i // 2 AS INT)) & 1
-              ELSE 1 - ((p >> CAST(i // 2 AS INT)) & 1) END AS b
-  FROM pm, range(64) t(i)
-),
-ph AS (
-  SELECT poster_doc_id, string_agg(CAST(b AS VARCHAR), '' ORDER BY i) AS phash
-  FROM pbits GROUP BY poster_doc_id
-),
-pcnt AS (SELECT phash, count(*) AS n FROM ph GROUP BY 1),
-kcnt AS (SELECT phash, count(*) AS n FROM keyf GROUP BY 1),
-pk AS (SELECT ph.* FROM ph JOIN pcnt USING (phash) WHERE pcnt.n <= {bucket_cap}),
-kk AS (SELECT keyf.* FROM keyf JOIN kcnt USING (phash) WHERE kcnt.n <= {bucket_cap})
-SELECT pk.poster_doc_id, kk.video_doc_id, kk.frame, pk.phash
-FROM pk JOIN kk USING (phash)
-"""
-
-
-def synthetic_caption_media(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """Caption tracks for the residue-(3*modulo/8) VIDEO docs — the
-    same doc set as `synthetic_video_media`, because a caption track
-    belongs to a clip: doc k carries an SRT blob (vendored
-    `functions/srt.py`) with one cue per scene segment, spanning the
-    segment's frames at 25 fps, text 'scene {s} of clip {jdx}'. Every
-    cue boundary and text is the same doc_id arithmetic as the video
-    lattice, so caption parsing AND caption-video alignment are
-    DuckDB-pinnable end-to-end."""
-    import pandas as pd
-
-    d = _spread_gen_input(
-        spark,
-        sf_dir,
-        (tables.load_table(spark, sf_dir, "documents") if docs is None else docs)
-        .filter(F.col("doc_id") % modulo == 3 * modulo // 8)
-        .select("doc_id"),
-        batch=docs is None,
-    )
-    ms_per_frame = 1000 * VIDEO_FPS_DEN // VIDEO_FPS_NUM
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import srt as _srtmod
-
-        for pdf in batches:
-            metas, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = doc_id // modulo
-                jdx = k // VIDEO_DUP_GROUP
-                g = (jdx * _VIDEO_MIX_CUTS + 1) % _I63
-                n = jdx % 5 + 2
-                seg_first: list[int] = [0]
-                for f in range(1, n):
-                    if (g >> f) & 1:
-                        seg_first.append(f)
-                cues = []
-                for s, first in enumerate(seg_first):
-                    last = (seg_first[s + 1] - 1) if s + 1 < len(seg_first) else n - 1
-                    cues.append(
-                        (
-                            first * ms_per_frame,
-                            (last + 1) * ms_per_frame,
-                            f"scene {s} of clip {jdx}",
-                        )
-                    )
-                blobs.append(_srtmod.encode_srt(cues))
-                metas.append(
-                    {"width": None, "height": None, "duration_ms": n * ms_per_frame}
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": ["caption"] * len(blobs),
-                    "content": blobs,
-                    "meta": metas,
-                }
-            )
-
-    return d.mapInPandas(gen, MEDIA_SCHEMA)
-
-
-CAPTION_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("cue", T.IntegerType(), False),
-        T.StructField("start_ms", T.IntegerType(), False),
-        T.StructField("end_ms", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("arm", T.StringType(), False),
-    ]
-)
-
-
-def video_captions(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-    media_df: DataFrame | None = None,
-) -> DataFrame:
-    """The caption decode boundary: one Arrow-batched mapInPandas pass
-    through the vendored SRT reader, emitting one row per cue —
-    (doc_id, cue, start_ms, end_ms, text) — the text-track extraction
-    that turns a captioned clip into alignable training text.
-    Unparseable blobs take arm='stub' with a single empty cue row
-    (pytest negative arm; the strict codec refuses rather than
-    mis-parses). Persisted at default args for its two consumers.
-    Stateless, so `media_df` admits a streaming blob source."""
-    import pandas as pd
-
-    from ..functions.caching import persist_if
-
-    invariant = media_df is None and modulo == CONTRACT_MODULO
-    corpus = (
-        synthetic_caption_media(spark, sf_dir, modulo) if media_df is None else media_df
-    )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import srt as _srtmod
-
-        cols = ("doc_id", "cue", "start_ms", "end_ms", "text", "arm")
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                try:
-                    rows = [
-                        (i, start, end, text, "real")
-                        for i, (start, end, text) in enumerate(
-                            _srtmod.decode_srt(bytes(content)), 1
-                        )
-                    ]
-                except ValueError:
-                    rows = [(0, 0, 0, "", "stub")]
-                for r in rows:
-                    out["doc_id"].append(doc_id)
-                    for c, v in zip(cols[1:], r):
-                        out[c].append(v)
-            yield pd.DataFrame(out)
-
-    return persist_if(corpus.mapInPandas(run, CAPTION_SCHEMA), invariant)
-
-
-def _caption_cues_sql(modulo: int) -> str:
-    """The expected cue lattice: one cue per scene segment with its
-    frame span at 25 fps — shared by the parse oracle and the
-    training-pair oracle (extends the `_video_sql_ctes` seg CTE)."""
-    ms = 1000 * VIDEO_FPS_DEN // VIDEO_FPS_NUM
-    return f"""cues AS (
-  SELECT doc_id, jdx, segment,
-         CAST(segment + 1 AS INT) AS cue,
-         CAST(min(frame) * {ms} AS INT) AS start_ms,
-         CAST((max(frame) + 1) * {ms} AS INT) AS end_ms,
-         'scene ' || segment || ' of clip ' || jdx AS text
-  FROM seg GROUP BY doc_id, jdx, segment
-)"""
-
-
-def video_captions_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    """Cues re-derived from the segment lattice: if the SRT writer,
-    the parser, or the cue arithmetic drifts by a millisecond or a
-    character anywhere, that row reds."""
-    return f"""
-WITH {_video_sql_ctes(modulo)},
-{_caption_cues_sql(modulo)}
-SELECT doc_id, cue, start_ms, end_ms, text, 'real' AS arm
-FROM cues
-"""
-
-
-def video_caption_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    modulo: int = CONTRACT_MODULO,
-) -> DataFrame:
-    """The video-caption TRAINING-PAIR emitter — the sample shape a
-    video-captioning / video-text contrastive dataset is made of: one
-    row per scene with its time span, its caption text, and its
-    keyframe's perceptual hash (the visual key a pair-builder joins
-    embeddings or pixels back onto). Joins the parsed caption track
-    (cue i <-> segment i-1) with the keyframe table on (clip, scene) —
-    two persisted decode subtrees, one narrow equi-join, no extra
-    Python. On the constructed corpora the join is total by
-    construction: every scene has exactly one cue and one keyframe,
-    so a dropped or misaligned row anywhere in EITHER decode chain
-    changes the row count and reds the gate. Emits
-    (doc_id, segment, start_ms, end_ms, caption, keyframe_phash)."""
-    caps = video_captions(spark, sf_dir, modulo).filter(F.col("arm") == "real")
-    kf = video_keyframes(spark, sf_dir, modulo)
-    return (
-        caps.withColumn("segment", (F.col("cue") - 1).cast("int"))
-        .join(kf, ["doc_id", "segment"])
-        .select(
-            "doc_id",
-            "segment",
-            "start_ms",
-            "end_ms",
-            F.col("text").alias("caption"),
-            F.col("phash").alias("keyframe_phash"),
-        )
-    )
-
-
-def video_caption_pairs_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    return f"""
-WITH {_video_sql_ctes(modulo)},
-{_caption_cues_sql(modulo)},
-keyf AS (
-  SELECT seg.doc_id, seg.segment, seg.frame, fphash.phash
-  FROM seg JOIN fphash ON seg.doc_id = fphash.doc_id AND seg.frame = fphash.frame
-  WHERE seg.frame = 0 OR seg.cutbit = 1
-)
-SELECT c.doc_id, c.segment, c.start_ms, c.end_ms,
-       c.text AS caption, k.phash AS keyframe_phash
-FROM cues c JOIN keyf k ON c.doc_id = k.doc_id AND c.segment = k.segment
-"""
-
-
-def media_fingerprint_catalog(
-    spark: SparkSession, sf_dir: str, modulo: int = CONTRACT_MODULO
-) -> DataFrame:
-    """The cross-modality perceptual-identity catalog: ONE table
-    listing every perceptual fingerprint the engine maintains — image
-    average-hashes, loudness-invariant audio sign fingerprints, video
-    frame-sequence fingerprints — keyed (doc_id, modality,
-    fingerprint). This is the governance surface a multimodal corpus
-    build audits and the lookup table cross-store dedup probes: each
-    family's front door consults its own known set, and this catalog
-    is their union, served from the SAME persisted decode subtrees
-    (zero extra decode passes — three cached scans and a union). The
-    bigint fingerprints are rendered as strings so one column spans
-    the modalities' key types."""
-    img = media_phash(spark, sf_dir, modulo).select(
-        "doc_id", F.lit("image").alias("modality"), F.col("phash").alias("fingerprint")
-    )
-    aud = audio_sign_fingerprint(spark, sf_dir, modulo).select(
-        "doc_id",
-        F.lit("audio").alias("modality"),
-        F.col("fingerprint").cast("string").alias("fingerprint"),
-    )
-    vid = _video_fingerprints(spark, sf_dir, modulo).select(
-        "doc_id",
-        F.lit("video").alias("modality"),
-        F.col("fingerprint").cast("string").alias("fingerprint"),
-    )
-    return img.unionByName(aud).unionByName(vid)
-
-
-def media_fingerprint_catalog_oracle(modulo: int = CONTRACT_MODULO) -> str:
-    """Union of the three families' fingerprint derivations — each the
-    SAME shared CTE block its own family's oracles embed, so the
-    catalog can never drift from the per-family gates."""
-    from ..functions import hashing as H
-
-    vseq = "string_agg(phash, '' ORDER BY frame)"
-    return f"""
-WITH {_phash_sql_ctes(modulo)},
-{_audio_sign_sql(modulo)},
-{_video_sql_ctes(modulo)},
-vfp AS (
-  SELECT doc_id, {H.h60_sql(vseq)} AS fingerprint
-  FROM fphash GROUP BY doc_id
-)
-SELECT doc_id, 'image' AS modality, phash AS fingerprint FROM h
-UNION ALL
-SELECT doc_id, 'audio' AS modality, CAST(fingerprint AS VARCHAR) AS fingerprint FROM af
-UNION ALL
-SELECT doc_id, 'video' AS modality, CAST(fingerprint AS VARCHAR) AS fingerprint FROM vfp
 """
 
 

@@ -1,6 +1,6 @@
 """Central query registry: one entry per implemented operator from
-SURVEY.md §2, each with a DataFrame builder and (where SQL-expressible)
-a DuckDB oracle string over the same parquet fixtures.
+SURVEY.md §2, each with a DataFrame builder and a DuckDB oracle string
+over the same parquet fixtures. `QUERIES` keeps registration order.
 
 `__spark_entry__.py` re-exports this; tests/test_oracle.py replays the
 driver's compare (row count + schema + order-insensitive values) at
@@ -33,7 +33,7 @@ from ..streaming import ingest as streaming_ingest
 @dataclass
 class Query:
     builder: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None = None
+    oracle: str
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 def _registry() -> dict[str, Query]:
@@ -1127,6 +1127,13 @@ def _registry() -> dict[str, Query]:
         multimodal.audio_dup_pairs_oracle(),
         ("multimodal", "dedup", "udf"),
     )
+    # loudness-invariant audio front door: arriving recordings whose
+    # sign-sequence fingerprint the known corpus already holds are dropped
+    r["audio_ingest_dedup"] = Query(
+        lambda spark, sf: multimodal.audio_ingest_dedup(spark, sf),
+        multimodal.audio_ingest_dedup_oracle(),
+        ("multimodal", "audio", "ingest"),
+    )
 
     # --- event-time analytics (streaming twins in streaming/events.py) ---
     r["windowed_event_counts"] = Query(
@@ -1152,188 +1159,10 @@ def _registry() -> dict[str, Query]:
     )
     return r
 
-# The driver adjudicates a 50-query prefix window per round. A 50-slot
-# window over a 195-query registry takes FOUR rounds to cycle the
-# whole registry — that is the honest staleness ceiling (COVERAGE.md
-# states the 4-round invariant). The window is the concatenation of
-# NAMED COHORT TUPLES, weakest evidence first; the cohort arithmetic
-# (each tuple's length, their sum, the registry count above) is
-# machine-checked by tests/test_registry_window.py — the hand-
-# maintained prose counts drifted three rounds running (r7/r8/r9
-# advisories), so the counts now live in code, not prose.
-# Every query is self-contained, so order carries no semantics.
-
-# Round-13 ordering (optimization round — no new registrations, so the
-# whole window rotates to the stale backlog):
-# cohort r9-stale (46): every query whose newest driver row is round 9
-# — the full r9 cohort the r12 window had to queue (its slots went to
-# the eight new audio/ingest queries plus the r8 backlog). After r13
-# lands green, no query's newest driver row predates r10.
-_R13_R9_STALE = (
-    "bigram_lm_score",
-    "bpe_encode_sample",
-    "bpe_fertility_report",
-    "bpe_merges",
-    "bpe_vocab",
-    "clear_gameplay",
-    "constraint_audit",
-    "index_lifecycle_report",
-    "ivf_silhouette",
-    "join_skew_advisor",
-    "k_anonymity_report",
-    "knn_label_accuracy",
-    "length_bucket_plan",
-    "media_features",
-    "merge_games_gather",
-    "merge_games_rolimons",
-    "merge_games_search",
-    "mixture_report",
-    "mixture_reweight",
-    "ngram_dropped_shingles",
-    "per_group_sample",
-    "pii_scrub",
-    "pmi_collocations",
-    "prune_counts",
-    "prune_games",
-    "quality_filter",
-    "repeated_substring_spans",
-    "repetition_budget_plan",
-    "retention_curve",
-    "scrubbed_token_counts",
-    "semantic_diverse_sample",
-    "sessionize",
-    "simhash_dropped_bands",
-    "skew_profile",
-    "source_divergence",
-    "stored_roundtrip_audit",
-    "substring_scrub",
-    "token_shards_stored",
-    "token_shards_upsert",
-    "tokenizer_lifecycle_report",
-    "top_quality_per_source",
-    "training_corpus",
-    "user_activity_entropy",
-    "user_retention",
-    "windowed_event_counts",
-    "zone_map_pruning",
-)
-# cohort r10-fill (4): filler slots spent on the r10 queries this
-# round's optimization work touches most directly —
-# minhash_jaccard_estimates (the r12 DECIMAL output-dtype regression
-# the r12 ADVICE ordered back into the correctness run, fixed here),
-# ingest_decision_report (r13 A/B target), ivf_train (layout-repair
-# path), winsorized_event_stats_approx (the r12 driver-run outlier —
-# a fresh row settles noise-vs-real).
-_R13_R10_FILL = (
-    "minhash_jaccard_estimates",
-    "ingest_decision_report",
-    "ivf_train",
-    "winsorized_event_stats_approx",
-)
-
-_ADJUDICATE_FIRST = _R13_R9_STALE + _R13_R10_FILL
-
-# R14 ROTATION PRE-STAGE (do not merge into _registry() before the
-# rotation: the window is exactly full and the tripwire requires every
-# unadjudicated registry query to be windowed; r13 was an optimization
-# round, which adds no features, so the merge moved from r13 to the
-# next BUILD round). Built, oracle'd, and pytest-pinned in the r12
-# post-gate build (operators/multimodal.py), each verified hash-green
-# against its DuckDB oracle at sf0.001/0.01/0.1; the blanket plan
-# invariants (tests/test_plans.py) scan this dict alongside QUERIES so
-# the no-cartesian / no-row-UDF / oracle-parses discipline holds
-# pre-registration. At the next build round: merge these into
-# _registry(), window them + the oldest of the 45-query r10 cohort
-# (registry grows past 200, CYCLE_ROUNDS becomes 5; the r10 leftovers
-# lead the following window).
-
-
-def _pending_r13() -> dict[str, Query]:
-    return {
-        "video_features": Query(
-            lambda spark, sf: multimodal.video_features(spark, sf),
-            multimodal.video_features_oracle(),
-            ("multimodal", "video"),
-        ),
-        "video_frame_phash": Query(
-            lambda spark, sf: multimodal.video_frame_phash(spark, sf),
-            multimodal.video_frame_phash_oracle(),
-            ("multimodal", "video"),
-        ),
-        "video_scene_cuts": Query(
-            lambda spark, sf: multimodal.video_scene_cuts(spark, sf),
-            multimodal.video_scene_cuts_oracle(),
-            ("multimodal", "video"),
-        ),
-        "video_motion_profile": Query(
-            lambda spark, sf: multimodal.video_motion_profile(spark, sf),
-            multimodal.video_motion_profile_oracle(),
-            ("multimodal", "video"),
-        ),
-        "video_keyframes": Query(
-            lambda spark, sf: multimodal.video_keyframes(spark, sf),
-            multimodal.video_keyframes_oracle(),
-            ("multimodal", "video"),
-        ),
-        "video_dup_pairs": Query(
-            lambda spark, sf: multimodal.video_dup_pairs(spark, sf),
-            multimodal.video_dup_pairs_oracle(),
-            ("multimodal", "video", "dedup"),
-        ),
-        "video_near_dup_pairs": Query(
-            lambda spark, sf: multimodal.video_near_dup_pairs(spark, sf),
-            multimodal.video_near_dup_pairs_oracle(),
-            ("multimodal", "video", "dedup"),
-        ),
-        "video_ingest_dedup": Query(
-            lambda spark, sf: multimodal.video_ingest_dedup(spark, sf),
-            multimodal.video_ingest_dedup_oracle(),
-            ("multimodal", "video", "ingest"),
-        ),
-        "video_ingest_decision_report": Query(
-            lambda spark, sf: multimodal.video_ingest_decision_report(spark, sf),
-            multimodal.video_ingest_decision_report_oracle(),
-            ("multimodal", "video", "ingest"),
-        ),
-        "video_poster_matches": Query(
-            lambda spark, sf: multimodal.video_poster_matches(spark, sf),
-            multimodal.video_poster_matches_oracle(),
-            ("multimodal", "video", "cross-modal"),
-        ),
-        "video_captions": Query(
-            lambda spark, sf: multimodal.video_captions(spark, sf),
-            multimodal.video_captions_oracle(),
-            ("multimodal", "video", "text-track"),
-        ),
-        "video_caption_pairs": Query(
-            lambda spark, sf: multimodal.video_caption_pairs(spark, sf),
-            multimodal.video_caption_pairs_oracle(),
-            ("multimodal", "video", "text-track", "cross-modal"),
-        ),
-        "audio_ingest_dedup": Query(
-            lambda spark, sf: multimodal.audio_ingest_dedup(spark, sf),
-            multimodal.audio_ingest_dedup_oracle(),
-            ("multimodal", "audio", "ingest"),
-        ),
-        "media_fingerprint_catalog": Query(
-            lambda spark, sf: multimodal.media_fingerprint_catalog(spark, sf),
-            multimodal.media_fingerprint_catalog_oracle(),
-            ("multimodal", "cross-modal"),
-        ),
-    }
-
-
-_PENDING_R13: dict[str, Query] = _pending_r13()
-
-def _reordered(r: dict[str, Query]) -> dict[str, Query]:
-    first = {n: r[n] for n in _ADJUDICATE_FIRST if n in r}
-    rest = {n: q for n, q in r.items() if n not in first}
-    return first | rest
-
-QUERIES: dict[str, Query] = _reordered(_registry())
+QUERIES: dict[str, Query] = _registry()
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: q.builder for name, q in QUERIES.items()}
 
 def oracle_sql() -> dict[str, str]:
-    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}
+    return {name: q.oracle for name, q in QUERIES.items()}

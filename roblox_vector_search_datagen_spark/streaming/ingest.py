@@ -243,48 +243,6 @@ def stream_media_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_video_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `operators/multimodal.video_ingest_dedup` —
-    the VIDEO front door (r12): arriving clips are synthesized and
-    fingerprinted per microbatch via `video_clip_fingerprints` (one
-    stateless mapInPandas emitting clip-level cell stacks + a pure
-    Catalyst hash over the nested array — no per-clip groupBy, so no
-    stream state), then stream-static LEFT-ANTI-joined against the
-    known corpus's broadcast fingerprint set. A rescaled or
-    colorspace-converted copy of known footage never reaches the sink
-    even though its bytes are new. Append-mode, no watermark; the
-    known set is a static DataFrame re-resolved per microbatch. The
-    batch side derives the same fingerprints from the persisted
-    per-frame decode (`_video_fingerprints`) — the stream==batch test
-    pins the two formulations to identical values."""
-    from ..operators import multimodal as mm
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    modulo = mm.CONTRACT_MODULO
-    k = F.expr(f"doc_id div {modulo}")
-    jdx = F.expr(f"(doc_id div {modulo}) div {mm.VIDEO_DUP_GROUP}")
-    arriving_media = mm.synthetic_video_media(
-        spark, sf_dir, modulo, docs=stream.select("doc_id")
-    ).filter(k % 2 == 1)
-    arrived = mm.video_clip_fingerprints(
-        spark, sf_dir, modulo, media_df=arriving_media
-    )
-    known = (
-        mm._video_fingerprints(spark, sf_dir, modulo)
-        .filter((k % 2 == 0) & (jdx % 2 == 0))
-        .select("fingerprint")
-        .distinct()
-    )
-    return arrived.join(F.broadcast(known), "fingerprint", "left_anti").select(
-        "doc_id", "colorspace", "fingerprint"
-    )
-
-
 def stream_audio_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `operators/multimodal.audio_ingest_dedup` —
     the loudness-invariant AUDIO front door: arriving recordings are
@@ -319,29 +277,6 @@ def stream_audio_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return arrived.join(F.broadcast(known), "fingerprint", "left_anti").select(
         "doc_id", "fingerprint"
-    )
-
-
-def stream_video_ingest_decision_report(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming twin of the video admission ledger
-    (`operators/multimodal.video_ingest_decision_report`): the
-    arriving side synthesizes, digests, and fingerprints per
-    microbatch (one stateless mapInPandas + the Catalyst nested-array
-    hash), then takes the same two broadcast left-join probes against
-    the static known digest and fingerprint sets — one verdict row per
-    arriving clip, append-mode, no watermark, no stream state."""
-    from ..operators import multimodal as mm
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    return mm.video_ingest_decision_report(
-        spark, sf_dir, docs=stream.select("doc_id")
     )
 
 
@@ -418,27 +353,6 @@ def stream_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = mm.synthetic_audio_media(spark, sf_dir, docs=stream.select("doc_id"))
     return mm.audio_features(spark, sf_dir, media_df=corpus)
-
-
-def stream_video_frame_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `operators/multimodal.video_frame_phash` —
-    the per-frame perceptual-hash plan on an unbounded clip stream:
-    stateless synthesize -> vendored y4m decode (fanning one row per
-    frame) -> Catalyst threshold hash per microbatch; append-mode, no
-    watermark, no stream state. The shape a video-crawl fingerprinting
-    job runs continuously (the per-clip aggregations — features,
-    dup-pair fingerprints — stay batch: they need a complete-mode agg
-    a continuous front door has no use for)."""
-    from ..operators import multimodal as mm
-
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    corpus = mm.synthetic_video_media(spark, sf_dir, docs=stream.select("doc_id"))
-    return mm.video_frame_phash(spark, sf_dir, media_df=corpus)
 
 
 def stream_media_ingest_decision_report(

@@ -84,18 +84,6 @@ def main() -> int:
 
     qs = queries()
     oracles = oracle_sql()
-    if "--pending" in sys.argv:
-        # also run the pre-staged r13 queries (registry._PENDING_R13)
-        # through the same driver-faithful compare — they are outside
-        # the driver's registry until the next window rotation, and
-        # this is the only harness that replays its vanilla-session +
-        # canonicalization edges for them
-        from roblox_vector_search_datagen_spark.plans.registry import _PENDING_R13
-
-        for n, q in _PENDING_R13.items():
-            qs[n] = q.builder
-            if q.oracle:
-                oracles[n] = q.oracle
     only = {a for a in sys.argv[2:] if not a.startswith("--")}
     failures = []
     for name, builder in qs.items():

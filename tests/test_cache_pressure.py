@@ -64,11 +64,11 @@ def _run(sf_dir: str, extra_env: dict) -> subprocess.CompletedProcess:
         # share and cached blocks face real eviction. This squeeze
         # sits ON the eviction/abort boundary: which side a given run
         # lands on depends on query execution order (the registry's
-        # adjudication ordering, which rotates every round) and block
-        # layout. BOTH sides are design-acceptable — recompute-and-
-        # match, or a LOUD task memory-acquisition abort; what the
-        # design forbids, and this test pins, is the third outcome:
-        # a silently WRONG answer served from a corrupted cache.
+        # fixed registration order) and block layout. BOTH sides are
+        # design-acceptable — recompute-and-match, or a LOUD task
+        # memory-acquisition abort; what the design forbids, and this
+        # test pins, is the third outcome: a silently WRONG answer
+        # served from a corrupted cache.
         ("constrained", {"DRIVER_SIM_TESTING_MEMORY": str(64 * 1024 * 1024)}),
     ],
 )

@@ -560,87 +560,3 @@ def test_find_duplicate_audio_command(spark, sf_dir, tmp_path, monkeypatch, caps
     assert capsys.readouterr().out.strip() == ""
     assert cli.main(["findDuplicateAudio", sf_dir, "--cap"]) == 2
     assert "usage" in capsys.readouterr().err
-
-
-@pytest.mark.slow
-def test_video_stats_command(spark, sf_dir, tmp_path, monkeypatch, capsys):
-    """The video family from the shell: per-clip profile rows on the
-    real arm; --cuts switches to scene segmentation, --hashes to the
-    per-frame perceptual hashes."""
-    monkeypatch.setenv("RVSD_DATA_DIR", str(tmp_path / "data"))
-
-    assert cli.main(["videoStats", sf_dir]) == 0
-    rows = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
-    assert rows and all(r["arm"] == "real" and r["fps_num"] == 25 for r in rows)
-
-    assert cli.main(["videoStats", sf_dir, "--cuts"]) == 0
-    cuts = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
-    assert cuts and {"doc_id", "frame", "is_cut", "segment"} <= set(cuts[0])
-
-    assert cli.main(["videoStats", sf_dir, "--hashes"]) == 0
-    hashes = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
-    assert hashes and all(len(h["phash"]) == 64 for h in hashes)
-
-
-@pytest.mark.slow
-def test_find_duplicate_videos_command(spark, sf_dir, tmp_path, monkeypatch, capsys):
-    """Resolution/colorspace-invariant video dedup from the shell:
-    pair rows with a shared fingerprint; --cap 1 drops every bucket;
-    malformed --cap is a usage error."""
-    monkeypatch.setenv("RVSD_DATA_DIR", str(tmp_path / "data"))
-
-    assert cli.main(["findDuplicateVideos", sf_dir]) == 0
-    rows = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
-    assert rows and {"doc_a", "doc_b", "fingerprint", "cross_colorspace"} <= set(rows[0])
-
-    assert cli.main(["findDuplicateVideos", sf_dir, "--cap", "1"]) == 0
-    assert capsys.readouterr().out.strip() == ""
-    assert cli.main(["findDuplicateVideos", sf_dir, "--cap", "oops"]) == 2
-    assert "usage" in capsys.readouterr().err
-
-
-@pytest.mark.slow
-def test_find_near_duplicate_videos_command(spark, sf_dir, tmp_path, monkeypatch, capsys):
-    """Video near-dup search from the shell: the constructed 1/2/3
-    distances surface; --max-hamming 0 finds nothing (near-twin clips
-    have no identical pair); past the pigeonhole bound is refused."""
-    monkeypatch.setenv("RVSD_DATA_DIR", str(tmp_path / "data"))
-
-    assert cli.main(["findNearDuplicateVideos", sf_dir]) == 0
-    rows = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
-    assert rows and {r["max_hamming"] for r in rows} == {1, 2, 3}
-
-    assert cli.main(["findNearDuplicateVideos", sf_dir, "--max-hamming", "0"]) == 0
-    assert capsys.readouterr().out.strip() == ""
-
-    assert cli.main(["findNearDuplicateVideos", sf_dir, "--max-hamming", "9"]) == 2
-    assert "banding" in capsys.readouterr().err
-    assert cli.main(["findNearDuplicateVideos", sf_dir, "--cap", "x"]) == 2
-    assert "usage" in capsys.readouterr().err
-
-
-def test_fingerprint_catalog_command(spark, sf_dir, tmp_path, monkeypatch, capsys):
-    """The cross-modality catalog from the shell: all three modalities
-    present, one row per (doc, modality)."""
-    monkeypatch.setenv("RVSD_DATA_DIR", str(tmp_path / "data"))
-
-    assert cli.main(["fingerprintCatalog", sf_dir]) == 0
-    rows = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
-    assert {r["modality"] for r in rows} == {"image", "audio", "video"}
-    assert len({(r["doc_id"], r["modality"]) for r in rows}) == len(rows)
-
-
-def test_video_captions_command(spark, sf_dir, tmp_path, monkeypatch, capsys):
-    """The text-track family from the shell: parsed cue rows on the
-    real arm; --pairs switches to the (scene, caption, keyframe-hash)
-    training pairs."""
-    monkeypatch.setenv("RVSD_DATA_DIR", str(tmp_path / "data"))
-
-    assert cli.main(["videoCaptions", sf_dir]) == 0
-    rows = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
-    assert rows and all(r["arm"] == "real" and r["text"].startswith("scene ") for r in rows)
-
-    assert cli.main(["videoCaptions", sf_dir, "--pairs"]) == 0
-    pairs = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
-    assert pairs and all(len(p["keyframe_phash"]) == 64 for p in pairs)
-    assert len(pairs) == len(rows)

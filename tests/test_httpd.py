@@ -71,6 +71,25 @@ def test_async_post_over_socket(server):
         time.sleep(1)
     assert job["status"] == "completed", job.get("error")
 
+def test_jobs_page_with_started_and_completed_jobs_encodes(server):
+    """GET /jobs serves a page holding a started and a completed job:
+    every non-null `*_at` field arrives as a string, none as a 400."""
+    base, svc_ = server
+    done = svc_.jobs.create_job("gatherGames")
+    svc_.jobs.start_job(done)
+    svc_.jobs.complete_job(done, "{}")
+    running = svc_.jobs.create_job("pruneGames")
+    svc_.jobs.start_job(running)
+    status, jobs = _get(base, "/jobs")
+    assert status == 200, jobs
+    by_id = {j["id"]: j for j in jobs}
+    assert by_id[done]["status"] == "completed"
+    assert by_id[running]["status"] == "running"
+    for key in ("created_at", "started_at", "completed_at"):
+        assert isinstance(by_id[done][key], str)
+    assert isinstance(by_id[running]["started_at"], str)
+    assert by_id[running]["completed_at"] is None
+
 def test_docs_route(server):
     """/docs serves the interactive docs page (src/api.ts:58-59 mounts
     swagger-ui there; here a self-contained HTML renderer over the live

@@ -1147,289 +1147,6 @@ def test_audio_features_degrades_on_undecodable_blob(spark, sf_dir):
         wav.decode_wav_pcm16(blob[: fmt_at + 12])  # truncated mid-fmt
 
 
-# ---------------------------------------------------------------------------
-# VIDEO family (r12): vendored YUV4MPEG2 codec + decode-once analysis
-
-
-def test_y4m_codec_roundtrip_and_header_walk():
-    """Encode->decode is exact (lossless raw planar data) for both
-    colorspaces across dims and frame counts, the spec's default
-    colorspace (no C tag) is honored, and FRAME-record parameters are
-    accepted per spec."""
-    from roblox_vector_search_datagen_spark.functions import y4m
-
-    for cs, w, h in (("mono", 6, 4), ("mono", 1, 1), ("420jpeg", 8, 2)):
-        for nf in (1, 3):
-            frames = [
-                [[(f * 31 + r * 7 + c * 13) % 256 for c in range(w)] for r in range(h)]
-                for f in range(nf)
-            ]
-            blob = y4m.encode_y4m(frames, 30000, 1001, cs)
-            assert y4m.decode_y4m(blob) == (w, h, 30000, 1001, cs, frames)
-
-    # C tag absent -> 420jpeg per spec; unknown A/X header tags skipped
-    blob = (
-        b"YUV4MPEG2 W2 H2 F25:1 A128:117 Xcolorrange=full\n"
-        b"FRAME\n\x01\x02\x03\x04\x80\x80"
-    )
-    w, h, fn, fd, cs, frames = y4m.decode_y4m(blob)
-    assert (cs, frames) == ("420jpeg", [[[1, 2], [3, 4]]])
-    assert y4m.decode_y4m(b"YUV4MPEG2 W2 H1 F25:1 Cmono\nFRAME Xt=0\n\x05\x06")[5] == [
-        [[5, 6]]
-    ]
-
-
-def test_y4m_codec_refuses_malformed():
-    """The strictness contract: wrong magic, missing W/H/F, unsupported
-    colorspace or interlacing, malformed FRAME records, truncated plane
-    data, zero frames, odd 420 dims — all ValueError, never a silent
-    mis-decode."""
-    from roblox_vector_search_datagen_spark.functions import y4m
-
-    good = y4m.encode_y4m([[[1, 2], [3, 4]]], 25, 1, "mono")
-    assert y4m.decode_y4m(good)[5] == [[[1, 2], [3, 4]]]
-    bad_blobs = [
-        b"not y4m",
-        b"YUV4MPEG3 W2 H2 F25:1\n",  # wrong magic
-        b"YUV4MPEG2 W2 H2\nFRAME\n\x00\x00\x00\x00",  # F missing
-        b"YUV4MPEG2 H2 F25:1\nFRAME\n\x00\x00",  # W missing
-        b"YUV4MPEG2 W2 H2 F25:1 C444\nFRAME\n" + b"\x00" * 12,  # unsupported C
-        b"YUV4MPEG2 W2 H2 F25:1 It Cmono\nFRAME\n" + b"\x00" * 4,  # interlaced
-        b"YUV4MPEG2 W2 H2 F25:1 Cmono\nFRAMX\n" + b"\x00" * 4,  # bad record
-        b"YUV4MPEG2 W2 H2 F25:1 Cmono\nFRAME\n\x00\x00\x00",  # truncated luma
-        b"YUV4MPEG2 W2 H2 F25:1\nFRAME\n" + b"\x00" * 5,  # truncated chroma
-        b"YUV4MPEG2 W2 H2 F25:1 Cmono\n",  # zero frames
-        b"YUV4MPEG2 W3 H2 F25:1 C420jpeg\nFRAME\n" + b"\x00" * 9,  # odd 420 dims
-        b"YUV4MPEG2 W2 H2 Fx:1 Cmono\nFRAME\n" + b"\x00" * 4,  # junk rate
-    ]
-    for blob in bad_blobs:
-        with pytest.raises(ValueError):
-            y4m.decode_y4m(blob)
-    with pytest.raises(ValueError):
-        y4m.encode_y4m([], 25, 1, "mono")
-    with pytest.raises(ValueError):
-        y4m.encode_y4m([[[0, 300]]], 25, 1, "mono")  # sample out of range
-    with pytest.raises(ValueError):
-        y4m.encode_y4m([[[0, 0]]], 0, 1, "mono")  # non-positive rate
-    with pytest.raises(ValueError):
-        y4m.encode_y4m([[[0], [0]]], 25, 1, "420jpeg")  # odd dims for 420
-
-
-def test_y4m_roundtrip_property():
-    """Property (hypothesis): ANY luma frame stack at ANY dims and rate
-    survives encode->decode bit-exactly in both colorspaces (even dims
-    forced for 420) — raw planar data has no lossy path at all."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from roblox_vector_search_datagen_spark.functions import y4m
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        w=st.integers(1, 12),
-        h=st.integers(1, 10),
-        nf=st.integers(1, 4),
-        rate=st.tuples(st.integers(1, 60000), st.integers(1, 1001)),
-        data=st.data(),
-    )
-    def check(w, h, nf, rate, data):
-        frames = [
-            [
-                [data.draw(st.integers(0, 255)) for _ in range(w)]
-                for _ in range(h)
-            ]
-            for _ in range(nf)
-        ]
-        for cs in ("mono", "420jpeg"):
-            if cs == "420jpeg" and (w % 2 or h % 2):
-                continue
-            blob = y4m.encode_y4m(frames, rate[0], rate[1], cs)
-            assert y4m.decode_y4m(blob) == (w, h, rate[0], rate[1], cs, frames)
-
-    check()
-
-
-def test_video_family_oracle_parity(spark, sf_dir):
-    """The video family's value pin: driver-style parity for all four
-    queries, every row on the real arm, both colorspaces present, and
-    the decode-once contract — features' frame counts equal the frame
-    table's per-doc row counts."""
-    from tests.oracle_utils import compare_spark_duckdb
-
-    feats = M.video_features(spark, sf_dir)
-    compare_spark_duckdb(feats, M.video_features_oracle(), sf_dir)
-    frows = feats.collect()
-    assert frows and all(r.arm == "real" for r in frows)
-    assert {r.colorspace for r in frows} == {"mono", "420jpeg"}
-    assert all(r.y_total == r.n_frames * 255 * r.width * r.height // 2 for r in frows)
-
-    compare_spark_duckdb(
-        M.video_frame_phash(spark, sf_dir), M.video_frame_phash_oracle(), sf_dir
-    )
-    compare_spark_duckdb(
-        M.video_scene_cuts(spark, sf_dir), M.video_scene_cuts_oracle(), sf_dir
-    )
-    compare_spark_duckdb(
-        M.video_dup_pairs(spark, sf_dir), M.video_dup_pairs_oracle(), sf_dir
-    )
-
-    per_doc = {
-        r.doc_id: r.cnt
-        for r in M.video_frames(spark, sf_dir)
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    assert per_doc == {r.doc_id: r.n_frames for r in frows}
-
-
-def test_video_scene_cuts_match_brute_force_frame_diff(spark, sf_dir):
-    """The cut flags re-derived by an O(frames) brute force over the
-    EXPECTED pixel patterns (not the lattice formula): mean |diff| of
-    consecutive constructed frames crosses the threshold exactly where
-    the Spark plan says it does, and the margin analysis holds — every
-    cut's distance is >= 255*2/64, every non-cut's is 0."""
-    cuts = {
-        (r.doc_id, r.frame): (r.is_cut, r.segment)
-        for r in M.video_scene_cuts(spark, sf_dir).collect()
-    }
-    docs = sorted({d for d, _ in cuts})
-    assert docs
-    for doc_id in docs:
-        k = doc_id // M.CONTRACT_MODULO
-        frames = M._video_expected_frames(k // M.VIDEO_DUP_GROUP)
-        seg = 0
-        for f in range(len(frames)):
-            if f == 0:
-                expect_cut = False
-            else:
-                dist = 255.0 * sum(
-                    a != b for a, b in zip(frames[f - 1], frames[f])
-                ) / 64.0
-                assert dist == 0.0 or dist >= 255.0 * 2 / 64
-                expect_cut = dist > M.VIDEO_CUT_THRESHOLD
-            seg += expect_cut
-            assert cuts[(doc_id, f)] == (expect_cut, seg), (doc_id, f)
-
-
-def test_video_dup_pairs_invariance_and_cap(spark, sf_dir):
-    """The dedup semantics: every pair joins two clips of one lattice
-    group (same footage at different dims/colorspace), cross-colorspace
-    pairs exist and are flagged correctly, and --cap 1 drops every
-    bucket."""
-    pairs = M.video_dup_pairs(spark, sf_dir).collect()
-    assert pairs
-    cs = {
-        r.doc_id: r.colorspace
-        for r in M.video_features(spark, sf_dir).collect()
-    }
-    gm = M.CONTRACT_MODULO * M.VIDEO_DUP_GROUP
-    for r in pairs:
-        assert r.doc_a // gm == r.doc_b // gm  # same lattice group
-        assert r.cross_colorspace == (cs[r.doc_a] != cs[r.doc_b])
-    assert any(r.cross_colorspace for r in pairs)
-    # complete within-group pair listing (nothing dropped at default cap)
-    from collections import Counter
-
-    per_group = Counter(r.doc_a // gm for r in pairs)
-    sizes = Counter(d // gm for d in cs)
-    assert per_group == {g: n * (n - 1) // 2 for g, n in sizes.items() if n > 1}
-    assert M.video_dup_pairs(spark, sf_dir, bucket_cap=1).count() == 0
-
-
-def test_video_frames_stub_arm_on_undecodable(spark, sf_dir):
-    """A corrupted blob takes arm='stub' with one empty frame row, and
-    the downstream features degrade (fps 0 -> guarded duration 0)
-    instead of crashing — the ANSI-division trap's video face."""
-    corrupt = M.synthetic_video_media(spark, sf_dir).withColumn(
-        "content", F.concat(F.lit(b"XX"), F.col("content"))
-    )
-    out = M.video_frames(spark, sf_dir, media_df=corrupt).collect()
-    assert out and all(
-        r.arm == "stub" and r.cells == [] and r.fps_num == 0 for r in out
-    )
-    ph = M.video_frame_phash(spark, sf_dir, media_df=corrupt).collect()
-    assert ph and all(r.phash == "" and r.arm == "stub" for r in ph)
-
-
-def test_video_keyframes_oracle_parity_and_per_segment(spark, sf_dir):
-    """Keyframe extraction: driver-style parity, exactly ONE keyframe
-    per (clip, segment), and each keyframe is its segment's FIRST
-    frame with that segment's hash."""
-    from tests.oracle_utils import compare_spark_duckdb
-
-    kf = M.video_keyframes(spark, sf_dir)
-    compare_spark_duckdb(kf, M.video_keyframes_oracle(), sf_dir)
-    rows = kf.collect()
-    assert rows
-    seen = {(r.doc_id, r.segment) for r in rows}
-    assert len(seen) == len(rows)  # one keyframe per segment
-    cuts = {
-        (r.doc_id, r.frame): r.segment
-        for r in M.video_scene_cuts(spark, sf_dir).collect()
-    }
-    segs = {(d, s) for (d, _), s in cuts.items()}
-    assert seen == segs  # every segment represented
-    first = {}
-    for (d, f), s in sorted(cuts.items()):
-        first.setdefault((d, s), f)
-    assert {(r.doc_id, r.segment): r.frame for r in rows} == first
-    ph = {
-        (r.doc_id, r.frame): r.phash
-        for r in M.video_frame_phash(spark, sf_dir).collect()
-    }
-    assert all(ph[(r.doc_id, r.frame)] == r.phash for r in rows)
-
-
-def test_video_ingest_dedup_oracle_parity_and_roles(spark, sf_dir):
-    """The video front door: driver-style parity, both branches
-    exercised (some arrivals rejected, some admitted), every survivor
-    from an ODD lattice group, and every rejection a cross-encoding
-    catch (the arriving copy differs from its known twin in BOTH
-    resolution and colorspace)."""
-    from tests.oracle_utils import compare_spark_duckdb
-
-    vid = M.video_ingest_dedup(spark, sf_dir)
-    compare_spark_duckdb(vid, M.video_ingest_dedup_oracle(), sf_dir)
-    survivors = vid.collect()
-    assert survivors
-    mod, grp = M.CONTRACT_MODULO, M.VIDEO_DUP_GROUP
-    arriving = [
-        r.doc_id
-        for r in M._video_fingerprints(spark, sf_dir).collect()
-        if (r.doc_id // mod) % 2 == 1
-    ]
-    assert 0 < len(survivors) < len(arriving)  # both branches taken
-    for r in survivors:
-        assert (r.doc_id // mod) % 2 == 1  # arriving role
-        assert (r.doc_id // mod // grp) % 2 == 1  # admitted: odd group
-        assert r.colorspace == "420jpeg"  # known side is all mono
-
-
-def test_video_clip_fingerprints_match_batch_aggregation(spark, sf_dir):
-    """The two fingerprint formulations — the stateless clip-level
-    path the streaming front door uses and the per-frame groupBy the
-    batch side uses — agree value-for-value, and the clip path's stub
-    arm degrades (empty frames -> hash of '') instead of crashing."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    a = {
-        (r.doc_id, r.colorspace, r.fingerprint)
-        for r in M.video_clip_fingerprints(spark, sf_dir).collect()
-    }
-    b = {
-        (r.doc_id, r.colorspace, r.fingerprint)
-        for r in M._video_fingerprints(spark, sf_dir).collect()
-    }
-    assert a and a == b
-
-    corrupt = M.synthetic_video_media(spark, sf_dir).withColumn(
-        "content", F.concat(F.lit(b"XX"), F.col("content"))
-    )
-    rows = M.video_clip_fingerprints(spark, sf_dir, media_df=corrupt).collect()
-    assert rows and all(r.arm == "stub" and r.colorspace == "" for r in rows)
-
-
 def test_audio_ingest_dedup_oracle_parity_and_roles(spark, sf_dir):
     """The audio front door: driver-style parity, both branches
     exercised, and the semantics — every rejected arrival shares its
@@ -1457,261 +1174,3 @@ def test_audio_ingest_dedup_oracle_parity_and_roles(spark, sf_dir):
     # audio_dup_pairs) — here pin the class-arithmetic role split:
     for d in arriving - survivors:
         assert (d // mod) % 2 == 0
-
-
-def test_video_ingest_decision_report_parity_and_verdicts(spark, sf_dir):
-    """The video admission ledger: driver-style parity, one row per
-    arriving clip, verdict precedence respected, the digest probe real
-    but never firing (arriving 420jpeg can't byte-match known mono),
-    and agreement with the survivor query — accepted == survivors."""
-    from tests.oracle_utils import compare_spark_duckdb
-
-    rep = M.video_ingest_decision_report(spark, sf_dir)
-    compare_spark_duckdb(rep, M.video_ingest_decision_report_oracle(), sf_dir)
-    rows = rep.collect()
-    assert rows and all(not r.is_exact_dup for r in rows)
-    assert {r.verdict for r in rows} == {"perceptual_dup", "accepted"}
-    accepted = {r.doc_id for r in rows if r.verdict == "accepted"}
-    survivors = {r.doc_id for r in M.video_ingest_dedup(spark, sf_dir).collect()}
-    assert accepted == survivors
-    mod = M.CONTRACT_MODULO
-    assert all((r.doc_id // mod) % 2 == 1 for r in rows)  # arriving role only
-
-
-def test_video_near_dup_pairs_oracle_parity_and_exact_pair_set(spark, sf_dir):
-    """The video near-dup escalation: driver-style parity, and the
-    pair set pinned against an O(n^2) brute force over the EXPECTED
-    flipped frame bits — every constructed distance-1/2/3 pair found
-    with its exact max aligned-frame Hamming, the 8-flip member
-    excluded by the frame-0 banding itself (it shares no band value
-    with any sibling), and no cross-group pair."""
-    from tests.oracle_utils import compare_spark_duckdb
-
-    nd = M.video_near_dup_pairs(spark, sf_dir)
-    compare_spark_duckdb(nd, M.video_near_dup_pairs_oracle(), sf_dir)
-    got = {(r.doc_a, r.doc_b): (r.n_frames, r.max_hamming) for r in nd.collect()}
-    assert got
-
-    mod, grp = M.CONTRACT_MODULO, M.VIDEO_DUP_GROUP
-    docs = sorted(
-        d
-        for (d,) in duckdb.sql(
-            f"SELECT doc_id FROM '{sf_dir}/documents.parquet' "
-            f"WHERE doc_id % {mod} = {7 * mod // 8}"
-        ).fetchall()
-    )
-
-    def member_frames(doc_id):
-        k = doc_id // mod
-        flips = M.PHASH_NEAR_FLIP_SETS[k % grp]
-        return [
-            [1 - b if i in flips else b for i, b in enumerate(bits)]
-            for bits in M._video_expected_frames(k // grp)
-        ]
-
-    expected = {}
-    for ia, da in enumerate(docs):
-        fa = member_frames(da)
-        for db in docs[ia + 1 :]:
-            fb = member_frames(db)
-            if len(fa) != len(fb):
-                continue
-            maxh = max(
-                sum(x != y for x, y in zip(pa, pb)) for pa, pb in zip(fa, fb)
-            )
-            # frame-0 banding completeness bound: only pairs agreeing on
-            # >= 1 frame-0 band are discoverable; Hamming <= 3 guarantees
-            # that, the 8-flip member never does (2 flips per band)
-            if maxh <= M.PHASH_NEAR_MAX_HAMMING:
-                expected[(da, db)] = (len(fa), maxh)
-    assert got == expected
-    assert {h for _, h in got.values()} == {1, 2, 3}
-    for (da, db) in got:
-        assert da // (mod * grp) == db // (mod * grp)  # same lattice group
-
-
-def test_media_fingerprint_catalog_parity_and_union_semantics(spark, sf_dir):
-    """The cross-modality catalog: driver-style parity, one row per
-    (doc, modality), and value agreement with each family's own
-    fingerprint table."""
-    from tests.oracle_utils import compare_spark_duckdb
-
-    cat = M.media_fingerprint_catalog(spark, sf_dir)
-    compare_spark_duckdb(cat, M.media_fingerprint_catalog_oracle(), sf_dir)
-    rows = cat.collect()
-    assert {r.modality for r in rows} == {"image", "audio", "video"}
-    assert len({(r.doc_id, r.modality) for r in rows}) == len(rows)
-    img = {r.doc_id: r.phash for r in M.media_phash(spark, sf_dir).collect()}
-    aud = {
-        r.doc_id: str(r.fingerprint)
-        for r in M.audio_sign_fingerprint(spark, sf_dir).collect()
-    }
-    vid = {
-        r.doc_id: str(r.fingerprint)
-        for r in M._video_fingerprints(spark, sf_dir).collect()
-    }
-    by_mod = {"image": img, "audio": aud, "video": vid}
-    for r in rows:
-        assert by_mod[r.modality][r.doc_id] == r.fingerprint
-
-
-def test_video_poster_matches_cross_modality_join(spark, sf_dir):
-    """The cross-modality perceptual join: driver-style parity, every
-    match pairs poster k with a clip of video lattice group k at its
-    frame-0 keyframe, every group member matched, and the poster's
-    IMAGE-decoded hash equals the clip's VIDEO-decoded hash — two
-    codec chains landing on one fingerprint."""
-    from tests.oracle_utils import compare_spark_duckdb
-
-    vm = M.video_poster_matches(spark, sf_dir)
-    compare_spark_duckdb(vm, M.video_poster_matches_oracle(), sf_dir)
-    rows = vm.collect()
-    assert rows
-    mod, grp = M.CONTRACT_MODULO, M.VIDEO_DUP_GROUP
-    assert all(r.frame == 0 for r in rows)
-    for r in rows:
-        assert r.poster_doc_id % mod == 5 * mod // 8
-        assert r.video_doc_id % mod == 3 * mod // 8
-        assert (r.video_doc_id // mod) // grp == r.poster_doc_id // mod
-    # every clip whose group has a poster doc is matched exactly once
-    posters = {r.poster_doc_id // mod for r in rows}
-    videos = {r.doc_id: r for r in M.video_features(spark, sf_dir).collect()}
-    expect = {
-        d for d in videos if (d // mod) // grp in posters
-    }
-    assert {r.video_doc_id for r in rows} == expect
-    assert len(rows) == len(expect)
-
-
-def test_video_cell_threshold_scale_invariance_property():
-    """Property (hypothesis): for ANY 8x8 bit pattern with 0 < ones <
-    64 and ANY dims that render cells as exact integer rectangles, the
-    decode-free kernel chain (render -> _frame_cells -> threshold at
-    the cell mean) recovers the pattern exactly — the invariance that
-    makes a clip's frame hashes stable across every resolution the
-    corpus re-encodes it at."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=60, deadline=None)
-    @given(
-        bits=st.lists(st.integers(0, 1), min_size=64, max_size=64).filter(
-            lambda b: 0 < sum(b) < 64
-        ),
-        wmul=st.integers(1, 6),
-        hmul=st.integers(1, 4),
-    )
-    def check(bits, wmul, hmul):
-        w, h = wmul * 8, hmul * 8
-        frame = [
-            [255 * bits[(r * 8 // h) * 8 + (c * 8 // w)] for c in range(w)]
-            for r in range(h)
-        ]
-        cells = M._frame_cells(frame)
-        mean = sum(cells) / 64.0
-        assert [1 if c > mean else 0 for c in cells] == bits
-
-    check()
-
-
-def test_video_motion_profile_pins_cut_magnitudes(spark, sf_dir):
-    """Motion intensity: driver-style parity, zero within scenes,
-    and every cut's magnitude exactly 255 * hamming(prev, cur) / 64
-    recomputed from the expected patterns — the numeric pin on top of
-    scene_cuts' boolean one."""
-    from tests.oracle_utils import compare_spark_duckdb
-
-    mp = M.video_motion_profile(spark, sf_dir)
-    compare_spark_duckdb(mp, M.video_motion_profile_oracle(), sf_dir)
-    motion = {(r.doc_id, r.frame): r.motion for r in mp.collect()}
-    cuts = {
-        (r.doc_id, r.frame): r.is_cut
-        for r in M.video_scene_cuts(spark, sf_dir).collect()
-    }
-    assert motion and set(motion) == set(cuts)
-    for (d, f), m in motion.items():
-        if not cuts[(d, f)]:
-            assert m == 0.0
-            continue
-        frames = M._video_expected_frames((d // M.CONTRACT_MODULO) // M.VIDEO_DUP_GROUP)
-        expect = 255.0 * sum(a != b for a, b in zip(frames[f - 1], frames[f])) / 64.0
-        assert m == round(expect, 6)
-
-
-def test_srt_codec_roundtrip_and_refusals():
-    """Encode->decode is exact for multi-cue, multi-line, hour-plus
-    tracks; dot-separator, BOM, and CRLF variants from common tools
-    decode; malformed blocks (wrong index, bad arrow, minutes > 59,
-    end <= start, empty text, non-UTF-8) are ValueError."""
-    from roblox_vector_search_datagen_spark.functions import srt
-
-    cues = [(0, 1200, "hello"), (1200, 3_600_123, "two\nlines"), (3_600_123, 3_600_124, "x")]
-    assert srt.decode_srt(srt.encode_srt(cues)) == cues
-    alt = (
-        "﻿1\r\n00:00:00.000 --> 00:00:01.500\r\nhey\r\n\r\n"
-        "2\r\n00:00:01,500 --> 00:00:02,000\r\nyo\r\n"
-    )
-    assert srt.decode_srt(alt.encode()) == [(0, 1500, "hey"), (1500, 2000, "yo")]
-    bad = [
-        b"",
-        b"junk",
-        b"1\n00:00:00,000 --> 00:00:00,000\nx\n",
-        b"2\n00:00:00,000 --> 00:00:01,000\nx\n",
-        b"1\n00:00:00,000 -> 00:00:01,000\nx\n",
-        b"1\n00:61:00,000 --> 00:61:01,000\nx\n",
-        b"1\n00:00:00,000 --> 00:00:01,000\n\n",
-        b"\xff\xfe junk",
-    ]
-    for blob in bad:
-        with pytest.raises(ValueError):
-            srt.decode_srt(blob)
-    with pytest.raises(ValueError):
-        srt.encode_srt([])
-    with pytest.raises(ValueError):
-        srt.encode_srt([(5, 5, "x")])
-    # strict roundtrip: text the decoder would refuse or normalize is
-    # refused at ENCODE time (self-review r12)
-    for bad_text in ("\nhi", "hi\n", " hi", "a\n\nb", "cr\rlf"):
-        with pytest.raises(ValueError):
-            srt.encode_srt([(0, 1000, bad_text)])
-
-
-def test_video_captions_and_pairs_parity(spark, sf_dir):
-    """The text-track family: driver-style parity for both queries;
-    the caption-keyframe join is TOTAL (one pair per scene — a
-    dropped row in either decode chain changes the count); cue spans
-    tile each clip's duration exactly; stub arm on corrupt blobs."""
-    from tests.oracle_utils import compare_spark_duckdb
-
-    caps = M.video_captions(spark, sf_dir)
-    compare_spark_duckdb(caps, M.video_captions_oracle(), sf_dir)
-    pairs = M.video_caption_pairs(spark, sf_dir)
-    compare_spark_duckdb(pairs, M.video_caption_pairs_oracle(), sf_dir)
-
-    crows = caps.collect()
-    prows = pairs.collect()
-    assert len(crows) == len(prows) > 0
-    segs = {
-        (r.doc_id, r.segment)
-        for r in M.video_scene_cuts(spark, sf_dir).collect()
-    }
-    assert {(r.doc_id, r.segment) for r in prows} == segs
-    # cues tile [0, duration) without gap or overlap
-    feats = {r.doc_id: r for r in M.video_features(spark, sf_dir).collect()}
-    by_doc = {}
-    for r in sorted(crows, key=lambda r: (r.doc_id, r.cue)):
-        by_doc.setdefault(r.doc_id, []).append(r)
-    for doc_id, cues in by_doc.items():
-        assert cues[0].start_ms == 0
-        for a, b in zip(cues, cues[1:]):
-            assert a.end_ms == b.start_ms
-        assert cues[-1].end_ms == feats[doc_id].duration_ms
-        assert all(c.text == f"scene {c.cue - 1} of clip {doc_id // M.CONTRACT_MODULO // M.VIDEO_DUP_GROUP}" for c in cues)
-
-    from pyspark.sql import functions as F  # noqa: F811
-
-    corrupt = M.synthetic_caption_media(spark, sf_dir).withColumn(
-        "content", F.concat(F.lit(b"XX"), F.col("content"))
-    )
-    out = M.video_captions(spark, sf_dir, media_df=corrupt).collect()
-    assert out and all(r.arm == "stub" and r.text == "" for r in out)

@@ -342,13 +342,10 @@ def test_no_registry_plan_has_cartesian_or_row_udf(spark, sf_dir):
     CartesianProduct (quadratic join fallback) and no BatchEvalPython
     (row-at-a-time Python in a relational path). Arrow mapInPandas
     stages are allowed — that is the sanctioned UDF form."""
-    from roblox_vector_search_datagen_spark.plans.registry import (
-        _PENDING_R13,
-        QUERIES,
-    )
+    from roblox_vector_search_datagen_spark.plans.registry import QUERIES
 
     flagged = []
-    for name, q in (QUERIES | _PENDING_R13).items():
+    for name, q in QUERIES.items():
         p = plan_of(q.builder(spark, sf_dir))
         marks = [m for m in ("CartesianProduct", "BatchEvalPython") if m in p]
         if marks:
@@ -361,10 +358,7 @@ def test_every_oracle_parses_in_duckdb(sf_dir):
     for the whole registry twice."""
     import duckdb
 
-    from roblox_vector_search_datagen_spark.plans.registry import (
-        _PENDING_R13,
-        QUERIES,
-    )
+    from roblox_vector_search_datagen_spark.plans.registry import QUERIES
     from roblox_vector_search_datagen_spark.sources.tables import TPCH_TABLES
 
     con = duckdb.connect()
@@ -373,9 +367,7 @@ def test_every_oracle_parses_in_duckdb(sf_dir):
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     bad = []
-    for name, q in (QUERIES | _PENDING_R13).items():
-        if q.oracle is None:
-            continue
+    for name, q in QUERIES.items():
         try:
             con.execute(f"EXPLAIN {q.oracle}")
         except Exception as ex:
@@ -1105,8 +1097,6 @@ def test_oracle_schema_parity_without_execution(spark, sf_dir):
         )
     bad = []
     for name, q in QUERIES.items():
-        if q.oracle is None:
-            continue
         spark_types = {c.lower(): t for c, t in q.builder(spark, sf_dir).dtypes}
         desc = con.execute(f"DESCRIBE {q.oracle}").fetchall()
         duck_types = {r[0].lower(): r[1] for r in desc}

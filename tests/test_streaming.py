@@ -698,47 +698,6 @@ def test_stream_audio_features_matches_batch(spark, sf_dir):
     assert streamed == batch
 
 
-def test_stream_video_frame_phash_matches_batch(spark, sf_dir):
-    """The video fingerprint's streaming twin (r12): per-microbatch
-    synthesize+y4m-decode+threshold hash equals the batch rows
-    exactly (the frame fan-out rides inside the stateless decode, so
-    append mode needs no stream state)."""
-    from roblox_vector_search_datagen_spark.operators import multimodal as mm
-    from roblox_vector_search_datagen_spark.streaming import ingest
-
-    batch = {tuple(r) for r in mm.video_frame_phash(spark, sf_dir).collect()}
-    assert batch
-    q = S.run_stream_to_memory(
-        ingest.stream_video_frame_phash(spark, sf_dir),
-        "video_phash",
-        output_mode="append",
-    )
-    q.awaitTermination(180)
-    streamed = {tuple(r) for r in spark.sql("SELECT * FROM video_phash").collect()}
-    assert streamed == batch
-
-
-def test_stream_video_ingest_dedup_matches_batch(spark, sf_dir):
-    """The video front door's streaming twin (r12): stateless
-    per-microbatch clip fingerprinting + broadcast anti-join equals
-    the batch survivors exactly — pinning the two fingerprint
-    formulations (stateless nested-array path vs persisted per-frame
-    groupBy) to identical values."""
-    from roblox_vector_search_datagen_spark.operators import multimodal as mm
-    from roblox_vector_search_datagen_spark.streaming import ingest
-
-    batch = {tuple(r) for r in mm.video_ingest_dedup(spark, sf_dir).collect()}
-    assert batch
-    q = S.run_stream_to_memory(
-        ingest.stream_video_ingest_dedup(spark, sf_dir),
-        "video_ingest",
-        output_mode="append",
-    )
-    q.awaitTermination(180)
-    streamed = {tuple(r) for r in spark.sql("SELECT * FROM video_ingest").collect()}
-    assert streamed == batch
-
-
 def test_stream_audio_ingest_dedup_matches_batch(spark, sf_dir):
     """The audio front door's streaming twin: per-microbatch stateless
     sign-fingerprinting + broadcast anti-join equals the batch
@@ -755,25 +714,4 @@ def test_stream_audio_ingest_dedup_matches_batch(spark, sf_dir):
     )
     q.awaitTermination(180)
     streamed = {tuple(r) for r in spark.sql("SELECT * FROM audio_ingest").collect()}
-    assert streamed == batch
-
-
-def test_stream_video_ingest_decision_report_matches_batch(spark, sf_dir):
-    """The video ledger's streaming twin: one stateless decode pass +
-    two broadcast probes per microbatch equals the batch ledger
-    exactly."""
-    from roblox_vector_search_datagen_spark.operators import multimodal as mm
-    from roblox_vector_search_datagen_spark.streaming import ingest
-
-    batch = {
-        tuple(r) for r in mm.video_ingest_decision_report(spark, sf_dir).collect()
-    }
-    assert batch
-    q = S.run_stream_to_memory(
-        ingest.stream_video_ingest_decision_report(spark, sf_dir),
-        "video_ledger",
-        output_mode="append",
-    )
-    q.awaitTermination(180)
-    streamed = {tuple(r) for r in spark.sql("SELECT * FROM video_ledger").collect()}
     assert streamed == batch
