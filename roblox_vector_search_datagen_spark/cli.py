@@ -26,11 +26,12 @@ Command -> engine mapping:
 from __future__ import annotations
 
 import json
+import os
 import sys
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -127,14 +128,12 @@ def download_descriptions(
     ONLY when their description was null to begin with (the reference
     nulls only when needsDescription holds, downloadDescriptions.ts:
     66-76) — a game in the worklist purely for a missing playerCount
-    keeps its real description (J3)."""
+    keeps its real description (J3). Returns the non-null descriptions
+    in the rewritten table."""
     g = corpus.games()
     wl = g.filter(F.col("description").isNull() | F.col("playerCount").isNull()).select("universeId")
     if wl.isEmpty():
         return 0
-    # persist: the enrich lineage fires live HTTP calls; without it the
-    # count + write pair below would execute every fetch twice (and a
-    # nondeterministic endpoint could make the two runs disagree)
     details = (
         http.enrich_with_game_details(wl, transport_factory, concurrency=concurrency, retry=retry)
         .select(
@@ -143,7 +142,6 @@ def download_descriptions(
             F.col("playing").alias("n_pc"),
             F.lit(1).alias("_returned"),
         )
-        .persist()
     )
     wl_flag = wl.withColumn("_wl", F.lit(1))
     out = (
@@ -163,10 +161,9 @@ def download_descriptions(
             .alias("playerCount"),
         )
     )
-    n = out.filter(F.col("description").isNotNull()).count()
-    corpus.write_games(out)
-    details.unpersist()
-    return n
+    obs = Observation()
+    corpus.write_games(out.observe(obs, F.count("description").alias("n")))
+    return obs.get["n"]
 
 def download_images(
     corpus: Corpus,
@@ -185,15 +182,12 @@ def download_images(
     if wl.isEmpty():
         return 0
     fetched = http.download_images(wl, transport_factory, concurrency=concurrency, retry=retry)
-    # persist before the count + write pair: without it every image
-    # downloads twice (once per action over the mapInPandas lineage)
     fresh = fetched.join(
         corpus.images().select("universeId", "kind"), ["universeId", "kind"], "left_anti"
-    ).persist()
-    n = fresh.count()
-    corpus.write_images(fresh, mode="append")
-    fresh.unpersist()
-    return n
+    )
+    obs = Observation()
+    corpus.write_images(fresh.observe(obs, F.count(F.lit(1)).alias("n")), mode="append")
+    return obs.get["n"]
 
 def generate_gameplay_descriptions(
     corpus: Corpus,
@@ -220,11 +214,14 @@ def generate_gameplay_descriptions(
         "universeId", F.col("b64").alias("thumb_b64")
     )
     wl = wl.join(icon, "universeId", "left").join(thumb, "universeId", "left")
-    # persist: the LLM lineage is referenced by both the merge-write and
-    # the returned count — one generation pass, not two
-    descs = http.generate_descriptions(
-        wl, transport_factory, base_url=base_url, model=model, concurrency=concurrency, retry=retry
-    ).select("universeId", F.col("gameplayDescription").alias("n_gp")).persist()
+    obs = Observation()
+    descs = (
+        http.generate_descriptions(
+            wl, transport_factory, base_url=base_url, model=model, concurrency=concurrency, retry=retry
+        )
+        .select("universeId", F.col("gameplayDescription").alias("n_gp"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+    )
     out = (
         g.join(descs, "universeId", "left")
         .select(
@@ -236,10 +233,8 @@ def generate_gameplay_descriptions(
             "playerCount",
         )
     )
-    n = descs.count()
     corpus.write_games(out)
-    descs.unpersist()
-    return n
+    return obs.get["n"]
 
 def generate_embeddings(
     corpus: Corpus,
@@ -261,14 +256,12 @@ def generate_embeddings(
     )
     if wl.isEmpty():
         return 0
-    # persist: one embedding-API pass feeds both the count and the sink
     vecs = http.embed_texts(
         wl, transport_factory, base_url=base_url, model=model, concurrency=concurrency, retry=retry
-    ).persist()
-    n = vecs.count()
-    corpus.write_embeddings(vecs, mode="append")
-    vecs.unpersist()
-    return n
+    )
+    obs = Observation()
+    corpus.write_embeddings(vecs.observe(obs, F.count(F.lit(1)).alias("n")), mode="append")
+    return obs.get["n"]
 
 # ---------------------------------------------------------------------------
 # local commands
@@ -327,10 +320,10 @@ def search_games(corpus: Corpus, query: str, limit: int = 10) -> DataFrame:
     )
 
 def clear_gameplay_descriptions(corpus: Corpus) -> int:
-    g = corpus.games()
-    n = g.count()
+    obs = Observation()
+    g = corpus.games().observe(obs, F.count(F.lit(1)).alias("n"))
     corpus.write_games(g.withColumn("gameplayDescription", F.lit(None).cast("string")))
-    return n
+    return obs.get["n"]
 
 def process_games_from_search(
     corpus: Corpus,
@@ -415,16 +408,25 @@ COMMANDS = (
     "findDuplicateAudio",
 )
 
+def _sf_dir(args: list[str], at: int = 0) -> str:
+    """The positional sf_dir at `at`, or $SPARK_GRAFT_SF_DIR when that
+    position is missing or holds a `--flag`."""
+    if len(args) > at and not args[at].startswith("--"):
+        return args[at]
+    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+
+def _flag(args: list[str], flag: str, default):
+    """The value after `flag` in args, `default` when the flag is
+    absent; IndexError when the flag is the last argument."""
+    return args[args.index(flag) + 1] if flag in args else default
+
 def _int_flag(args: list[str], flag: str, default: int) -> int | None:
     """Parse `<flag> <int>` from args: `default` when the flag is
     absent, None when its value is missing or not an integer (the
     caller prints its usage line and exits 2). One definition for
     every pair-search command's cap/threshold flags."""
-    if flag not in args:
-        return default
-    at = args.index(flag)
     try:
-        return int(args[at + 1])
+        return int(_flag(args, flag, default))
     except (IndexError, ValueError):
         return None
 
@@ -434,8 +436,6 @@ def main(argv: list[str] | None = None) -> int:
     if not argv or argv[0] not in COMMANDS:
         print(f"usage: cli <command> [args]; commands: {', '.join(COMMANDS)}", file=sys.stderr)
         return 2
-    import os
-
     from .session import get_spark
 
     cmd, args = argv[0], argv[1:]
@@ -470,7 +470,7 @@ def main(argv: list[str] | None = None) -> int:
     elif cmd == "findSimilarGames":
         show(find_similar_games(corpus, int(args[0])), ranked=True)
     elif cmd == "search":
-        limit = int(args[args.index("--limit") + 1]) if "--limit" in args else 10
+        limit = int(_flag(args, "--limit", 10))
         show(search_games(corpus, args[0], limit), ranked=True)
     elif cmd == "clearGameplayDescriptions":
         print(clear_gameplay_descriptions(corpus))
@@ -486,9 +486,8 @@ def main(argv: list[str] | None = None) -> int:
         from .jobs.manager import JobManager
         from .sources import sqlite_jobs
 
-        data_dir = os.environ.get("RVSD_DATA_DIR", "data")
-        log = args[args.index("--log") + 1] if "--log" in args else os.path.join(data_dir, "joblog")
-        db = args[args.index("--db") + 1] if "--db" in args else os.path.join(data_dir, "jobs.db")
+        log = _flag(args, "--log", os.path.join(corpus.data_dir, "joblog"))
+        db = _flag(args, "--db", os.path.join(corpus.data_dir, "jobs.db"))
         n = sqlite_jobs.write_jobs_db(JobManager(spark, log).current(), db)
         print(json.dumps({"db": db, "jobs": n}))
     elif cmd == "importJobsDb":
@@ -497,9 +496,8 @@ def main(argv: list[str] | None = None) -> int:
         from .jobs.manager import JobManager
         from .sources import sqlite_jobs
 
-        data_dir = os.environ.get("RVSD_DATA_DIR", "data")
-        db = args[args.index("--db") + 1] if "--db" in args else os.path.join(data_dir, "jobs.db")
-        log = args[args.index("--log") + 1] if "--log" in args else os.path.join(data_dir, "joblog")
+        db = _flag(args, "--db", os.path.join(corpus.data_dir, "jobs.db"))
+        log = _flag(args, "--log", os.path.join(corpus.data_dir, "joblog"))
         n = JobManager(spark, log).seed_from(sqlite_jobs.read_jobs_db(spark, db))
         print(json.dumps({"log": log, "jobs": n}))
     elif cmd == "explainQuery":
@@ -512,17 +510,15 @@ def main(argv: list[str] | None = None) -> int:
         if name not in QUERIES:
             print(f"unknown query {name!r}; known: {', '.join(sorted(QUERIES))}", file=sys.stderr)
             return 2
-        sf_dir = args[1] if len(args) > 1 else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args, at=1)
         QUERIES[name].builder(spark, sf_dir).explain("formatted")
     elif cmd == "optimizeStorage":
         # co-bucket the corpus tables on the join key so every later
         # games<->embeddings equi-join is exchange-free (plans/bucketing)
         from .plans import bucketing
 
-        sf_dir = args[0] if args else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-        buckets = int(args[args.index("--buckets") + 1]) if "--buckets" in args else 32
+        sf_dir = _sf_dir(args)
+        buckets = int(_flag(args, "--buckets", 32))
         g, e = bucketing.cobucket_corpus(spark, sf_dir, buckets=buckets)
         print(json.dumps({"games_bucketed": g.count(), "game_embeddings_bucketed": e.count(), "buckets": buckets}))
     elif cmd == "buildVectorIndex":
@@ -533,12 +529,8 @@ def main(argv: list[str] | None = None) -> int:
         # [--out dir])
         from .operators import ann
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
-        out = args[args.index("--out") + 1] if "--out" in args else os.path.join(
-            os.environ.get("RVSD_DATA_DIR", "data"), "vector_index"
-        )
+        sf_dir = _sf_dir(args)
+        out = _flag(args, "--out", os.path.join(corpus.data_dir, "vector_index"))
         counts = {}
         for name, df in (
             ("ivf_assignments", ann.ivf_assignments(spark, sf_dir)),
@@ -567,14 +559,10 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"{flag} requires a value\n{usage}", file=sys.stderr)
                 return 2
         qtext = args[0]
-        sf_dir = args[1] if len(args) > 1 and not args[1].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
-        idx = args[args.index("--index") + 1] if "--index" in args else os.path.join(
-            os.environ.get("RVSD_DATA_DIR", "data"), "vector_index"
-        )
-        topk = int(args[args.index("--k") + 1]) if "--k" in args else 20
-        nprobe = int(args[args.index("--nprobe") + 1]) if "--nprobe" in args else 2
+        sf_dir = _sf_dir(args, at=1)
+        idx = _flag(args, "--index", os.path.join(corpus.data_dir, "vector_index"))
+        topk = int(_flag(args, "--k", 20))
+        nprobe = int(_flag(args, "--nprobe", 2))
         show(ann.ann_query_index(spark, idx, sf_dir, qtext, topk, nprobe), ranked=True)
     elif cmd == "selectCorpus":
         # run the composed training-corpus selection pipeline, write the
@@ -583,12 +571,8 @@ def main(argv: list[str] | None = None) -> int:
         # selectCorpus [sf_dir] [--out dir])
         from .operators import textprep
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
-        out = args[args.index("--out") + 1] if "--out" in args else os.path.join(
-            os.environ.get("RVSD_DATA_DIR", "data"), "training_corpus"
-        )
+        sf_dir = _sf_dir(args)
+        out = _flag(args, "--out", os.path.join(corpus.data_dir, "training_corpus"))
         tc = textprep.training_corpus(spark, sf_dir)
         tc.write.mode("overwrite").parquet(out)
         tc = spark.read.parquet(out)  # count stages off the written artifact
@@ -610,9 +594,7 @@ def main(argv: list[str] | None = None) -> int:
         from .operators import multimodal as mm
         from .operators import textprep as tp
 
-        sf_dir = args[0] if args else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         leak = dedup_ops.split_leakage(spark, sf_dir)
         n_leak = leak.count()
         n_leak_dups = leak.filter("is_dup").count()
@@ -651,9 +633,7 @@ def main(argv: list[str] | None = None) -> int:
         # (usage: auditEmbeddings [sf_dir])
         from .operators import ann as ann_ops
 
-        sf_dir = args[0] if args else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         norms = {
             int(r["label"]): {
                 "n": int(r["n"]),
@@ -689,9 +669,7 @@ def main(argv: list[str] | None = None) -> int:
         # (usage: storeIndex [sf_dir] [--rebuild])
         from .operators import ann as ann_ops
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         path = ann_ops.ivf_index_store(spark, sf_dir, rebuild="--rebuild" in args)
         print(
             json.dumps(
@@ -713,9 +691,7 @@ def main(argv: list[str] | None = None) -> int:
         # (usage: storeTokenShards [sf_dir] [--rebuild])
         from .operators import textstats as ts_ops
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         path = ts_ops.token_shards_store(spark, sf_dir, rebuild="--rebuild" in args)
         manifest = [
             {k: int(v) for k, v in r.asDict().items()}
@@ -729,9 +705,7 @@ def main(argv: list[str] | None = None) -> int:
         # (usage: storeTokenizer [sf_dir] [--rebuild])
         from .operators import textstats as ts_ops
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         path = ts_ops.bpe_tokenizer_store(spark, sf_dir, rebuild="--rebuild" in args)
         print(
             json.dumps(
@@ -751,9 +725,7 @@ def main(argv: list[str] | None = None) -> int:
         # (usage: storeScrub [sf_dir] [--rebuild])
         from .operators import textprep as tp_ops
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         path = tp_ops.scrub_store(spark, sf_dir, rebuild="--rebuild" in args)
         rep = tp_ops.scrub_stored_report(spark, sf_dir)
         agg = rep.agg(
@@ -778,9 +750,7 @@ def main(argv: list[str] | None = None) -> int:
         # (usage: auditTables [sf_dir] [--strict])
         from .operators import audit as audit_ops
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         rows = audit_ops.constraint_audit(spark, sf_dir).collect()
         failed = [r.asDict() for r in rows if not r.passed]
         print(
@@ -800,9 +770,7 @@ def main(argv: list[str] | None = None) -> int:
         # tombstone write (usage: deletionImpact [sf_dir])
         from .operators import audit as audit_ops
 
-        sf_dir = args[0] if args else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         show(audit_ops.deletion_impact(spark, sf_dir))
     elif cmd == "findDuplicateImages":
         # perceptual image dedup: list the resized/re-encoded duplicate
@@ -811,9 +779,7 @@ def main(argv: list[str] | None = None) -> int:
         # findDuplicateImages [sf_dir] [--cap n])
         from .operators import multimodal as mm_ops
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         cap = _int_flag(args, "--cap", mm_ops.PHASH_BUCKET_CAP)
         if cap is None:
             print("usage: findDuplicateImages [sf_dir] [--cap n]", file=sys.stderr)
@@ -825,9 +791,7 @@ def main(argv: list[str] | None = None) -> int:
         # findNearDuplicateImages [sf_dir] [--max-hamming t] [--cap n])
         from .operators import multimodal as mm_ops
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         usage = "usage: findNearDuplicateImages [sf_dir] [--max-hamming t] [--cap n]"
         t = _int_flag(args, "--max-hamming", mm_ops.PHASH_NEAR_MAX_HAMMING)
         cap = _int_flag(args, "--cap", mm_ops.PHASH_BUCKET_CAP)
@@ -853,9 +817,7 @@ def main(argv: list[str] | None = None) -> int:
         # audioStats [sf_dir] [--frames])
         from .operators import multimodal as mm_ops
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         if "--frames" in args:
             show(mm_ops.audio_frame_energy(spark, sf_dir))
         else:
@@ -865,9 +827,7 @@ def main(argv: list[str] | None = None) -> int:
         # collision (usage: findDuplicateAudio [sf_dir] [--cap n])
         from .operators import multimodal as mm_ops
 
-        sf_dir = args[0] if args and not args[0].startswith("--") else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         cap = _int_flag(args, "--cap", mm_ops.PHASH_BUCKET_CAP)
         if cap is None:
             print("usage: findDuplicateAudio [sf_dir] [--cap n]", file=sys.stderr)
@@ -879,9 +839,7 @@ def main(argv: list[str] | None = None) -> int:
         # rebuild the stored index (usage: commitIngest [sf_dir])
         from .streaming.vectors import commit_ingest_batch
 
-        sf_dir = args[0] if args else os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
+        sf_dir = _sf_dir(args)
         print(json.dumps({"rebuilt_index": commit_ingest_batch(spark, sf_dir)}))
     elif cmd == "gcWarehouse":
         # warehouse janitor: list every stored entry (family, tag,
@@ -898,8 +856,7 @@ def main(argv: list[str] | None = None) -> int:
         collect = "--collect" in args
         roots = [a for a in args if not a.startswith("--")]
         if not roots:
-            anchor = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-            roots = sorted(_glob.glob(os.path.join(os.path.dirname(anchor), "sf*")))
+            roots = sorted(_glob.glob(os.path.join(os.path.dirname(_sf_dir(args)), "sf*")))
         report = wh.gc_warehouse(roots, dry_run=not collect)
         print(
             json.dumps(

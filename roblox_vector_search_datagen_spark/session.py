@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the engine.
 
-Defaults target the driver harness (local[$SPARK_GRAFT_CPUS], single JVM)
-but every knob is chosen so the same plans scale on a real cluster:
+Defaults target a single-JVM local run (local[N], where N is
+$SPARK_GRAFT_CPUS or, when that is unset, the CPUs this process may run
+on) but every knob is chosen so the same plans scale on a real cluster:
 AQE handles runtime coalescing/skew, shuffle partitions sized for the
 test SFs, Arrow enabled for the vectorized UDF path.
 """
@@ -13,7 +14,7 @@ import os
 from pyspark.sql import SparkSession
 
 def _cpus() -> str:
-    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 def _driver_memory() -> str:
     """Size the driver heap to the host instead of a fixed 8g.

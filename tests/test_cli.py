@@ -5,8 +5,10 @@ composite processGamesFromSearch pipeline."""
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+from collections import Counter
 from urllib.parse import parse_qs, urlparse
 
 import pytest
@@ -157,6 +159,41 @@ class FakeRoblox:
             return 200, json.dumps({"data": data}).encode()
         raise AssertionError(f"unrouted url: {url}")
 
+class CountingRoblox(FakeRoblox):
+    """FakeRoblox that appends one JSON line per remote call to `log`.
+    The calls run in Python worker processes, so the record is a file."""
+
+    def __init__(self, log: str):
+        self.log = log
+
+    def __call__(self, method: str, url: str, headers: dict, body: bytes | None):
+        with open(self.log, "a") as f:
+            f.write(json.dumps({"url": url, "body": body.decode() if body else None}) + "\n")
+        return super().__call__(method, url, headers, body)
+
+def _fetched(log: str) -> Counter:
+    """(endpoint, game) -> how many logged calls asked about that game:
+    batch lookups count each of their ids, a CDN GET its image path, a
+    chat call its game title, an embeddings call each input text."""
+    keys: Counter = Counter()
+    with open(log) as f:
+        for line in f:
+            call = json.loads(line)
+            u = urlparse(call["url"])
+            q = parse_qs(u.query)
+            if "universeIds" in q:
+                keys.update((u.path, int(i)) for i in q["universeIds"][0].split(","))
+            elif u.netloc == "cdn":
+                keys[("cdn", u.path)] += 1
+            elif u.path.endswith("/chat/completions"):
+                user = json.loads(call["body"])["messages"][1]["content"]
+                text = user[0]["text"] if isinstance(user, list) else user
+                keys[("chat", text.split("Title: ")[1].split("\n")[0])] += 1
+            else:
+                assert u.path.endswith("/embeddings"), call["url"]
+                keys.update(("embeddings", t) for t in json.loads(call["body"])["input"])
+    return keys
+
 SEED_GAMES = [
     # (universeId, rootPlaceId, name, description, gameplayDescription, playerCount)
     (1, 10, "alpha", "old desc", "**Gameplay Summary**: a", 100),
@@ -246,6 +283,68 @@ def test_generate_gameplay_and_embeddings(corpus):
     # idempotent: everything embedded now
     assert cli.generate_embeddings(corpus, FakeRoblox, base_url="http://emb/v1", model="m") == 0
 
+ENRICH = (
+    (cli.download_descriptions, {}),
+    (cli.download_images, {}),
+    (cli.generate_gameplay_descriptions, {"base_url": "http://llm/v1", "model": "m"}),
+    (cli.generate_embeddings, {"base_url": "http://emb/v1", "model": "m"}),
+)
+
+def test_enrichment_fetches_each_game_once(corpus, tmp_path):
+    """At-most-once fetch (the reference's checkpoint saves): each
+    enrichment command asks the remote APIs about every worklist game
+    exactly once, and returns the exact count of what it wrote."""
+    calls = []
+    for i, (command, kw) in enumerate(ENRICH):
+        log = str(tmp_path / f"calls{i}.jsonl")
+        calls.append((command(corpus, functools.partial(CountingRoblox, log), **kw), _fetched(log)))
+    gp = {r["universeId"]: r["gameplayDescription"] for r in corpus.games().collect()}
+    ids = [1, 2, 3, 4, 5, 331]
+    assert calls[0] == (6, Counter({("/v1/games", 2): 1, ("/v1/games", 5): 1}))
+    # every thumbnail completes, icon 3 stays pending: 5 icons + 6 thumbnails
+    assert calls[1] == (
+        11,
+        Counter(
+            [("/v1/games/icons", i) for i in ids]
+            + [("/v1/games/multiget/thumbnails", i) for i in ids]
+            + [("cdn", f"/icon/{i}") for i in ids if i % 3]
+            + [("cdn", f"/thumb/{i}") for i in ids]
+        ),
+    )
+    # beta got its description above; gamma had one
+    assert calls[2] == (2, Counter({("chat", "beta"): 1, ("chat", "gamma"): 1}))
+    assert calls[3] == (3, Counter(("embeddings", gp[i]) for i in (2, 3, 331)))
+
+def _listing(root: str) -> list[tuple[str, int, int]]:
+    out = []
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out.append((os.path.relpath(os.path.join(d, f), root), st.st_size, st.st_mtime_ns))
+    return sorted(out)
+
+def test_empty_worklist_writes_nothing(spark, tmp_path):
+    """A command whose worklist is empty returns 0 without a write: no
+    file under data_dir changes and the API's cached snapshot survives
+    (a 0-row append still writes a part file, a 0-row rewrite still
+    swaps the table, and either drops the snapshot)."""
+    c = Corpus(spark, str(tmp_path / "data"))
+    # no id divisible by 3, so every icon completes and no image is left to fetch
+    c.write_games(spark.createDataFrame([g for g in SEED_GAMES if g[0] % 3], GAME_SCHEMA))
+    c.write_embeddings(spark.createDataFrame([(1, [1.0, 0.0, 0.5])], EMBEDDING_SCHEMA))
+    for command, kw in ENRICH:
+        assert command(c, FakeRoblox, **kw) > 0
+    snap = c.snapshot()
+    snap.games.count()
+    before = _listing(c.data_dir)
+    for i, (command, kw) in enumerate(ENRICH):
+        log = str(tmp_path / f"again{i}.jsonl")
+        assert command(c, functools.partial(CountingRoblox, log), **kw) == 0
+        assert not os.path.exists(log), command.__name__
+        assert _listing(c.data_dir) == before, command.__name__
+        assert c._snapshot is snap, command.__name__
+    assert cli.clear_gameplay_descriptions(c) == 5
+
 def test_prune_and_counts_and_clear(corpus):
     counts = cli.prune_games(corpus, ["--dry-run"], dry_run=True)
     assert counts["missing embedding"] > 0
@@ -277,6 +376,15 @@ def test_explain_query_command(spark, sf_dir, tmp_path, monkeypatch, capsys):
 def test_optimize_storage_command(spark, sf_dir, tmp_path, monkeypatch, capsys):
     monkeypatch.setenv("RVSD_DATA_DIR", str(tmp_path / "data"))
     assert cli.main(["optimizeStorage", sf_dir, "--buckets", "4"]) == 0
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert res["buckets"] == 4 and res["games_bucketed"] > 0
+
+def test_optimize_storage_flag_without_sf_dir(spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """A leading --flag is not read as the sf_dir: the fixture comes from
+    SPARK_GRAFT_SF_DIR."""
+    monkeypatch.setenv("RVSD_DATA_DIR", str(tmp_path / "data"))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    assert cli.main(["optimizeStorage", "--buckets", "4"]) == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert res["buckets"] == 4 and res["games_bucketed"] > 0
 
