@@ -39,6 +39,7 @@ from .corpus import Corpus
 from .functions import vector as V
 from .operators import maintenance, search
 from .operators.maintenance import PRUNE_REASONS
+from .schemas import local_df
 from .sources import http
 
 NEW_BATCH_SCHEMA = T.StructType(
@@ -55,18 +56,7 @@ NEW_BATCH_SCHEMA = T.StructType(
 def _new_batch_df(corpus: Corpus, rows: list[dict]) -> DataFrame:
     """Lift driver-gathered rows into the merge-input shape; `ord` is the
     batch position (keep-last dedup key, gatherGames.ts:89)."""
-    full = [
-        {
-            "universeId": r["universeId"],
-            "rootPlaceId": r["rootPlaceId"],
-            "name": r["name"],
-            "description": r.get("description"),
-            "playerCount": r.get("playerCount"),
-            "ord": i,
-        }
-        for i, r in enumerate(rows)
-    ]
-    return corpus.spark.createDataFrame(full, NEW_BATCH_SCHEMA)
+    return local_df(corpus.spark, [{**r, "ord": i} for i, r in enumerate(rows)], NEW_BATCH_SCHEMA)
 
 # ---------------------------------------------------------------------------
 # gather family
@@ -172,13 +162,21 @@ def download_images(
     concurrency: int = 4,
     retry: http.RetryPolicy | None = None,
 ) -> int:
-    """downloadImages.ts:48-219: anti-join skip-existing worklist, fetch
-    icon+thumbnail binaries, append new rows to the images table. The
+    """downloadImages.ts:48-219: worklist of games missing an icon or a
+    thumbnail, with one `need_<kind>` flag per kind, fetch only the
+    missing binaries, append new rows to the images table. The
     pre-write anti-join keeps Spark task retries idempotent."""
-    have_both = (
-        corpus.images().groupBy("universeId").count().filter(F.col("count") >= 2).select("universeId")
+    kinds = ("icon", "thumbnail")
+    have = corpus.images().groupBy("universeId").agg(
+        *[F.max(F.col("kind") == k).alias(k) for k in kinds]
     )
-    wl = corpus.games().select("universeId").join(have_both, "universeId", "left_anti")
+    wl = (
+        corpus.games()
+        .select("universeId")
+        .join(have, "universeId", "left")
+        .select("universeId", *[(~F.coalesce(F.col(k), F.lit(False))).alias(f"need_{k}") for k in kinds])
+        .filter(F.col("need_icon") | F.col("need_thumbnail"))
+    )
     if wl.isEmpty():
         return 0
     fetched = http.download_images(wl, transport_factory, concurrency=concurrency, retry=retry)

@@ -35,7 +35,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators import search
-from .schemas import EMBEDDING_SCHEMA, GAME_SCHEMA, IMAGE_SCHEMA
+from .schemas import EMBEDDING_SCHEMA, GAME_SCHEMA, IMAGE_SCHEMA, local_df
 from .sources import jsonio
 
 class Snapshot:
@@ -103,7 +103,7 @@ class Corpus:
     def images(self) -> DataFrame:
         path = self._path("images.parquet")
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], IMAGE_SCHEMA)
+            return local_df(self.spark, [], IMAGE_SCHEMA)
         return self.spark.read.schema(IMAGE_SCHEMA).parquet(path)
 
     def snapshot(self) -> Snapshot:
@@ -179,9 +179,9 @@ class Corpus:
 
     def init_empty(self) -> None:
         if not os.path.exists(self._path("games.parquet")):
-            self.write_games(self.spark.createDataFrame([], GAME_SCHEMA))
+            self.write_games(local_df(self.spark, [], GAME_SCHEMA))
         if not os.path.exists(self._path("embeddings.parquet")):
-            self.write_embeddings(self.spark.createDataFrame([], EMBEDDING_SCHEMA))
+            self.write_embeddings(local_df(self.spark, [], EMBEDDING_SCHEMA))
 
     # -- reference image-directory interchange (S13) -----------------------
 

@@ -32,7 +32,7 @@ from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import JOB_SCHEMA, JOB_STATUSES
+from ..schemas import JOB_SCHEMA, JOB_STATUSES, local_df
 from ..sources.sqlite_jobs import COLUMNS, JOBS_DDL, JOBS_INDEXES, decode_row, encode_row
 
 _TS_FMT = "%Y-%m-%d %H:%M:%S.%f"
@@ -100,7 +100,7 @@ class JobManager:
 
     def current(self) -> DataFrame:
         """Every job's current row as a Spark DataFrame (JOB_SCHEMA)."""
-        return self.spark.createDataFrame(self._select(), JOB_SCHEMA)
+        return local_df(self.spark, self._select(), JOB_SCHEMA)
 
     def seed_from(self, jobs_df: DataFrame) -> int:
         """Load a current-state snapshot (e.g. a reference jobs.db read

@@ -22,6 +22,7 @@ from ..functions import vector as V
 from ..functions import warehouse
 from ..functions.caching import persist_if
 from ..functions.num import qmean6, qsum6
+from ..schemas import local_df
 from ..sources import tables
 
 def ann_topk(
@@ -1616,8 +1617,8 @@ def ivf_train_converged(
         flat = new_flat.select("cent_id", "pos", "val").localCheckpoint()
         if row.max_shift <= tol:
             prev_assign.unpersist()
-            return spark.createDataFrame(
-                telemetry, "round int, max_shift double, total_shift double, n_reassigned bigint"
+            return local_df(
+                spark, telemetry, "round int, max_shift double, total_shift double, n_reassigned bigint"
             )
     if prev_assign is not None:
         prev_assign.unpersist()

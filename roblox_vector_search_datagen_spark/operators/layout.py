@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
+from ..schemas import local_df
 from ..sources import tables
 
 SKEW_TOP_N = 10
@@ -526,8 +527,9 @@ def zone_map_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     preds = F.broadcast(
-        spark.createDataFrame(
-            list(ZM_PREDICATES),
+        local_df(
+            spark,
+            ZM_PREDICATES,
             "pred_id string, u_lo bigint, u_hi bigint, v_lo double, v_hi double",
         )
     )

@@ -20,6 +20,7 @@ from ..functions import parallelism
 from ..functions import warehouse
 from ..functions.caching import persist_if
 from ..functions import vector as V
+from ..schemas import local_df
 from ..sources import tables
 
 # Deterministic per-language marker-word profiles. The fixtures' text is
@@ -835,7 +836,8 @@ def bpe_merges(spark: SparkSession, sf_dir: str, m: int = BPE_MERGES) -> DataFra
     only) points toward, now trained to m rounds with exact Sennrich
     apply semantics, oracle-pinned round by round."""
     rows = _bpe_train(spark, sf_dir, m)
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(r, a, b, a + b, t) for r, a, b, t in rows],
         "round int, a string, b string, merged string, total bigint",
     )

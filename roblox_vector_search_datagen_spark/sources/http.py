@@ -250,18 +250,6 @@ def parse_rolimons_games(html: str) -> dict[str, dict]:
     payload = html.split("var games = ")[1].split("document.addEventListener")[0].strip()
     return json.loads(payload[:-1])  # trailing ';'
 
-def games_df_from_rows(spark, rows: list[dict]) -> DataFrame:
-    """Lift a driver-side gather result into a DataFrame with the core
-    projection schema (P1)."""
-    schema = T.StructType(
-        [
-            T.StructField("universeId", T.LongType(), False),
-            T.StructField("rootPlaceId", T.LongType(), False),
-            T.StructField("name", T.StringType(), False),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
-
 def skip_existing(worklist: DataFrame, existing: DataFrame, key: str = "universeId") -> DataFrame:
     """P6 idempotence guard: drop ids that already have results — the
     anti-join that makes task-retry double-fires harmless."""
@@ -380,11 +368,12 @@ def download_images(
     retry: RetryPolicy | None = None,
 ) -> DataFrame:
     """Distributed S11/S12/S13 (downloadImages.ts:60-219): per partition,
-    batch-50 CDN-URL lookups for icons and thumbnails, then one GET per
-    completed image; yields IMAGE_SCHEMA rows (binary column sink —
-    the engine's images table replaces the reference's loose PNG files).
-    Skipped states (not 'Completed') produce no row, matching the
-    reference's continue-on-missing behavior."""
+    batch-50 CDN-URL lookups for icons (ids whose `need_icon` is true)
+    and thumbnails (`need_thumbnail`), then one GET per completed image;
+    yields IMAGE_SCHEMA rows (binary column sink — the engine's images
+    table replaces the reference's loose PNG files). Skipped states
+    (not 'Completed') produce no row, matching the reference's
+    continue-on-missing behavior."""
     import pandas as pd
 
     def run(batches: Iterable) -> Iterator:
@@ -401,16 +390,20 @@ def download_images(
                     raise HttpSourceError(status, url, raw[:200])
                 return raw
 
+        def ids(pdf, flag: str) -> list[int]:
+            return [int(x) for x in pdf.loc[pdf[flag], "universeId"]]
+
         for pdf in batches:
             rows = []
-            ids = [int(x) for x in pdf["universeId"]]
-            for chunk in chunked(ids, IMAGE_BATCH):
+            for chunk in chunked(ids(pdf, "need_icon"), IMAGE_BATCH):
                 idstr = ",".join(str(i) for i in chunk)
                 icons = request_json(transport, "GET", ICONS_URL.format(ids=idstr), retry=retry) or {}
                 for item in icons.get("data", []):
                     if item.get("state") == "Completed" and item.get("imageUrl"):
                         uid = int(item["targetId"])
                         rows.append((uid, "icon", f"images/{uid}/icon.png", get_bytes(item["imageUrl"])))
+            for chunk in chunked(ids(pdf, "need_thumbnail"), IMAGE_BATCH):
+                idstr = ",".join(str(i) for i in chunk)
                 thumbs = request_json(transport, "GET", THUMBS_URL.format(ids=idstr), retry=retry) or {}
                 for item in thumbs.get("data", []):
                     # reference takes thumbnails[0] (downloadImages.ts:186)
@@ -423,7 +416,11 @@ def download_images(
                         )
             yield pd.DataFrame(rows, columns=["universeId", "kind", "path", "content"])
 
-    return worklist.select("universeId").repartition(concurrency).mapInPandas(run, IMAGE_ROWS_SCHEMA)
+    return (
+        worklist.select("universeId", "need_icon", "need_thumbnail")
+        .repartition(concurrency)
+        .mapInPandas(run, IMAGE_ROWS_SCHEMA)
+    )
 
 # ---------------------------------------------------------------------------
 # S14: LLM gameplay-description source

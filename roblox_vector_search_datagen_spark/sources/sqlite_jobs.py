@@ -26,7 +26,7 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import JOB_SCHEMA, JOB_STATUSES
+from ..schemas import JOB_SCHEMA, JOB_STATUSES, local_df
 
 # reference DDL, verbatim semantics (jobManager.ts:46-60)
 JOBS_DDL = """
@@ -95,7 +95,7 @@ def read_jobs_db(spark: SparkSession, db_path: str) -> DataFrame:
     for rec in recs:
         if rec["status"] not in JOB_STATUSES:
             raise ValueError(f"jobs.db row {rec['id']!r} has unknown status {rec['status']!r}")
-    return spark.createDataFrame(recs, JOB_SCHEMA)
+    return local_df(spark, recs, JOB_SCHEMA)
 
 
 def write_jobs_db(df: DataFrame, db_path: str) -> int:

@@ -8,6 +8,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import uuid
 from collections import Counter
 from urllib.parse import parse_qs, urlparse
 
@@ -266,6 +267,60 @@ def test_download_images_skip_existing(corpus):
     cli.download_images(corpus, FakeRoblox)
     pairs = corpus.images().groupBy("universeId", "kind").count().filter("count > 1").count()
     assert pairs == 0
+
+def test_download_images_fetches_only_missing_kinds(corpus, tmp_path):
+    """A game missing one kind is asked about that kind only: after the
+    first run only gamma's icon (pending) is missing, so the second run
+    makes one icon lookup and no thumbnail or CDN call."""
+    cli.download_images(corpus, FakeRoblox)
+    log = str(tmp_path / "again.jsonl")
+    assert cli.download_images(corpus, functools.partial(CountingRoblox, log)) == 0
+    assert _fetched(log) == Counter({("/v1/games/icons", 3): 1})
+
+def _python_rdd_stages(spark, fn) -> list[int]:
+    """Run `fn` under its own job group; the ids of the stages it ran
+    whose RDD graph has a PythonRDD node (a list-backed DataFrame)."""
+    sc = spark.sparkContext
+    group = f"python-rdd-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+
+    def scala(seq):
+        it = seq.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    def names(cluster):
+        yield cluster.name()
+        yield from (n.name() for n in scala(cluster.childNodes()))
+        for kid in scala(cluster.childClusters()):
+            yield from names(kid)
+
+    job_ids = sc.statusTracker().getJobIdsForGroup(group)
+    assert job_ids
+    stages = {s for j in job_ids for s in sc.statusTracker().getJobInfo(j).stageIds}
+    return [
+        s
+        for s in sorted(stages)
+        if store.lastStageAttempt(s).status().toString() != "SKIPPED"
+        and any("PythonRDD" in n for n in names(store.operationGraphForStage(s).rootCluster()))
+    ]
+
+def test_gather_and_gameplay_run_no_python_rdd(spark, corpus):
+    """Driver-gathered rows and the missing images table are JVM-side
+    relations: no stage scans a Python RDD (the MapInPandas fetch is
+    the only Python the gameplay command runs)."""
+    assert _python_rdd_stages(spark, lambda: cli.gather_games(corpus, FakeRoblox())) == []
+    assert not os.path.exists(os.path.join(corpus.data_dir, "images.parquet"))
+    gameplay = lambda: cli.generate_gameplay_descriptions(
+        corpus, FakeRoblox, base_url="http://llm/v1", model="m"
+    )
+    assert _python_rdd_stages(spark, gameplay) == []
 
 def test_generate_gameplay_and_embeddings(corpus):
     cli.download_images(corpus, FakeRoblox)
