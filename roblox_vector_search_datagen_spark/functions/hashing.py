@@ -44,34 +44,37 @@ def let_expr(value: Column, body) -> Column:
     """
     return F.element_at(F.transform(F.array(value), body), 1)
 
-def h32_expr(col: Column) -> Column:
-    """Portable 32-bit string hash: int(md5(s)[:8], 16)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-# Spark-SQL *string* twins of the Column builders below: one F.expr()
-# parse costs a single py4j round-trip where the equivalent Column
+# The Spark forms below are Spark-SQL text (`*_expr_sql`); callers get a
+# Column with F.expr() or embed the text in selectExpr/SQL statements.
+# One parse costs a single py4j round-trip where the equivalent Column
 # composition costs one per operator call. Profiled r12: the fingerprint
 # builders (60-bit simhash sums, K affine minhash transforms) spent
 # seconds per *plan construction* in py4j chatter — 45% of the whole
-# bench — so the hot builders assemble their repetitive expression
-# blocks as SQL text and parse once. Values are pinned identical to the
-# Column forms by the same DuckDB oracles.
+# bench. The DuckDB `*_sql` texts are the oracles' own, independent
+# forms, and the oracles pin the values.
 
 def h32_expr_sql(col: str) -> str:
-    """Spark-SQL text of h32_expr (NOT DuckDB; see h32_sql for that)."""
+    """Portable 32-bit string hash: int(md5(s)[:8], 16). Spark-SQL text
+    (NOT DuckDB; see h32_sql for that)."""
     return f"CAST(conv(substring(md5({col}), 1, 8), 16, 10) AS BIGINT)"
 
 def h60_expr_sql(col: str) -> str:
-    """Spark-SQL text of h60_expr."""
+    """Portable 60-bit string hash: int(md5(s)[:15], 16) — the widest
+    md5 prefix that is always a POSITIVE signed int64 in both engines
+    (16 hex chars could exceed 2^63-1). Used where 32 bits is too
+    narrow, e.g. the banded-simhash bit source."""
     return f"CAST(conv(substring(md5({col}), 1, 15), 16, 10) AS BIGINT)"
 
 def minhash_value_expr_sql(h: str, i: int) -> str:
-    """Spark-SQL text of minhash_value_expr (same integer arithmetic)."""
+    """i-th affine minhash transform of an h32 value. h is reduced mod P
+    first so a*h never overflows int64."""
     return f"(({MINHASH_A[i]} * (({h}) % {P}) + {MINHASH_B[i]}) % {P})"
 
 def word_shingles_expr_sql(text: str, n: int = SHINGLE_WORDS) -> str:
-    """Spark-SQL text of word_shingles_expr: identical let-binding shape
-    (transform over a 1-element array) so the split runs once per row."""
+    """Distinct n-word shingles of lowercased text; empty array when the
+    document is shorter than n words. The token array is let-bound
+    (transform over a 1-element array, as in let_expr) so the split
+    runs once per row, not once per element access."""
     parts = ", ".join(f"element_at(w, i + {j + 1})" for j in range(n))
     body = (
         f"CASE WHEN size(w) >= {n} THEN "
@@ -85,39 +88,13 @@ def word_shingles_expr_sql(text: str, n: int = SHINGLE_WORDS) -> str:
 def h32_sql(col: str) -> str:
     return f"(('0x' || substring(md5({col}), 1, 8))::BIGINT)"
 
-def h60_expr(col: Column) -> Column:
-    """Portable 60-bit string hash: int(md5(s)[:15], 16) — the widest
-    md5 prefix that is always a POSITIVE signed int64 in both engines
-    (16 hex chars could exceed 2^63-1). Used where 32 bits is too
-    narrow, e.g. the banded-simhash bit source."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
 def h60_sql(col: str) -> str:
     return f"(('0x' || substring(md5({col}), 1, 15))::BIGINT)"
 
-def minhash_value_expr(h: Column, i: int) -> Column:
-    """i-th affine minhash transform of an h32 value. h is reduced mod P
-    first so a*h never overflows int64."""
-    return (F.lit(MINHASH_A[i]) * (h % P) + F.lit(MINHASH_B[i])) % P
-
 def minhash_value_sql(h: str, i: int) -> str:
+    """DuckDB text of the affine transform. It is the same string as
+    minhash_value_expr_sql, kept apart as the oracle's own form."""
     return f"(({MINHASH_A[i]} * (({h}) % {P}) + {MINHASH_B[i]}) % {P})"
-
-def word_shingles_expr(text: Column, n: int = SHINGLE_WORDS) -> Column:
-    """Distinct n-word shingles of lowercased text; empty array when the
-    document is shorter than n words. The token array is let-bound so
-    the split runs once per row, not once per element access."""
-
-    def build(w: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.size(w) - n)
-        shingles = F.transform(
-            idx, lambda i: F.concat_ws(" ", *[F.element_at(w, i + j + 1) for j in range(n)])
-        )
-        return F.when(F.size(w) >= n, F.array_distinct(shingles)).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return let_expr(F.split(F.lower(text), r"\s+"), build)
 
 def word_shingles_sql(text: str, n: int = SHINGLE_WORDS) -> str:
     """DuckDB equivalent (1-indexed lists)."""

@@ -25,11 +25,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# (applicationId, sf_dir, table) -> partition count; os.stat is cheap
-# but builders run inside the bench's timed loop, so even microseconds
-# are paid 3x per query — and the value is session-stable anyway.
-_PARTS_MEMO: dict[tuple[str, str, str], int] = {}
-
 
 def _size_bytes(path: str) -> int:
     """Local file/dir size, or -1 when the path is not statable from
@@ -95,8 +90,6 @@ def spread_scan(spark: SparkSession, sf_dir: str, df, table: str = "documents", 
     so the added exchange REPLACES the one downstream rather than
     stacking a second one; ensureRequirements recognizes the clustering)
     or round-robins when no key applies (pure per-row projections)."""
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return df  # A/B kill switch: measure the unrepaired layout
     splits = scan_splits(spark, sf_dir, table)
     # 0 = layout unobservable (remote storage): assume healthy — the
     # repair must only ever fire on a layout PROVEN degenerate.
@@ -113,13 +106,8 @@ def corpus_partitions(spark: SparkSession, sf_dir: str, table: str = "documents"
     the partition count a parallel scan of `table` would get, floored
     at one task per core so fixture-scale inputs still use the whole
     machine for CPU-bound per-row work."""
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    n = _PARTS_MEMO.get(key)
-    if n is None:
-        size = _size_bytes(os.path.join(sf_dir, f"{table}.parquet"))
-        n = max(
-            spark.sparkContext.defaultParallelism,
-            math.ceil(max(size, 0) / _max_partition_bytes(spark)),
-        )
-        _PARTS_MEMO[key] = n
-    return n
+    size = _size_bytes(os.path.join(sf_dir, f"{table}.parquet"))
+    return max(
+        spark.sparkContext.defaultParallelism,
+        math.ceil(max(size, 0) / _max_partition_bytes(spark)),
+    )

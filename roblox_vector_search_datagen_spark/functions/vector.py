@@ -1,16 +1,13 @@
 """Vector kernel: cosine similarity + deterministic query encoder.
 
 Reference: cosineSimilarity at src/lib/tools.ts:15-20 — dot/(|a||b|)
-with float64 accumulation. Two Spark implementations:
-
-* `cosine_expr` — pure Catalyst higher-order functions (zip_with +
-  aggregate). Stays JVM-side inside whole-stage codegen, needs no
-  Python worker, and is exactly reproducible in the DuckDB oracle
-  (double accumulation both sides).
-* `cosine_batch` — numpy kernel for the mapInPandas/Arrow path, used by
-  the ANN operators where one task scores a whole partition as a
-  matrix-vector product (the 100 TB-scale path: BLAS beats per-row
-  expression eval).
+with float64 accumulation. One Spark implementation: `cosine_expr_sql`
+(with `dot_expr_sql` and `norm_expr_sql`), Spark-SQL text over the
+Catalyst higher-order functions zip_with + aggregate. Callers parse it
+with `F.expr`/`selectExpr` or embed it in SQL statements; it stays
+JVM-side inside whole-stage codegen, needs no Python worker, and is
+exactly reproducible in the DuckDB oracle (`cosine_sql`, double
+accumulation both sides).
 
 The query encoder (`embed_query`) replaces the reference's runtime
 embedding API call (S16, src/endpoints/vectorSearch.get.ts:106-121)
@@ -22,38 +19,15 @@ from __future__ import annotations
 
 import hashlib
 
-import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-def dot_expr(a: Column, b: Column) -> Column:
-    """Σ aᵢbᵢ with float64 accumulation (matches tools.ts:16)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL when either norm is zero (the reference
-    would emit NaN via 0-division — NULL is the relational analog)."""
-    denom = norm_expr(a) * norm_expr(b)
-    return F.when(denom == 0, F.lit(None).cast("double")).otherwise(dot_expr(a, b) / denom)
-
-# Spark-SQL *string* twins of the Column builders above (NOT DuckDB —
-# see cosine_sql for that dialect): one F.expr()/selectExpr parse costs
-# a single py4j round-trip where each higher-order-function Column
-# costs ~20 (building the lambdas dominates the hot builders' time,
-# r12 profile). `0.0` alone would parse as DECIMAL in SQL text, so the
-# accumulator inits are cast explicitly — same expression trees as the
-# Column forms after parsing, value-pinned by every vector oracle.
+# Spark-SQL text, not DuckDB (see cosine_sql for that dialect): one
+# F.expr()/selectExpr parse costs a single py4j round-trip, where a
+# Column built from higher-order functions costs ~20 (building the
+# lambdas dominated the hot builders' time, r12 profile). `0.0` alone
+# would parse as DECIMAL in SQL text, so the accumulator inits are cast
+# explicitly; every vector oracle pins the values.
 
 def dot_expr_sql(a: str, b: str) -> str:
+    """Σ aᵢbᵢ with float64 accumulation (matches tools.ts:16)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
@@ -66,8 +40,11 @@ def norm_expr_sql(a: str) -> str:
     )
 
 def cosine_expr_sql(a: str, b: str, norm_a: str | None = None, norm_b: str | None = None) -> str:
-    """`norm_a`/`norm_b` name precomputed norm_expr_sql values (a column
-    of a cached frame) in place of recomputing them per row."""
+    """Cosine similarity; NULL when either norm is zero (the reference
+    would emit NaN via 0-division — NULL is the relational analog).
+    `norm_a`/`norm_b` name precomputed norm_expr_sql values (a column
+    of a cached frame, or a driver-side literal) in place of
+    recomputing them per row."""
     denom = f"{norm_a or norm_expr_sql(a)} * {norm_b or norm_expr_sql(b)}"
     return (
         f"CASE WHEN {denom} = 0 THEN CAST(NULL AS DOUBLE) "
@@ -75,18 +52,10 @@ def cosine_expr_sql(a: str, b: str, norm_a: str | None = None, norm_b: str | Non
     )
 
 def vector_lit_spark_sql(vec: list[float]) -> str:
-    """Spark-SQL literal array<double> of a query vector (the SQL-text
-    twin of vector_lit; `D` suffix keeps each element a double)."""
+    """Spark-SQL literal array<double> of a query vector (`D` suffix
+    keeps each element a double). It rides into every task as part of
+    the serialized plan: no shuffle, no join."""
     return "array(" + ", ".join(f"{float(v)!r}D" for v in vec) + ")"
-
-def cosine_batch(mat: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """Vectorized cosine of a (n, d) float matrix against one query."""
-    mat = mat.astype(np.float64, copy=False)
-    q = q.astype(np.float64, copy=False)
-    norms = np.linalg.norm(mat, axis=1) * np.linalg.norm(q)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = mat @ q / norms
-    return np.where(norms == 0, np.nan, sims)
 
 # ---------------------------------------------------------------------------
 # Deterministic query encoder (S16 stub)
@@ -104,18 +73,13 @@ def embed_query(text: str, dim: int = 64) -> list[float]:
         out.append(round(int(h[:8], 16) / 0x100000000 - 0.5, 6))
     return out
 
-def vector_lit(vec: list[float]) -> Column:
-    """Spark literal array<double> for a query vector (broadcast to every
-    task as part of the serialized plan — no shuffle, no join)."""
-    return F.array(*[F.lit(float(v)) for v in vec])
-
 def vector_sql_literal(vec: list[float]) -> str:
     """DuckDB literal: [..]::DOUBLE[]."""
     return "[" + ", ".join(repr(float(v)) for v in vec) + "]::DOUBLE[]"
 
 def cosine_sql(a: str, b: str) -> str:
     """DuckDB cosine with explicit double accumulation, mirroring
-    cosine_expr bit-for-bit at 6-decimal rounding."""
+    cosine_expr_sql bit-for-bit at 6-decimal rounding."""
     da = f"CAST({a} AS DOUBLE[])"
     db = f"CAST({b} AS DOUBLE[])"
     return (

@@ -30,10 +30,10 @@ def ann_topk(
 ) -> DataFrame:
     """Exact brute-force cosine top-k over embeddings, decorated with
     the matching document row (two-phase: rank narrow, join tiny)."""
-    qv = V.vector_lit(V.embed_query(query_text))
+    qv = V.vector_lit_spark_sql(V.embed_query(query_text))
     e = tables.load_table(spark, sf_dir, "embeddings")
-    scored = e.select(
-        "vec_id", "label", F.round(V.cosine_expr(F.col("embedding"), qv), 6).alias("cosine")
+    scored = e.selectExpr(
+        "vec_id", "label", f"round({V.cosine_expr_sql('embedding', qv)}, 6) AS cosine"
     )
     topk = scored.orderBy(F.col("cosine").desc_nulls_last(), F.col("vec_id")).limit(k)
     docs = tables.load_table(spark, sf_dir, "documents")
@@ -92,11 +92,11 @@ def ann_lsh_topk(
         if bin(m).count("1") <= probe_hamming
     )
     e = tables.load_table(spark, sf_dir, "embeddings")
-    qv = V.vector_lit(qv_list)
+    qv = V.vector_lit_spark_sql(qv_list)
     scored = e.select(
         "vec_id",
         _sign_bucket_expr(F.col("embedding")).cast("int").alias("bucket"),
-        F.round(V.cosine_expr(F.col("embedding"), qv), 6).alias("cosine"),
+        F.expr(f"round({V.cosine_expr_sql('embedding', qv)}, 6)").alias("cosine"),
     ).filter(F.col("bucket").isin(probes))
     return scored.orderBy(F.col("cosine").desc_nulls_last(), F.col("vec_id")).limit(k)
 
@@ -151,10 +151,10 @@ def ann_lsh_recall_at_k(
     the `ann_recall_at_k` companion that decides probe_hamming before
     the LSH index is trusted. Both rankings are narrow top-k plans;
     the overlap join touches 2k rows. Emits (k, n_overlap, recall)."""
-    qv = V.vector_lit(V.embed_query(query_text))
+    qv = V.vector_lit_spark_sql(V.embed_query(query_text))
     e = tables.load_table(spark, sf_dir, "embeddings")
-    scored = e.select(
-        "vec_id", F.round(V.cosine_expr(F.col("embedding"), qv), 6).alias("cosine")
+    scored = e.selectExpr(
+        "vec_id", f"round({V.cosine_expr_sql('embedding', qv)}, 6) AS cosine"
     )
     exact = (
         scored.orderBy(F.col("cosine").desc_nulls_last(), F.col("vec_id"))
@@ -216,7 +216,7 @@ def ann_ivf_topk(
     cells — at scale that filter is partition pruning on the storage
     layout, i.e. the scan itself shrinks by nlist/nprobe.
     """
-    qv = V.vector_lit(V.embed_query(query_text))
+    qv = V.vector_lit_spark_sql(V.embed_query(query_text))
     e = tables.load_table(spark, sf_dir, "embeddings")
 
     reps = (
@@ -224,8 +224,8 @@ def ann_ivf_topk(
         .join(e.select(F.col("vec_id").alias("rep_id"), F.col("embedding").alias("rep_emb")), "rep_id")
     )
     probed = (
-        reps.select(
-            "label", F.round(V.cosine_expr(F.col("rep_emb"), qv), 6).alias("rep_cos")
+        reps.selectExpr(
+            "label", f"round({V.cosine_expr_sql('rep_emb', qv)}, 6) AS rep_cos"
         )
         .orderBy(F.col("rep_cos").desc_nulls_last(), F.col("label"))
         .limit(nprobe)
@@ -233,7 +233,7 @@ def ann_ivf_topk(
     )
     scored = (
         e.join(F.broadcast(probed), "label")  # partition pruning at scale
-        .select("vec_id", "label", F.round(V.cosine_expr(F.col("embedding"), qv), 6).alias("cosine"))
+        .selectExpr("vec_id", "label", f"round({V.cosine_expr_sql('embedding', qv)}, 6) AS cosine")
     )
     return scored.orderBy(F.col("cosine").desc_nulls_last(), F.col("vec_id")).limit(k)
 
@@ -570,20 +570,22 @@ PQ_M = 8  # subspaces
 PQ_DSUB = 64 // PQ_M  # dims per subspace
 PQ_NCODES = 16  # centroids per subspace codebook
 
-def _l2sq_expr(a, b) -> F.Column:
-    """Σ (aᵢ-bᵢ)² with sequential double accumulation (mirrors the
-    oracle's list_sum over an in-order transform)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, v: acc + v
-    )
-
 def _l2sq_expr_sql(a: str, b: str) -> str:
-    """Spark-SQL text twin of _l2sq_expr (one parse round-trip; see
-    functions/vector.py for the pattern and why the init is cast)."""
+    """Σ (aᵢ-bᵢ)² with sequential double accumulation (mirrors the
+    oracle's list_sum over an in-order transform); see
+    functions/vector.py for why the init is cast."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
+
+def _pq_query_dist_sql(qv: list[float]) -> str:
+    """round(Σ (qᵢ-cᵢ)², 6) of the query's m-th subvector against a
+    codebook row's `cent_sub`: the ADC lookup-table entry."""
+    subs = ", ".join(
+        V.vector_lit_spark_sql(qv[m * PQ_DSUB : (m + 1) * PQ_DSUB]) for m in range(PQ_M)
+    )
+    return f"round({_l2sq_expr_sql(f'element_at(array({subs}), m + 1)', 'cent_sub')}, 6)"
 
 def _subvectors(df: DataFrame, id_col: str, out_id: str) -> DataFrame:
     """(id, m, sub): each vector split into PQ_M contiguous 8-dim double
@@ -679,20 +681,8 @@ def pq_adc_topk(
     from this pass get exact-reranked by ann_topk on the survivors."""
     e = tables.load_table(spark, sf_dir, "embeddings")
     qv = V.embed_query(query_text)
-    q_subs = F.array(
-        *[
-            F.array(*[F.lit(float(v)) for v in qv[m * PQ_DSUB : (m + 1) * PQ_DSUB]])
-            for m in range(PQ_M)
-        ]
-    )
     dtable = F.broadcast(
-        _pq_codebook(e).select(
-            "m",
-            "cent_id",
-            F.round(
-                _l2sq_expr(F.element_at(q_subs, F.col("m") + 1), F.col("cent_sub")), 6
-            ).alias("qd"),
-        )
+        _pq_codebook(e).select("m", "cent_id", F.expr(_pq_query_dist_sql(qv)).alias("qd"))
     )
     codes = pq_codes(spark, sf_dir).select("vec_id", "m", "code")
     adc = (
@@ -749,11 +739,11 @@ def pq_rerank_topk(
     scan collapses to a semi-join against an 80-row id list (a
     broadcast probe / index lookup at cluster scale), so the expensive
     float math touches 80 vectors instead of billions."""
-    qv = V.vector_lit(V.embed_query(query_text))
+    qv = V.vector_lit_spark_sql(V.embed_query(query_text))
     cands = pq_adc_topk(spark, sf_dir, query_text, k * PQ_RERANK_FACTOR).select("vec_id")
     e = tables.load_table(spark, sf_dir, "embeddings")
-    exact = e.join(F.broadcast(cands), "vec_id").select(
-        "vec_id", "label", F.round(V.cosine_expr(F.col("embedding"), qv), 6).alias("cosine")
+    exact = e.join(F.broadcast(cands), "vec_id").selectExpr(
+        "vec_id", "label", f"round({V.cosine_expr_sql('embedding', qv)}, 6) AS cosine"
     )
     return exact.orderBy(F.col("cosine").desc_nulls_last(), F.col("vec_id")).limit(k)
 
@@ -836,10 +826,10 @@ def ann_recall_at_k(
     top-k plans (TakeOrderedAndProject — k rows per partition to the
     driver, no global sort); the overlap join touches 2k rows. Emits a
     single row (k, n_overlap, recall)."""
-    qv = V.vector_lit(V.embed_query(query_text))
+    qv = V.vector_lit_spark_sql(V.embed_query(query_text))
     e = tables.load_table(spark, sf_dir, "embeddings")
-    scored = e.select(
-        "vec_id", F.round(V.cosine_expr(F.col("embedding"), qv), 6).alias("cosine")
+    scored = e.selectExpr(
+        "vec_id", f"round({V.cosine_expr_sql('embedding', qv)}, 6) AS cosine"
     )
     exact = scored.orderBy(F.col("cosine").desc_nulls_last(), F.col("vec_id")).limit(k).select("vec_id")
     approx = ann_ivf_topk(spark, sf_dir, query_text, k, nprobe).select("vec_id")
@@ -1102,7 +1092,7 @@ def ann_query_index(
         "vec_id", "cent_id"
     )
     centroids = spark.read.parquet(f"{index_dir}/ivf_centroids.parquet")
-    q_at = F.element_at(V.vector_lit(qv), F.col("pos").cast("int") + 1)
+    q_at = F.expr(f"element_at({V.vector_lit_spark_sql(qv)}, CAST(pos AS INT) + 1)")
     cent_scores = (
         centroids.groupBy("cent_id")
         .agg(
@@ -1126,7 +1116,9 @@ def ann_query_index(
     scored = e.join(members, "vec_id").select(
         "vec_id",
         "label",
-        F.round(V.cosine_expr(F.col("embedding"), V.vector_lit(qv)), 6).alias("cosine"),
+        F.expr(
+            f"round({V.cosine_expr_sql('embedding', V.vector_lit_spark_sql(qv))}, 6)"
+        ).alias("cosine"),
     )
     return scored.orderBy(F.col("cosine").desc_nulls_last(), F.col("vec_id")).limit(k)
 
@@ -2152,10 +2144,10 @@ def pq_recall_at_k(
     (M×nbits) and the rerank factor. Both inputs are k-row
     TakeOrderedAndProject plans; the overlap join touches 2k rows.
     Emits one row (k, rerank_factor, n_overlap, recall)."""
-    qv = V.vector_lit(V.embed_query(query_text))
+    qv = V.vector_lit_spark_sql(V.embed_query(query_text))
     e = tables.load_table(spark, sf_dir, "embeddings")
-    scored = e.select(
-        "vec_id", F.round(V.cosine_expr(F.col("embedding"), qv), 6).alias("cosine")
+    scored = e.selectExpr(
+        "vec_id", f"round({V.cosine_expr_sql('embedding', qv)}, 6) AS cosine"
     )
     exact = (
         scored.orderBy(F.col("cosine").desc_nulls_last(), F.col("vec_id"))
@@ -2221,7 +2213,7 @@ def ivf_pq_topk(
     Emits (vec_id, label, cosine)."""
     e = tables.load_table(spark, sf_dir, "embeddings")
     qv_list = V.embed_query(query_text)
-    qv = V.vector_lit(qv_list)
+    qv = V.vector_lit_spark_sql(qv_list)
     reps = (
         e.groupBy("label").agg(F.min("vec_id").alias("rep_id"))
         .join(
@@ -2230,25 +2222,13 @@ def ivf_pq_topk(
         )
     )
     probed = (
-        reps.select("label", F.round(V.cosine_expr(F.col("rep_emb"), qv), 6).alias("rep_cos"))
+        reps.selectExpr("label", f"round({V.cosine_expr_sql('rep_emb', qv)}, 6) AS rep_cos")
         .orderBy(F.col("rep_cos").desc_nulls_last(), F.col("label"))
         .limit(nprobe)
         .select("label")
     )
-    q_subs = F.array(
-        *[
-            F.array(*[F.lit(float(v)) for v in qv_list[m * PQ_DSUB : (m + 1) * PQ_DSUB]])
-            for m in range(PQ_M)
-        ]
-    )
     dtable = F.broadcast(
-        _pq_codebook(e).select(
-            "m",
-            "cent_id",
-            F.round(
-                _l2sq_expr(F.element_at(q_subs, F.col("m") + 1), F.col("cent_sub")), 6
-            ).alias("qd"),
-        )
+        _pq_codebook(e).select("m", "cent_id", F.expr(_pq_query_dist_sql(qv_list)).alias("qd"))
     )
     # cell membership rides with the codes in an IVFADC layout; the
     # fixture's pq_codes table doesn't carry label, so join it in (at
@@ -2269,8 +2249,8 @@ def ivf_pq_topk(
         .limit(k * PQ_RERANK_FACTOR)
         .select("vec_id")
     )
-    exact = e.join(F.broadcast(shortlist), "vec_id").select(
-        "vec_id", "label", F.round(V.cosine_expr(F.col("embedding"), qv), 6).alias("cosine")
+    exact = e.join(F.broadcast(shortlist), "vec_id").selectExpr(
+        "vec_id", "label", f"round({V.cosine_expr_sql('embedding', qv)}, 6) AS cosine"
     )
     return exact.orderBy(F.col("cosine").desc_nulls_last(), F.col("vec_id")).limit(k)
 
@@ -2363,15 +2343,15 @@ def dim_truncation_recall(
     e = parallelism.spread_scan(
         spark, sf_dir, tables.load_table(spark, sf_dir, "embeddings"), "embeddings", "vec_id"
     )
-    full_q = V.vector_lit(qv_list)
-    trunc_q = V.vector_lit(qv_list[:d_trunc])
-    scored_full = e.select(
-        "vec_id", F.round(V.cosine_expr(F.col("embedding"), full_q), 6).alias("cos")
+    full_q = V.vector_lit_spark_sql(qv_list)
+    trunc_q = V.vector_lit_spark_sql(qv_list[:d_trunc])
+    scored_full = e.selectExpr(
+        "vec_id", f"round({V.cosine_expr_sql('embedding', full_q)}, 6) AS cos"
     )
     scored_trunc = e.select(
         "vec_id",
-        F.round(
-            V.cosine_expr(F.slice(F.col("embedding"), 1, d_trunc), trunc_q), 6
+        F.expr(
+            f"round({V.cosine_expr_sql(f'slice(embedding, 1, {d_trunc})', trunc_q)}, 6)"
         ).alias("cos"),
     )
     full = scored_full.orderBy(F.col("cos").desc_nulls_last(), F.col("vec_id")).limit(k).select("vec_id")
@@ -2521,7 +2501,7 @@ def split_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textstats import SPLIT_TRAIN_PCT, SPLIT_VAL_PCT
 
     e = tables.load_table(spark, sf_dir, "embeddings")
-    bucket = H.h32_expr(F.col("vec_id").cast("string")) % 100
+    bucket = F.expr(H.h32_expr_sql("CAST(vec_id AS STRING)")) % 100
     split = (
         F.when(bucket < SPLIT_TRAIN_PCT, "train")
         .when(bucket < SPLIT_TRAIN_PCT + SPLIT_VAL_PCT, "val")
@@ -2607,7 +2587,7 @@ def embedding_norm_audit(
     One scan, one per-row higher-order-function norm, one
     map-side-combined aggregation keyed by label — nothing else."""
     e = tables.load_table(spark, sf_dir, "embeddings")
-    nrm = V.norm_expr(F.col("embedding"))
+    nrm = F.expr(V.norm_expr_sql("embedding"))
     rows = e.select("label", nrm.alias("nrm"))
     return rows.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),

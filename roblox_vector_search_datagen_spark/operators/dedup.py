@@ -751,8 +751,8 @@ def _ngram_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, tables.load_table(spark, sf_dir, "documents"), "documents"
     )
     sh = d.select(
-        "doc_id", F.explode(H.word_shingles_expr(F.col("text"))).alias("shingle")
-    ).select("doc_id", H.h32_expr(F.col("shingle")).alias("sh_h"))
+        "doc_id", F.explode(F.expr(H.word_shingles_expr_sql("text"))).alias("shingle")
+    ).select("doc_id", F.expr(H.h32_expr_sql("shingle")).alias("sh_h"))
     return sh.groupBy("sh_h").agg(F.collect_list("doc_id").alias("docs"))
 
 def ngram_dropped_shingles(
@@ -843,7 +843,7 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str, threshold: float = 0.3
     exactly once (probe rows are unique; vec_a < vec_b dedupes the
     symmetric match), per-pair work unchanged."""
     e = tables.load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding", V.norm_expr(F.col("embedding")).alias("nrm")
+        "vec_id", "label", "embedding", F.expr(V.norm_expr_sql("embedding")).alias("nrm")
     )
     a = e.select(
         F.col("vec_id").alias("vec_a"),
@@ -857,10 +857,7 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str, threshold: float = 0.3
         F.col("nrm").alias("nrm_b"),
         "label",
     )
-    denom = F.col("nrm_a") * F.col("nrm_b")
-    cosine = F.when(denom == 0, F.lit(None).cast("double")).otherwise(
-        V.dot_expr(F.col("emb_a"), F.col("emb_b")) / denom
-    )
+    cosine = F.expr(V.cosine_expr_sql("emb_a", "emb_b", "nrm_a", "nrm_b"))
     from ..functions import parallelism
 
     return (
@@ -1173,7 +1170,7 @@ def embedding_lsh_near_dups(
         "vec_id",
         "embedding",
         _sign_bucket_expr(F.col("embedding")).alias("bucket"),
-        V.norm_expr(F.col("embedding")).alias("nrm"),
+        F.expr(V.norm_expr_sql("embedding")).alias("nrm"),
     )
     wb = Window.partitionBy("bucket")
     # the capped bucket table feeds BOTH self-join sides, and the
@@ -1194,10 +1191,7 @@ def embedding_lsh_near_dups(
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"),
         F.col("nrm").alias("nrm_b"), "bucket",
     )
-    denom = F.col("nrm_a") * F.col("nrm_b")
-    cosine = F.when(denom == 0, F.lit(None).cast("double")).otherwise(
-        V.dot_expr(F.col("emb_a"), F.col("emb_b")) / denom
-    )
+    cosine = F.expr(V.cosine_expr_sql("emb_a", "emb_b", "nrm_a", "nrm_b"))
     return (
         a.join(b, "bucket")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -1359,10 +1353,10 @@ def _exact_jaccard_stage(
     ids = pairs.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
-    # word_shingles_expr already dedupes — no outer array_distinct
+    # word_shingles_expr_sql already dedupes — no outer array_distinct
     sh = (
         d.join(ids, "doc_id")
-        .select("doc_id", H.word_shingles_expr(F.col("text")).alias("sh"))
+        .select("doc_id", F.expr(H.word_shingles_expr_sql("text")).alias("sh"))
     )
     sh = persist_if(sh, invariant)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
@@ -1561,7 +1555,7 @@ def semantic_dedup(
     # dot product (the embedding_lsh_near_dups shape)
     m = (
         assign.join(e, "vec_id")
-        .withColumn("nrm", V.norm_expr(F.col("embedding")))
+        .withColumn("nrm", F.expr(V.norm_expr_sql("embedding")))
         .persist()
     )
     a = m.select(
@@ -1578,13 +1572,7 @@ def semantic_dedup(
         F.col("embedding").alias("emb_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    denom = F.col("nrm_a") * F.col("nrm_b")
-    cos = F.round(
-        F.when(denom == 0, F.lit(None).cast("double")).otherwise(
-            V.dot_expr(F.col("emb_a"), F.col("emb_b")) / denom
-        ),
-        6,
-    )
+    cos = F.expr(f"round({V.cosine_expr_sql('emb_a', 'emb_b', 'nrm_a', 'nrm_b')}, 6)")
     dominated = (
         a.join(b, "cent_id")
         # the dominance predicate is cheap and halves the pair space, so

@@ -177,7 +177,7 @@ def shard_assignments(
     `shard_manifest` (which only aggregates per shard and so skips the
     position window entirely)."""
     d = tables.load_table(spark, sf_dir, "documents")
-    key = H.h32_expr(F.concat_ws(":", F.lit(str(seed)), F.col("doc_id").cast("string")))
+    key = F.expr(H.h32_expr_sql(f"concat_ws(':', '{seed}', CAST(doc_id AS STRING))"))
     return d.select("doc_id", key.alias("shuffle_key")).withColumn(
         "shard", F.pmod(F.col("shuffle_key"), F.lit(shards)).cast("int")
     )
@@ -232,7 +232,7 @@ def shard_manifest(
     its key space is (shards x sources), both small by construction.
     """
     d = tables.load_table(spark, sf_dir, "documents")
-    key = H.h32_expr(F.concat_ws(":", F.lit(str(seed)), F.col("doc_id").cast("string")))
+    key = F.expr(H.h32_expr_sql(f"concat_ws(':', '{seed}', CAST(doc_id AS STRING))"))
     # shard computed inline on the SAME projection — one corpus scan,
     # no self-join back to a second documents read (round-3 advice:
     # the shard_assignments join added a corpus-wide exchange here;
@@ -348,7 +348,7 @@ def compaction_plan(
     files = (
         d.select(
             "source",
-            F.pmod(H.h32_expr(F.col("doc_id").cast("string")), F.lit(file_shards))
+            F.pmod(F.expr(H.h32_expr_sql("CAST(doc_id AS STRING)")), F.lit(file_shards))
             .cast("int")
             .alias("file_id"),
             "n_chars",

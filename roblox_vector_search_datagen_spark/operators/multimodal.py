@@ -53,9 +53,7 @@ def _spread_gen_input(
 
     Routed through the layout gate (r13): on a healthy multi-split
     layout the scan is already parallel and the repartition would be a
-    pure extra shuffle, so spread_scan returns the plan unchanged there
-    (and the SPARK_GRAFT_NO_SPREAD kill switch covers the generators
-    in A/Bs like every other spread site)."""
+    pure extra shuffle, so spread_scan returns the plan unchanged there."""
     if not batch:
         return d
     return parallelism.spread_scan(spark, sf_dir, d, "documents", "doc_id")
@@ -1940,10 +1938,8 @@ def audio_sign_fingerprint(
     from ..functions import hashing as H
 
     s = audio_samples(spark, sf_dir, modulo, media_df=media_df)
-    sign_str = F.array_join(
-        F.transform("samples", lambda x: F.when(x >= 0, "1").otherwise("0")), ""
-    )
-    return s.select("doc_id", H.h60_expr(sign_str).alias("fingerprint"))
+    sign_str = "array_join(transform(samples, x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '')"
+    return s.selectExpr("doc_id", f"{H.h60_expr_sql(sign_str)} AS fingerprint")
 
 
 def _audio_sign_sql(modulo: int) -> str:

@@ -508,7 +508,7 @@ def dsir_weights(
         "doc_id",
         "lang",
         F.explode(F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")).alias("word"),
-    ).withColumn("b", F.pmod(H.h32_expr(F.col("word")), F.lit(buckets)))
+    ).withColumn("b", F.pmod(F.expr(H.h32_expr_sql("word")), F.lit(buckets)))
     # the histogram feeds both the totals aggregate and the scoring
     # join; persisting the `buckets`-row table stops Spark re-deriving
     # it from a third corpus scan

@@ -165,7 +165,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.lit(MIXTURE_DEFAULT_PERMILLE)
     for lg, r in MIXTURE_PERMILLE.items():
         rate = F.when(F.col("lang") == lg, r).otherwise(rate)
-    gate = H.h32_expr(F.col("doc_id").cast("string")) % 1000
+    gate = F.expr(H.h32_expr_sql("CAST(doc_id AS STRING)")) % 1000
     return (
         d.withColumn("rate_permille", rate.cast("int"))
         .filter(gate < F.col("rate_permille"))
@@ -199,8 +199,10 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = parallelism.spread_scan(
         spark, sf_dir, tables.load_table(spark, sf_dir, "documents"), "documents", "doc_id"
     )
-    bucket = H.h32_expr(F.col("doc_id").cast("string")) % 100
-    docs = d.select("doc_id", bucket.alias("bucket"), H.word_shingles_expr(F.col("text")).alias("sh"))
+    bucket = F.expr(H.h32_expr_sql("CAST(doc_id AS STRING)")) % 100
+    docs = d.select(
+        "doc_id", bucket.alias("bucket"), F.expr(H.word_shingles_expr_sql("text")).alias("sh")
+    )
     train = docs.filter(F.col("bucket") < _TRAIN_BUCKET_LT).select(
         "doc_id", F.explode("sh").alias("shingle")
     )
@@ -351,7 +353,7 @@ def pack_sequences(
     so parallelism scales with shard count and no global sort exists
     — shard count would be O(corpus/executor-memory) at 100 TB."""
     d = tables.load_table(spark, sf_dir, "documents")
-    bucket = H.h32_expr(F.col("doc_id").cast("string")) % 100
+    bucket = F.expr(H.h32_expr_sql("CAST(doc_id AS STRING)")) % 100
     toks = d.select(
         "doc_id",
         bucket.cast("int").alias("shard"),
@@ -414,7 +416,7 @@ def pack_efficiency_report(
     (doc -> shard totals -> split rollup); the whole report is one
     corpus scan and two tiny exchanges."""
     d = tables.load_table(spark, sf_dir, "documents")
-    bucket = H.h32_expr(F.col("doc_id").cast("string")) % 100
+    bucket = F.expr(H.h32_expr_sql("CAST(doc_id AS STRING)")) % 100
     toks = d.select(
         bucket.cast("int").alias("shard"),
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test").alias("split"),
@@ -585,7 +587,7 @@ def per_group_sample(spark: SparkSession, sf_dir: str, k: int = SAMPLE_PER_GROUP
     the group key; the rank window runs inside each group partition.
     Emits (doc_id, source, sample_rank)."""
     d = tables.load_table(spark, sf_dir, "documents")
-    hkey = H.h32_expr(F.concat(F.lit("pgs:"), F.col("doc_id").cast("string")))
+    hkey = F.expr(H.h32_expr_sql("concat('pgs:', CAST(doc_id AS STRING))"))
     w = Window.partitionBy("source").orderBy(F.asc("hkey"), F.asc("doc_id"))
     return (
         d.select("doc_id", "source", hkey.alias("hkey"))
@@ -1469,16 +1471,16 @@ def bloom_decontaminate(
     d = parallelism.spread_scan(
         spark, sf_dir, tables.load_table(spark, sf_dir, "documents"), "documents"
     )
-    bucket = H.h32_expr(F.col("doc_id").cast("string")) % 100
+    bucket = F.expr(H.h32_expr_sql("CAST(doc_id AS STRING)")) % 100
     docs = d.select(
-        "doc_id", bucket.alias("bucket"), H.word_shingles_expr(F.col("text")).alias("sh")
+        "doc_id", bucket.alias("bucket"), F.expr(H.word_shingles_expr_sql("text")).alias("sh")
     )
     # persisted: the bit-position derivation AND the exact-twin probe
     # both reference the benchmark hash set — one shingle pass, not two
     bench_h = (
         docs.filter(F.col("bucket") >= _TEST_BUCKET_GE)
         .select(F.explode("sh").alias("shingle"))
-        .select(H.h32_expr(F.col("shingle")).alias("h"))
+        .select(F.expr(H.h32_expr_sql("shingle")).alias("h"))
         .distinct()
         .persist()
     )
@@ -1489,7 +1491,7 @@ def bloom_decontaminate(
     bits = persist_if(
         bench_h.select(
             F.explode(
-                F.array(*[H.minhash_value_expr(F.col("h"), j) % m for j in range(k)])
+                F.array(*[F.expr(H.minhash_value_expr_sql("h", j)) % m for j in range(k)])
             ).alias("pos")
         )
         .distinct()
@@ -1502,7 +1504,7 @@ def bloom_decontaminate(
     train = (
         docs.filter(F.col("bucket") < _TRAIN_BUCKET_LT)
         .select("doc_id", F.explode("sh").alias("shingle"))
-        .select("doc_id", H.h32_expr(F.col("shingle")).alias("h"))
+        .select("doc_id", F.expr(H.h32_expr_sql("shingle")).alias("h"))
         .distinct()
     )
     # one broadcast probe-join PER HASH FUNCTION (a plan constant)
@@ -1517,7 +1519,7 @@ def bloom_decontaminate(
             bits.select(F.col("pos").alias(f"p{j}"), F.col("bit").alias(f"bit{j}"))
         )
         per_shingle = per_shingle.join(
-            bj, (H.minhash_value_expr(F.col("h"), j) % m) == F.col(f"p{j}"), "left"
+            bj, (F.expr(H.minhash_value_expr_sql("h", j)) % m) == F.col(f"p{j}"), "left"
         )
     bloom_hit = F.lit(True)
     for j in range(k):
@@ -1775,7 +1777,7 @@ def weighted_sample(
     engines; doc_id breaks exact ties. Emits (source, rank, doc_id,
     n_chars, u, key)."""
     d = tables.load_table(spark, sf_dir, "documents")
-    u = (H.h32_expr(F.col("doc_id").cast("string")) % 1_000_000 + 1) / 1_000_000.0
+    u = (F.expr(H.h32_expr_sql("CAST(doc_id AS STRING)")) % 1_000_000 + 1) / 1_000_000.0
     # greatest(n_chars, 1): an empty document would make 1/n_chars a
     # NULL key (div-by-zero), and NULL placement under DESC differs
     # between engines — clamp the weight so the key is always defined,

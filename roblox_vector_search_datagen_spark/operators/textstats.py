@@ -251,7 +251,7 @@ def dataset_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def split_struct_expr():
     """struct(bucket, split) over `doc_id` — exposed as a bare
     expression for fused pipelines."""
-    bucket = H.h32_expr(F.col("doc_id").cast("string")) % 100
+    bucket = F.expr(H.h32_expr_sql("CAST(doc_id AS STRING)")) % 100
     return F.struct(
         bucket.cast("int").alias("bucket"),
         F.when(bucket < SPLIT_TRAIN_PCT, "train")
@@ -279,9 +279,9 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tables.load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        H.h32_expr(F.col("text")).alias("content_hash"),
-        F.array_min(
-            F.transform(H.word_shingles_expr(F.col("text")), lambda s: H.h32_expr(s))
+        F.expr(H.h32_expr_sql("text")).alias("content_hash"),
+        F.expr(
+            f"array_min(transform({H.word_shingles_expr_sql('text')}, s -> {H.h32_expr_sql('s')}))"
         ).alias("min_shingle_hash"),
     )
 
@@ -529,10 +529,9 @@ def hybrid_search(
         bm25_search(spark, sf_dir, terms, pool)
         .select("doc_id", F.row_number().over(wt).cast("int").alias("text_rank"))
     )
-    qv = V.vector_lit(V.embed_query(" ".join(terms)))
-    vecs = tables.load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id"),
-        F.round(V.cosine_expr(F.col("embedding"), qv), 6).alias("cosine"),
+    qv = V.vector_lit_spark_sql(V.embed_query(" ".join(terms)))
+    vecs = tables.load_table(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id AS doc_id", f"round({V.cosine_expr_sql('embedding', qv)}, 6) AS cosine"
     )
     wv = Window.orderBy(F.col("cosine").desc_nulls_last(), F.col("doc_id"))
     vec_ranked = (
@@ -645,7 +644,12 @@ BPE_MERGES = 6
 _BPE_MEMO: dict[tuple[str, str, int, int], list[tuple[int, str, str, int]]] = {}
 
 
-def _bpe_apply_expr(seg, a: str, b: str) -> F.Column:
+def _sql_str(s: str) -> str:
+    """Spark-SQL single-quoted string literal of `s` (escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _bpe_apply_expr_sql(seg: str, a: str, b: str) -> str:
     """One BPE merge applied to a space-separated segmentation string:
     the exact left-to-right greedy pass of Sennrich et al. 2016 §3.2,
     as a string fold — merge when the accumulated string's LAST symbol
@@ -661,30 +665,10 @@ def _bpe_apply_expr(seg, a: str, b: str) -> F.Column:
     for m chained merges (the first cut did exactly that: 4
     references, 50s for a 6-merge fertility pass that runs in ~1s
     linear). Folding from an empty-string init with the first symbol
-    handled inside the lambda keeps the m-round chain linear."""
-    return F.aggregate(
-        F.split(seg, " "),
-        F.lit(""),
-        lambda acc, x: F.when(acc == "", x)
-        .when(
-            (F.regexp_extract(acc, "[^ ]*$", 0) == F.lit(a)) & (x == F.lit(b)),
-            F.concat(acc, x),
-        )
-        .otherwise(F.concat(acc, F.lit(" "), x)),
-    )
-
-
-def _sql_str(s: str) -> str:
-    """Spark-SQL single-quoted string literal of `s` (escaped)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _bpe_apply_expr_sql(seg: str, a: str, b: str) -> str:
-    """Spark-SQL text twin of `_bpe_apply_expr` (same fold, one parse
-    instead of ~20 py4j round-trips per merge round — the m-round
-    chain was the dominant plan-construction cost of the encode
-    family, r12 profile). `seg` is referenced exactly once for the
-    same interpreted-CSE reason as the Column form."""
+    handled inside the lambda keeps the m-round chain linear. As text
+    each round is one parse, not the ~20 py4j round-trips of a Column
+    built from the same functions (r12 profile: the m-round chain
+    dominated the encode family's plan construction)."""
     return (
         f"aggregate(split({seg}, ' '), '', (acc, x) -> "
         f"CASE WHEN acc = '' THEN x "
@@ -784,7 +768,7 @@ def _bpe_train(
             break
         a, b, total = top[0].a, top[0].b, int(top[0].total)
         merges.append((r, a, b, total))
-        cur = cur.select("w", "cnt", _bpe_apply_expr(F.col("seg"), a, b).alias("seg"))
+        cur = cur.selectExpr("w", "cnt", f"{_bpe_apply_expr_sql('seg', a, b)} AS seg")
         if checkpoint_every and r % checkpoint_every == 0:
             cur = cur.localCheckpoint()
     _BPE_MEMO[key] = merges
@@ -1090,9 +1074,7 @@ def token_shards(
     seed = SHUFFLE_SEED if seed is None else seed
     shards = SHUFFLE_SHARDS if shards is None else shards
     shard = F.pmod(
-        H.h32_expr(
-            F.concat_ws(":", F.lit(str(seed)), F.col("doc_id").cast("string"))
-        ),
+        F.expr(H.h32_expr_sql(f"concat_ws(':', '{seed}', CAST(doc_id AS STRING))")),
         F.lit(shards),
     ).cast("int")
     return _bpe_encode(spark, sf_dir, m).select(
@@ -1533,7 +1515,7 @@ def token_shards_upsert(
         "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
     ).filter(F.col("w") != "")
     shard = F.pmod(
-        H.h32_expr(F.concat_ws(":", F.lit(str(seed_v)), F.col("doc_id").cast("string"))),
+        F.expr(H.h32_expr_sql(f"concat_ws(':', '{seed_v}', CAST(doc_id AS STRING))")),
         F.lit(shards_v),
     ).cast("int")
     new = (
@@ -1755,7 +1737,7 @@ def pack_token_sequences(
         "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
     ).filter(F.col("w") != "")
     shard = F.pmod(
-        H.h32_expr(F.concat_ws(":", F.lit(str(seed)), F.col("doc_id").cast("string"))),
+        F.expr(H.h32_expr_sql(f"concat_ws(':', '{seed}', CAST(doc_id AS STRING))")),
         F.lit(shards),
     ).cast("int")
     per_doc = (
@@ -1922,14 +1904,14 @@ def heavy_hitters(
     d = tables.load_table(spark, sf_dir, "documents")
     toks = d.select(
         F.explode(F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")).alias("term")
-    ).withColumn("h", H.h32_expr(F.col("term")))
+    ).withColumn("h", F.expr(H.h32_expr_sql("term")))
     rows = toks.select(
         "term",
         F.explode(
             F.array(*[
                 F.struct(
                     F.lit(i).alias("row"),
-                    (H.minhash_value_expr(F.col("h"), i) % width).alias("bucket"),
+                    (F.expr(H.minhash_value_expr_sql("h", i)) % width).alias("bucket"),
                 )
                 for i in range(depth)
             ])
@@ -1951,7 +1933,7 @@ def heavy_hitters(
         ci = counters.filter(F.col("row") == i).select(
             F.col("bucket").alias(f"b{i}"), F.col("c").alias(f"c{i}")
         )
-        est = est.withColumn(f"b{i}", H.minhash_value_expr(F.col("h"), i) % width).join(
+        est = est.withColumn(f"b{i}", F.expr(H.minhash_value_expr_sql("h", i)) % width).join(
             F.broadcast(ci), f"b{i}"
         )
     n_est = F.least(*[F.col(f"c{i}") for i in range(depth)])

@@ -69,17 +69,6 @@ IMAGE_SCHEMA = T.StructType(
     ]
 )
 
-# LLM gameplay-analysis struct (prompts/localAnalysis.json:7-41;
-# generateGameplayDescriptions.ts:152-158).
-GAMEPLAY_ANALYSIS_SCHEMA = T.StructType(
-    [
-        T.StructField("gameplaySummary", T.StringType(), nullable=False),
-        T.StructField("genreTags", T.ArrayType(T.StringType()), nullable=False),
-        T.StructField("gameFeatures", T.ArrayType(T.StringType()), nullable=False),
-    ]
-)
-
-
 @functools.lru_cache(maxsize=32)
 def _ddl_schema(ddl: str) -> T.StructType:
     return T.StructType.fromDDL(ddl)

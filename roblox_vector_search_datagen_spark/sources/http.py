@@ -250,11 +250,6 @@ def parse_rolimons_games(html: str) -> dict[str, dict]:
     payload = html.split("var games = ")[1].split("document.addEventListener")[0].strip()
     return json.loads(payload[:-1])  # trailing ';'
 
-def skip_existing(worklist: DataFrame, existing: DataFrame, key: str = "universeId") -> DataFrame:
-    """P6 idempotence guard: drop ids that already have results — the
-    anti-join that makes task-retry double-fires harmless."""
-    return worklist.join(existing.select(key), key, "left_anti")
-
 def base64_image_expr(content_col: str = "content") -> F.Column:
     """F17 (generateGameplayDescriptions.ts:81,97): data-URL encoding of
     an image binary column, JVM-side."""

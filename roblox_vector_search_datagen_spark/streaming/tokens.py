@@ -58,7 +58,7 @@ from ..functions import hashing as H
 from ..operators.textstats import (
     BPE_MERGES,
     TOKEN_DOC_HWM,
-    _bpe_apply_expr,
+    _bpe_seg_sql,
     stored_bpe_merges,
     stored_bpe_segments,
     stored_token_manifest,
@@ -122,15 +122,11 @@ def stream_token_shard_upsert(
         "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
     ).filter(F.col("w") != "")
     shard = F.pmod(
-        H.h32_expr(
-            F.concat_ws(":", F.lit(str(seed_v)), F.col("doc_id").cast("string"))
-        ),
+        F.expr(H.h32_expr_sql(f"concat_ws(':', '{seed_v}', CAST(doc_id AS STRING))")),
         F.lit(shards_v),
     ).cast("int")
-    seg = F.array_join(F.split(F.col("w"), ""), " ")
-    for _, a, b, _t in stored_bpe_merges(spark, sf_dir, m):
-        seg = _bpe_apply_expr(seg, a, b)
-    fallback_n = F.size(F.split(seg, " "))
+    seg = _bpe_seg_sql(stored_bpe_merges(spark, sf_dir, m))
+    fallback_n = F.expr(f"size(split({seg}, ' '))")
     return (
         occurrences.join(F.broadcast(word_n), "w", "left")
         .select(

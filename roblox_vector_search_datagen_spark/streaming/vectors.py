@@ -23,8 +23,8 @@ Scale shape — this is the part worth copying at 100 TB:
 * The scoring is a STATELESS projection. The K x dim frozen centroid
   table is collected once on the driver (K rows — the same
   constant-size driver table the query encoder uses, vector.py
-  vector_lit) and rides into every task as plan literals, with each
-  centroid's norm pre-computed driver-side so the per-row work is K
+  vector_lit_spark_sql) and rides into every task as plan literals,
+  with each centroid's norm pre-computed driver-side so the per-row work is K
   dot products, not K full cosines. No state store, no shuffle, no
   per-microbatch recompute of anything corpus-sized: per-batch cost is
   |new vectors| x K multiply-adds, horizontally scalable to any
@@ -71,8 +71,8 @@ def _frozen_centroids(spark: SparkSession, sf_dir: str, k: int) -> list[tuple[in
     return sorted((r.vec_id, [float(x) for x in r.embedding]) for r in rows)
 
 
-def _nearest_centroid_cols(emb, cents: list[tuple[int, list[float]]]):
-    """(cent_id, cosine) columns routing `emb` to its nearest frozen
+def _nearest_centroid_cols(emb: str, cents: list[tuple[int, list[float]]]):
+    """(cent_id, cosine) columns routing column `emb` to its nearest frozen
     centroid, bit-identical to the batch twin's crossJoin + argmax
     window (ann.py:ivf_upsert_assignments): double accumulation in
     element order for the dot and the vector norm, denominator formed
@@ -81,17 +81,14 @@ def _nearest_centroid_cols(emb, cents: list[tuple[int, list[float]]]):
     order), round to 6, ties broken to the smallest cent_id, and a
     zero-norm vector degrades to (smallest cent_id, NULL) exactly as
     the window's DESC NULLS LAST ordering does."""
-    norm_a = V.norm_expr(emb)
+    norm_a = V.norm_expr_sql(emb)
     scores = []
     for cent_id, vec in cents:
-        norm_b = math.sqrt(_seq_sumsq(vec))
-        denom = norm_a * F.lit(norm_b)
-        cos = F.when(denom == 0, F.lit(None).cast("double")).otherwise(
-            V.dot_expr(emb, F.array(*[F.lit(float(x)) for x in vec])) / denom
-        )
+        norm_b = f"{math.sqrt(_seq_sumsq(vec))!r}D"
+        cos = V.cosine_expr_sql(emb, V.vector_lit_spark_sql(vec), norm_a, norm_b)
         scores.append(
             F.struct(
-                F.round(cos, 6).alias("cosine"),
+                F.expr(f"round({cos}, 6)").alias("cosine"),
                 F.lit(-cent_id).cast("long").alias("neg_cent"),
             )
         )
@@ -149,7 +146,7 @@ def stream_ivf_upsert(
         )
     delta = stream.join(index.select("vec_id"), "vec_id", "left_anti")
     cents = _frozen_centroids(spark, sf_dir, k)
-    cent_id, cosine = _nearest_centroid_cols(F.col("embedding"), cents)
+    cent_id, cosine = _nearest_centroid_cols("embedding", cents)
     return delta.select(
         "vec_id", cent_id.alias("cent_id"), cosine.alias("cosine")
     )

@@ -113,9 +113,3 @@ def test_embed_texts_batches_of_10(spark):
     by_id = {r.universeId: r.embedding for r in out}
     assert by_id[4][1] == 5.0  # text length mapped through
     assert all(r.embedding[0] <= 10.0 for r in out)  # batch cap respected
-
-def test_skip_existing_anti_join(spark):
-    work = spark.range(10).selectExpr("id AS universeId")
-    have = spark.range(0, 10, 2).selectExpr("id AS universeId")
-    remaining = sorted(r.universeId for r in H.skip_existing(work, have).collect())
-    assert remaining == [1, 3, 5, 7, 9]

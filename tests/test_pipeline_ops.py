@@ -352,6 +352,40 @@ def _py_bpe_reference(word_freq, m):
     return merges, segs
 
 
+def _py_bpe_fold(seg, a, b):
+    """Pure-Python form of the fold rule: walk the symbols left to right
+    and glue `b` onto the previous output symbol when that symbol is `a`."""
+    out = []
+    for x in seg.split(" "):
+        if out and out[-1] == a and x == b:
+            out[-1] += x
+        else:
+            out.append(x)
+    return " ".join(out)
+
+
+def test_bpe_apply_expr_sql_escapes_quote_backslash_and_dollar(spark):
+    """Merge symbols reach the Spark-SQL fold as string literals; a
+    quote, a backslash or a dollar sign in a symbol must match exactly
+    as the same fold in Python does."""
+    from roblox_vector_search_datagen_spark.schemas import local_df
+
+    words = ["it's", "a\\b\\b", "$$x", "'$\\'", "x's$", "\\'s"]
+    merges = [
+        ("'", "s"), ("\\", "b"), ("$", "$"), ("$$", "x"), ("t", "'s"), ("'", "$"), ("\\", "'s")
+    ]
+    seg_sql = "seg"
+    expected = {w: " ".join(w) for w in words}
+    for a, b in merges:
+        seg_sql = textstats._bpe_apply_expr_sql(seg_sql, a, b)
+        expected = {w: _py_bpe_fold(seg, a, b) for w, seg in expected.items()}
+    assert expected["it's"] == "i t's" and expected["$$x"] == "$$x"
+    assert expected["\\'s"] == "\\'s" and expected["a\\b\\b"] == "a \\b \\b"
+    df = local_df(spark, [(w, " ".join(w)) for w in words], "w string, seg string")
+    got = {r.w: r.out for r in df.select("w", F.expr(seg_sql).alias("out")).collect()}
+    assert got == expected
+
+
 def test_bpe_merges_match_pure_python_trainer(spark, sf_dir):
     """The relational trainer must learn EXACTLY the merges an
     independent in-memory Sennrich implementation learns from the same

@@ -7,8 +7,9 @@ refactor that silently degrades the plan fails CI, not the cluster."""
 from __future__ import annotations
 
 import io
+import os
 import re
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +21,24 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+@contextmanager
+def healthy_layout(spark, sf_dir, table="documents"):
+    """Lower the split size until a scan of `table` reaches the
+    cluster's parallelism, the layout a real multi-file table has, so
+    spread_scan leaves plans unchanged; the setting is restored on exit."""
+    from roblox_vector_search_datagen_spark.functions import parallelism
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    size = parallelism._size_bytes(os.path.join(sf_dir, f"{table}.parquet"))
+    cores = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, str(max(1, size // cores)))
+    try:
+        assert parallelism.scan_splits(spark, sf_dir, table) >= cores
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 def test_vector_search_broadcasts_topk(spark, sf_dir):
     """The scoring frame's embeddings-to-games join must broadcast —
@@ -94,8 +113,6 @@ def test_corpus_prep_projections_are_shuffle_free(spark, sf_dir):
     healthy (gate pinned by test_spread_scan_gates_on_layout).
     pack_sequences gets exactly one (the per-shard window). All stay
     JVM-side."""
-    import os
-
     from roblox_vector_search_datagen_spark.operators import textprep
 
     for fn in (textprep.doc_chunks, textprep.stratified_sample):
@@ -106,13 +123,10 @@ def test_corpus_prep_projections_are_shuffle_free(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange", p)) <= 1
     assert "roundrobin" in p.lower() or "Exchange" not in p
     assert "EvalPython" not in p
-    # with the layout repair disabled the pass is exchange-free again
-    os.environ["SPARK_GRAFT_NO_SPREAD"] = "1"
-    try:
+    # on a healthy layout the pass is exchange-free
+    with healthy_layout(spark, sf_dir):
         p = plan_of(textprep.repetition_stats(spark, sf_dir))
         assert "Exchange" not in p
-    finally:
-        del os.environ["SPARK_GRAFT_NO_SPREAD"]
     p = plan_of(textprep.pack_sequences(spark, sf_dir))
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
     assert "EvalPython" not in p
@@ -269,8 +283,6 @@ def test_quality_ops_are_pure_catalyst_and_shuffle_free(spark, sf_dir):
     (functions/parallelism.spread_scan — regex-heavy per-row work on a
     degenerate single-split fixture scan; gated off on healthy
     layouts, pinned by test_spread_scan_gates_on_layout)."""
-    import os
-
     from roblox_vector_search_datagen_spark.operators import quality
 
     for df in (quality.pii_scrub(spark, sf_dir), quality.quality_filter(spark, sf_dir)):
@@ -281,11 +293,8 @@ def test_quality_ops_are_pure_catalyst_and_shuffle_free(spark, sf_dir):
     p = plan_of(quality.pii_scrub(spark, sf_dir))
     assert len(re.findall(r"\(\d+\) Exchange", p)) <= 1
     assert "roundrobin" in p.lower() or "Exchange" not in p
-    os.environ["SPARK_GRAFT_NO_SPREAD"] = "1"
-    try:
+    with healthy_layout(spark, sf_dir):
         assert "Exchange" not in plan_of(quality.pii_scrub(spark, sf_dir))
-    finally:
-        del os.environ["SPARK_GRAFT_NO_SPREAD"]
 
 def test_sq_quantize_broadcasts_dimension_stats(spark, sf_dir):
     """The per-dimension min/max table (dim rows) must broadcast to the

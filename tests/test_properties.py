@@ -12,45 +12,49 @@ from pyspark.sql import functions as F
 
 from roblox_vector_search_datagen_spark.functions import vector as V
 from roblox_vector_search_datagen_spark.operators import maintenance
+from roblox_vector_search_datagen_spark.schemas import local_df
 from roblox_vector_search_datagen_spark.sources import tables
 
 # ---------------------------------------------------------------------------
-# cosine kernel (numpy batch path) — pure-python property tests
+# cosine kernel (the Spark-SQL form) — property tests
 # ---------------------------------------------------------------------------
 
 vec = st.lists(st.floats(-10, 10, allow_nan=False, width=32), min_size=4, max_size=16)
 
-@given(vec)
-@settings(max_examples=200, deadline=None)
-def test_cosine_self_similarity_is_one(v):
-    a = np.array([v], dtype=np.float32)
-    if np.linalg.norm(a[0]) == 0:
-        return
-    sim = V.cosine_batch(a, a[0])[0]
-    assert math.isclose(sim, 1.0, abs_tol=1e-6)
+@given(v=vec)
+@settings(max_examples=25, deadline=None)
+def test_cosine_self_similarity_is_one(spark, v):
+    df = local_df(spark, [(v,)], "a array<double>")
+    (sim,) = df.select(F.expr(V.cosine_expr_sql("a", "a"))).first()
+    if not any(v):
+        assert sim is None  # zero norm -> NULL
+    else:
+        assert math.isclose(sim, 1.0, abs_tol=1e-6)
 
-@given(vec, st.floats(0.1, 100, allow_nan=False))
-@settings(max_examples=200, deadline=None)
-def test_cosine_scale_invariance(v, k):
-    a = np.array([v], dtype=np.float64)
-    if np.linalg.norm(a[0]) == 0:
+@given(v=vec, k=st.floats(0.1, 100, allow_nan=False))
+@settings(max_examples=25, deadline=None)
+def test_cosine_scale_invariance(spark, v, k):
+    if not any(v):
         return
-    s1 = V.cosine_batch(a, a[0] * k)[0]
-    s2 = V.cosine_batch(a, a[0])[0]
+    df = local_df(spark, [(v, [x * k for x in v])], "a array<double>, b array<double>")
+    s1, s2 = df.select(
+        F.expr(V.cosine_expr_sql("a", "b")), F.expr(V.cosine_expr_sql("a", "a"))
+    ).first()
     assert math.isclose(s1, s2, abs_tol=1e-9)
 
 def test_cosine_expr_matches_numpy(spark):
     rows = [([1.0, 2.0, 3.0],), ([0.0, 0.0, 0.0],), ([-1.5, 0.5, 2.0],)]
     df = spark.createDataFrame(rows, "embedding: array<float>")
     q = [0.5, -1.0, 2.0]
-    got = df.select(V.cosine_expr(F.col("embedding"), V.vector_lit(q)).alias("c")).collect()
-    mat = np.array([r[0] for r in rows], dtype=np.float32)
-    want = V.cosine_batch(mat, np.array(q))
-    for g, w in zip(got, want):
-        if math.isnan(w):
+    cos = V.cosine_expr_sql("embedding", V.vector_lit_spark_sql(q))
+    got = df.select(F.expr(cos).alias("c")).collect()
+    mat = np.array([r[0] for r in rows], dtype=np.float32).astype(np.float64)
+    norms = np.linalg.norm(mat, axis=1) * np.linalg.norm(q)
+    for g, dot, n in zip(got, mat @ np.array(q), norms):
+        if n == 0:
             assert g.c is None  # zero-norm -> NULL relationally
         else:
-            assert math.isclose(g.c, w, abs_tol=1e-9)
+            assert math.isclose(g.c, dot / n, abs_tol=1e-9)
 
 def test_embed_query_deterministic_and_bounded():
     a = V.embed_query("hello", 64)

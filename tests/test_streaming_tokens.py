@@ -156,7 +156,7 @@ def test_stream_token_shard_upsert_multibatch_drops_frozen_docs(
             spark.range(1)
             .select(
                 F.pmod(
-                    H.h32_expr(F.lit(f"{SHUFFLE_SEED}:{doc_id}")),
+                    F.expr(H.h32_expr_sql(f"'{SHUFFLE_SEED}:{doc_id}'")),
                     F.lit(SHUFFLE_SHARDS),
                 ).cast("int")
             )

@@ -80,7 +80,7 @@ def test_stream_ivf_upsert_multibatch_anti_join_drops_indexed(spark, sf_dir, tmp
     assert sorted(r.vec_id for r in out) == [hwm + 1, hwm + 2, hwm + 3]
     # routing parity: the same rows through the batch-side expression
     cents = SV._frozen_centroids(spark, sf_dir, ann.IVF_K)
-    cent_col, cos_col = SV._nearest_centroid_cols(F.col("embedding"), cents)
+    cent_col, cos_col = SV._nearest_centroid_cols("embedding", cents)
     expected = {
         (r.vec_id, r.cent_id, r.cosine)
         for r in spark.createDataFrame(
@@ -96,7 +96,7 @@ def test_nearest_centroid_expr_tie_breaks_to_smallest_cent(spark):
     """Two identical centroids: the argmax must pick the smaller
     cent_id, matching the batch window's cosine DESC, cent_id ASC."""
     cents = [(5, [1.0, 0.0]), (7, [1.0, 0.0])]
-    cent_col, cos_col = SV._nearest_centroid_cols(F.col("embedding"), cents)
+    cent_col, cos_col = SV._nearest_centroid_cols("embedding", cents)
     row = (
         spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<float>")
         .select(cent_col.alias("cent_id"), cos_col.alias("cosine"))
@@ -111,7 +111,7 @@ def test_nearest_centroid_expr_zero_norm_degrades_to_null(spark):
     batch window's DESC NULLS LAST ordering then lands on the smallest
     cent_id with NULL cosine — the expression must do the same."""
     cents = [(3, [1.0, 0.0]), (9, [0.0, 1.0])]
-    cent_col, cos_col = SV._nearest_centroid_cols(F.col("embedding"), cents)
+    cent_col, cos_col = SV._nearest_centroid_cols("embedding", cents)
     row = (
         spark.createDataFrame([(1, [0.0, 0.0])], "vec_id long, embedding array<float>")
         .select(cent_col.alias("cent_id"), cos_col.alias("cosine"))
