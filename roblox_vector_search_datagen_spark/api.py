@@ -17,7 +17,8 @@ Reference behaviors kept:
   handler's rows don't match its declared columns
 * async-job POSTs create a pending job, run the command in the
   background, and return the job id immediately
-  (gatherGames.post.ts:29-57; setImmediate -> a driver thread pool)
+  (gatherGames.post.ts:29-57; setImmediate -> a one-worker driver
+  executor, so jobs run one at a time in submission order)
 
 Where the reference reloads its JSON files on every request, the read
 endpoints here answer from the corpus snapshot of the current version
@@ -28,7 +29,6 @@ by every corpus write.
 from __future__ import annotations
 
 import json
-import threading
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
 
@@ -94,7 +94,6 @@ class ApiService:
         llm_model: str = "local",
         embed_base_url: str | None = None,
         embed_model: str = "local",
-        max_workers: int = 2,
     ):
         self.corpus = corpus
         self.jobs = jobs
@@ -103,11 +102,11 @@ class ApiService:
         self.llm_model = llm_model
         self.embed_base_url = embed_base_url or llm_base_url
         self.embed_model = embed_model
-        self._pool = ThreadPoolExecutor(max_workers=max_workers)
         # corpus mutations rewrite parquet dirs with a stage-then-swap
-        # whose staging writes are not locked — serialize the pipeline
-        # jobs so two concurrent POSTs can't interleave and lose a table
-        self._mutation_lock = threading.Lock()
+        # whose staging writes are not locked: one worker runs the
+        # pipeline jobs in order, so two POSTs can't interleave and
+        # lose a table
+        self._pool = ThreadPoolExecutor(1)
 
     # -- synchronous query endpoints ---------------------------------------
 
@@ -174,11 +173,7 @@ class ApiService:
     def _submit(self, command: str, fn: Callable[[], Any]) -> dict:
         job_id = self.jobs.create_job(command)
 
-        def run():
-            with self._mutation_lock:
-                self.jobs.run_job(job_id, lambda: json.dumps(fn()))
-
-        self._pool.submit(run)
+        self._pool.submit(self.jobs.run_job, job_id, lambda: json.dumps(fn()))
         return {"jobId": job_id, "status": "pending"}
 
     def post_gather_games(self) -> dict:

@@ -62,56 +62,27 @@ def _new_batch_df(corpus: Corpus, rows: list[dict]) -> DataFrame:
 # gather family
 # ---------------------------------------------------------------------------
 
-def gather_games(corpus: Corpus, transport: http.Transport, **retry_kw) -> int:
-    rows = http.gather_games_pages(transport, str(uuid.uuid4()), **retry_kw)
-    merged = maintenance._merge(
-        corpus.games(),
-        _new_batch_df(corpus, rows),
-        {"name": F.col("n_name"), "rootPlaceId": F.col("n_rootPlaceId")},
-    )
-    corpus.write_games(merged)
+def gather_games(corpus: Corpus, transport: http.Transport) -> int:
+    rows = http.gather_games_pages(transport, str(uuid.uuid4()))
+    corpus.write_games(maintenance.merge_gather_df(corpus.games(), _new_batch_df(corpus, rows)))
     return len(rows)
 
-def gather_games_from_search(corpus: Corpus, transport: http.Transport, query: str, **retry_kw) -> int:
-    rows = http.gather_games_from_search(transport, query, str(uuid.uuid4()), **retry_kw)
-    merged = maintenance._merge(
-        corpus.games(),
-        _new_batch_df(corpus, rows),
-        {
-            "name": F.col("n_name"),
-            "rootPlaceId": F.col("n_rootPlaceId"),
-            "playerCount": F.col("n_playerCount"),
-        },
-    )
-    corpus.write_games(merged)
+def gather_games_from_search(corpus: Corpus, transport: http.Transport, query: str) -> int:
+    rows = http.gather_games_from_search(transport, query, str(uuid.uuid4()))
+    corpus.write_games(maintenance.merge_search_df(corpus.games(), _new_batch_df(corpus, rows)))
     return len(rows)
 
-def gather_games_rolimons(corpus: Corpus, transport: http.Transport, **retry_kw) -> int:
-    _, html = transport("GET", "https://rolimons.com/games", {}, None)
-    rows = http.rolimons_rows(transport, html.decode(), **retry_kw)
-    merged = maintenance._merge(
-        corpus.games(),
-        _new_batch_df(corpus, rows),
-        {
-            "name": F.col("n_name"),
-            "rootPlaceId": F.col("n_rootPlaceId"),
-            "description": F.coalesce(F.col("n_description"), F.col("description")),
-        },
-    )
-    corpus.write_games(merged)
+def gather_games_rolimons(corpus: Corpus, transport: http.Transport) -> int:
+    html = http.request(transport, "GET", "https://rolimons.com/games")
+    rows = http.rolimons_rows(transport, html.decode())
+    corpus.write_games(maintenance.merge_rolimons_df(corpus.games(), _new_batch_df(corpus, rows)))
     return len(rows)
 
 # ---------------------------------------------------------------------------
 # enrichment commands
 # ---------------------------------------------------------------------------
 
-def download_descriptions(
-    corpus: Corpus,
-    transport_factory: Callable[[], http.Transport],
-    *,
-    concurrency: int = 4,
-    retry: http.RetryPolicy | None = None,
-) -> int:
+def download_descriptions(corpus: Corpus, transport_factory: Callable[[], http.Transport]) -> int:
     """downloadDescriptions.ts:12-79. Returned games take the fetched
     description ('' when the API sent blank/null — known-blank encoding)
     and playerCount; worklist ids the API did NOT return are marked ''
@@ -121,11 +92,11 @@ def download_descriptions(
     keeps its real description (J3). Returns the non-null descriptions
     in the rewritten table."""
     g = corpus.games()
-    wl = g.filter(F.col("description").isNull() | F.col("playerCount").isNull()).select("universeId")
+    wl = maintenance.needs_details_df(g).select("universeId")
     if wl.isEmpty():
         return 0
     details = (
-        http.enrich_with_game_details(wl, transport_factory, concurrency=concurrency, retry=retry)
+        http.enrich_with_game_details(wl, transport_factory)
         .select(
             "universeId",
             F.coalesce(F.col("description"), F.lit("")).alias("n_desc"),
@@ -155,13 +126,7 @@ def download_descriptions(
     corpus.write_games(out.observe(obs, F.count("description").alias("n")))
     return obs.get["n"]
 
-def download_images(
-    corpus: Corpus,
-    transport_factory: Callable[[], http.Transport],
-    *,
-    concurrency: int = 4,
-    retry: http.RetryPolicy | None = None,
-) -> int:
+def download_images(corpus: Corpus, transport_factory: Callable[[], http.Transport]) -> int:
     """downloadImages.ts:48-219: worklist of games missing an icon or a
     thumbnail, with one `need_<kind>` flag per kind, fetch only the
     missing binaries, append new rows to the images table. The
@@ -179,7 +144,7 @@ def download_images(
     )
     if wl.isEmpty():
         return 0
-    fetched = http.download_images(wl, transport_factory, concurrency=concurrency, retry=retry)
+    fetched = http.download_images(wl, transport_factory)
     fresh = fetched.join(
         corpus.images().select("universeId", "kind"), ["universeId", "kind"], "left_anti"
     )
@@ -193,8 +158,6 @@ def generate_gameplay_descriptions(
     *,
     base_url: str,
     model: str,
-    concurrency: int = 4,
-    retry: http.RetryPolicy | None = None,
 ) -> int:
     """generateGameplayDescriptions.ts:27-188: P7 worklist (description
     present, gameplay missing), icon/thumbnail data-URLs attached from
@@ -214,9 +177,7 @@ def generate_gameplay_descriptions(
     wl = wl.join(icon, "universeId", "left").join(thumb, "universeId", "left")
     obs = Observation()
     descs = (
-        http.generate_descriptions(
-            wl, transport_factory, base_url=base_url, model=model, concurrency=concurrency, retry=retry
-        )
+        http.generate_descriptions(wl, transport_factory, base_url=base_url, model=model)
         .select("universeId", F.col("gameplayDescription").alias("n_gp"))
         .observe(obs, F.count(F.lit(1)).alias("n"))
     )
@@ -240,23 +201,13 @@ def generate_embeddings(
     *,
     base_url: str,
     model: str,
-    concurrency: int = 4,
-    retry: http.RetryPolicy | None = None,
 ) -> int:
     """generateEmbeddings.ts:24-108: P8 anti-join worklist, batch-10
     embedding calls, append-only sink (idempotent via the worklist)."""
-    g = corpus.games()
-    ok = F.col("gameplayDescription").isNotNull() & (F.trim("gameplayDescription") != "")
-    wl = (
-        g.filter(ok)
-        .join(corpus.embeddings().select("universeId"), "universeId", "left_anti")
-        .select("universeId", "gameplayDescription")
-    )
+    wl = maintenance.needs_embeddings_df(corpus.games(), corpus.embeddings())
     if wl.isEmpty():
         return 0
-    vecs = http.embed_texts(
-        wl, transport_factory, base_url=base_url, model=model, concurrency=concurrency, retry=retry
-    )
+    vecs = http.embed_texts(wl, transport_factory, base_url=base_url, model=model)
     obs = Observation()
     corpus.write_embeddings(vecs.observe(obs, F.count(F.lit(1)).alias("n")), mode="append")
     return obs.get["n"]
@@ -279,15 +230,9 @@ def prune_games(corpus: Corpus, flags: list[str], dry_run: bool = False) -> dict
     embedding rows (J4, pruneGames.ts:188-198)."""
     enabled = tuple(PRUNE_FLAG_MAP[f] for f in flags if f in PRUNE_FLAG_MAP) or PRUNE_REASONS
     reasons = maintenance.prune_reason_df(corpus.games(), corpus.embeddings(), enabled)
-    counts = {
-        r["prune_reason"]: r["n"]
-        for r in reasons.filter(F.col("prune_reason").isNotNull())
-        .groupBy("prune_reason")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    counts = {r["prune_reason"]: r["n"] for r in maintenance.prune_counts_df(reasons).collect()}
     if not dry_run:
-        retained = reasons.filter(F.col("prune_reason").isNull()).drop("prune_reason")
+        retained = maintenance.retained_df(reasons)
         kept_emb = corpus.embeddings().join(
             retained.select("universeId"), "universeId", "left_semi"
         )
@@ -320,7 +265,7 @@ def search_games(corpus: Corpus, query: str, limit: int = 10) -> DataFrame:
 def clear_gameplay_descriptions(corpus: Corpus) -> int:
     obs = Observation()
     g = corpus.games().observe(obs, F.count(F.lit(1)).alias("n"))
-    corpus.write_games(g.withColumn("gameplayDescription", F.lit(None).cast("string")))
+    corpus.write_games(maintenance.clear_gameplay_df(g))
     return obs.get["n"]
 
 def process_games_from_search(
@@ -332,8 +277,6 @@ def process_games_from_search(
     llm_model: str,
     embed_base_url: str,
     embed_model: str,
-    concurrency: int = 4,
-    retry: http.RetryPolicy | None = None,
 ) -> dict[str, int]:
     """Composite pipeline (processGamesFromSearch.ts:14-27): gather ->
     (descriptions, images) -> LLM gameplay -> embeddings. The reference
@@ -342,25 +285,13 @@ def process_games_from_search(
     stages — per-stage counts are returned for the timing log parity."""
     out: dict[str, int] = {}
     out["gathered"] = gather_games_from_search(corpus, transport_factory(), query)
-    out["descriptions"] = download_descriptions(
-        corpus, transport_factory, concurrency=concurrency, retry=retry
-    )
-    out["images"] = download_images(corpus, transport_factory, concurrency=concurrency, retry=retry)
+    out["descriptions"] = download_descriptions(corpus, transport_factory)
+    out["images"] = download_images(corpus, transport_factory)
     out["gameplay"] = generate_gameplay_descriptions(
-        corpus,
-        transport_factory,
-        base_url=llm_base_url,
-        model=llm_model,
-        concurrency=concurrency,
-        retry=retry,
+        corpus, transport_factory, base_url=llm_base_url, model=llm_model
     )
     out["embeddings"] = generate_embeddings(
-        corpus,
-        transport_factory,
-        base_url=embed_base_url,
-        model=embed_model,
-        concurrency=concurrency,
-        retry=retry,
+        corpus, transport_factory, base_url=embed_base_url, model=embed_model
     )
     return out
 

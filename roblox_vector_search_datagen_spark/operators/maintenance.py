@@ -15,6 +15,12 @@ functions for the batch-order dedup:
 At scale both joins shuffle-partition on universeId; the insert
 anti-join reuses the same partitioning, so the whole merge is one
 exchange of each side.
+
+Each pipeline rule (the three merges, the details and embeddings
+worklists, the prune tally, the gameplay reset) is written once, as a
+frame-taking `*_df` function. The registry builders call it over the
+fixture tables, where its oracle checks it, and the CLI commands call
+it over the live corpus.
 """
 
 from __future__ import annotations
@@ -79,22 +85,18 @@ def _merge(existing: DataFrame, new: DataFrame, matched_updates: dict[str, objec
     )
     return updated.unionByName(inserts)
 
-def merge_games_gather(spark: SparkSession, sf_dir: str) -> DataFrame:
+def merge_gather_df(existing: DataFrame, new: DataFrame) -> DataFrame:
     """gatherGames variant (gatherGames.ts:63-91): matched rows take
     name + rootPlaceId from new, keep everything else."""
-    return _merge(
-        tables.games(spark, sf_dir),
-        tables.new_games(spark, sf_dir),
-        {"name": F.col("n_name"), "rootPlaceId": F.col("n_rootPlaceId")},
-    )
+    return _merge(existing, new, {"name": F.col("n_name"), "rootPlaceId": F.col("n_rootPlaceId")})
 
-def merge_games_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+def merge_search_df(existing: DataFrame, new: DataFrame) -> DataFrame:
     """gatherGamesFromSearch variant (gatherGamesFromSearch.ts:68-77):
     additionally overwrites playerCount unconditionally (JS sets
     `playerCount: newGame.playerCount` even when undefined)."""
     return _merge(
-        tables.games(spark, sf_dir),
-        tables.new_games(spark, sf_dir),
+        existing,
+        new,
         {
             "name": F.col("n_name"),
             "rootPlaceId": F.col("n_rootPlaceId"),
@@ -102,18 +104,27 @@ def merge_games_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
 
-def merge_games_rolimons(spark: SparkSession, sf_dir: str) -> DataFrame:
+def merge_rolimons_df(existing: DataFrame, new: DataFrame) -> DataFrame:
     """gatherGamesRolimons variant (gatherGamesRolimons.ts:234-239):
     description = new ?? existing (nullish coalesce)."""
     return _merge(
-        tables.games(spark, sf_dir),
-        tables.new_games(spark, sf_dir),
+        existing,
+        new,
         {
             "name": F.col("n_name"),
             "rootPlaceId": F.col("n_rootPlaceId"),
             "description": F.coalesce(F.col("n_description"), F.col("description")),
         },
     )
+
+def merge_games_gather(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return merge_gather_df(tables.games(spark, sf_dir), tables.new_games(spark, sf_dir))
+
+def merge_games_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return merge_search_df(tables.games(spark, sf_dir), tables.new_games(spark, sf_dir))
+
+def merge_games_rolimons(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return merge_rolimons_df(tables.games(spark, sf_dir), tables.new_games(spark, sf_dir))
 
 # The merge oracle is kept as (CTE fragment, SELECT fragment) pieces so
 # downstream oracles (snapshot_diff) can embed a whole merge run as one
@@ -229,9 +240,14 @@ LEFT JOIN (SELECT DISTINCT universeId FROM game_embeddings) e ON g.universeId = 
 
 _PRUNE_REASON_SQL = _prune_reason_sql("games")
 
+def retained_df(reasons: DataFrame) -> DataFrame:
+    """The games of a `prune_reason_df` frame that no enabled reason
+    prunes, without the reason column."""
+    return reasons.filter(F.col("prune_reason").isNull()).drop("prune_reason")
+
 def prune_games(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retained games with all five local prune flags enabled."""
-    return _prune_reason(spark, sf_dir).filter(F.col("prune_reason").isNull()).drop("prune_reason")
+    return retained_df(_prune_reason(spark, sf_dir))
 
 def prune_games_oracle() -> str:
     return tables.with_domain_views(
@@ -240,14 +256,17 @@ def prune_games_oracle() -> str:
         "FROM reasons WHERE prune_reason IS NULL"
     )
 
-def prune_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-reason tallies (`--dry-run` report, pruneGames.ts:142-150,238-241)."""
+def prune_counts_df(reasons: DataFrame) -> DataFrame:
+    """Per-reason tallies of a `prune_reason_df` frame (`--dry-run`
+    report, pruneGames.ts:142-150,238-241)."""
     return (
-        _prune_reason(spark, sf_dir)
-        .filter(F.col("prune_reason").isNotNull())
+        reasons.filter(F.col("prune_reason").isNotNull())
         .groupBy("prune_reason")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+
+def prune_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return prune_counts_df(_prune_reason(spark, sf_dir))
 
 def prune_counts_oracle() -> str:
     return tables.with_domain_views(
@@ -305,11 +324,7 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     old = tables.games(spark, sf_dir)
     merged = merge_games_gather(spark, sf_dir)
-    new = (
-        prune_reason_df(merged, tables.game_embeddings(spark, sf_dir))
-        .filter(F.col("prune_reason").isNull())
-        .drop("prune_reason")
-    )
+    new = retained_df(prune_reason_df(merged, tables.game_embeddings(spark, sf_dir)))
     o = old.select([F.col(c).alias(f"o_{c}") for c in GAME_COLS])
     n = new.select([F.col(c).alias(f"n_{c}") for c in GAME_COLS])
     j = o.join(n, o["o_universeId"] == n["n_universeId"], "full_outer")
@@ -363,14 +378,14 @@ SELECT * FROM diff WHERE status IS NOT NULL
 # Incremental worklists (P4/P5/P6/P8)
 # ---------------------------------------------------------------------------
 
-def needs_details_worklist(spark: SparkSession, sf_dir: str) -> DataFrame:
+def needs_details_df(games: DataFrame) -> DataFrame:
     """downloadDescriptions worklist (downloadDescriptions.ts:15-29):
-    needsDescription (never-fetched NULL; known-blank '' is excluded —
-    tri-state encoding) OR needsPlayerCount."""
-    g = tables.games(spark, sf_dir)
-    return g.filter(F.col("description").isNull() | F.col("playerCount").isNull()).select(
-        "universeId", "name"
-    )
+    the games rows with needsDescription (never-fetched NULL; known-blank
+    '' is excluded — tri-state encoding) OR needsPlayerCount."""
+    return games.filter(F.col("description").isNull() | F.col("playerCount").isNull())
+
+def needs_details_worklist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return needs_details_df(tables.games(spark, sf_dir)).select("universeId", "name")
 
 def needs_details_worklist_oracle() -> str:
     return tables.with_domain_views(
@@ -391,18 +406,19 @@ def missing_images_worklist_oracle() -> str:
         "(SELECT universeId FROM images WHERE kind = 'icon')"
     )
 
-def needs_embeddings_worklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P7/P8 (generateEmbeddings.ts:24-40): games with a usable
+def needs_embeddings_df(games: DataFrame, emb: DataFrame) -> DataFrame:
+    """P7/P8 (generateEmbeddings.ts:24-40): the games rows with a usable
     gameplayDescription but no embedding row — the LLM/embedding
     enrich stages are driven by this anti-join, which is what makes
     re-runs idempotent."""
-    g = tables.games(spark, sf_dir)
-    emb = tables.game_embeddings(spark, sf_dir).select("universeId")
-    return (
-        g.filter(F.col("gameplayDescription").isNotNull() & (F.trim("gameplayDescription") != ""))
-        .join(emb, "universeId", "left_anti")
-        .select("universeId", "name")
-    )
+    return games.filter(
+        F.col("gameplayDescription").isNotNull() & (F.trim("gameplayDescription") != "")
+    ).join(emb.select("universeId"), "universeId", "left_anti")
+
+def needs_embeddings_worklist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return needs_embeddings_df(
+        tables.games(spark, sf_dir), tables.game_embeddings(spark, sf_dir)
+    ).select("universeId", "name")
 
 def needs_embeddings_worklist_oracle() -> str:
     return tables.with_domain_views(
@@ -487,14 +503,15 @@ WHERE status IN ('completed', 'failed')
 # clearGameplayDescriptions — column reset
 # ---------------------------------------------------------------------------
 
-def clear_gameplay(spark: SparkSession, sf_dir: str) -> DataFrame:
+def clear_gameplay_df(games: DataFrame) -> DataFrame:
     """clearGameplayDescriptions (clearGameplayDescriptions.ts:14-16):
     reset every game's gameplayDescription to never-fetched (the
     reference deletes the key -> undefined; engine encoding NULL).
     A pure projection — no shuffle, the column rewrite is map-side."""
-    return tables.games(spark, sf_dir).withColumn(
-        "gameplayDescription", F.lit(None).cast("string")
-    )
+    return games.withColumn("gameplayDescription", F.lit(None).cast("string"))
+
+def clear_gameplay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return clear_gameplay_df(tables.games(spark, sf_dir))
 
 def clear_gameplay_oracle() -> str:
     return tables.with_domain_views("""

@@ -270,67 +270,25 @@ ORDER BY score DESC NULLS LAST, universeId LIMIT {limit}
 # Listing / stats / counts
 # ---------------------------------------------------------------------------
 
-# per-session capability probe for ICU collation expressions
-# (Spark >= 4.0); spark.sql analyzes eagerly, so an unsupported build
-# raises here without running a job
-_ICU_OK: dict[int, bool] = {}
-
-def _icu_collation_available(spark: SparkSession) -> bool:
-    key = id(spark)
-    if key not in _ICU_OK:
-        try:
-            spark.sql("SELECT collate('a', 'UNICODE')")
-            _ICU_OK[key] = True
-        except Exception:
-            _ICU_OK[key] = False
-    return _ICU_OK[key]
-
 def list_games_df(games_df: DataFrame, limit: int | None = 50) -> DataFrame:
     g = games_df.select("universeId", "name", "rootPlaceId")
-    spark = games_df.sparkSession
-    name_key = (
-        F.expr("collate(name, 'UNICODE')")
-        if _icu_collation_available(spark)
-        else F.col("name")
-    )
-    out = g.orderBy(name_key, "universeId")
+    out = g.orderBy(F.expr("collate(name, 'UNICODE')"), "universeId")
     return out.limit(limit) if limit else out
 
 def list_games(spark: SparkSession, sf_dir: str, limit: int | None = 50) -> DataFrame:
-    """GET /games (games.get.ts:63-66): name-sorted listing with the
-    reference's ICU localeCompare order (Spark `collate(name,
-    'UNICODE')` == DuckDB ICU "en_us" — the parity `list_games_unicode`
-    pinned in round 2), falling back to binary collation on a Spark
-    build without collation support. The ICU sort pays a per-row
-    collation-key build, which is why the fallback (and pre-round-3
-    default) is binary; universeId breaks ties so the LIMIT cut is
-    deterministic either way."""
+    """GET /games (games.get.ts:63-66): name-sorted listing in the
+    reference's ICU localeCompare order. Spark's `collate(name,
+    'UNICODE')` (ICU root collation, Spark >= 4.0) gives the same total
+    order as DuckDB's ICU `en_us` collation — checked on a mixed
+    case/accent/ß/CJK sample (tests/test_collation.py) and by the
+    oracle. universeId breaks exact ties so the LIMIT cut is
+    deterministic in both engines."""
     return list_games_df(tables.games(spark, sf_dir), limit)
 
 def list_games_oracle(limit: int | None = 50) -> str:
     lim = f" LIMIT {limit}" if limit else ""
     return tables.with_domain_views(
         f'SELECT universeId, name, rootPlaceId FROM games ORDER BY name COLLATE "en_us", universeId{lim}'
-    )
-
-def list_games_unicode(spark: SparkSession, sf_dir: str, limit: int = 50) -> DataFrame:
-    """ICU locale-aware listing — closes the localeCompare deviation
-    (games.get.ts:63-66). Spark's `collate(name, 'UNICODE')` (ICU root
-    collation, Spark >= 4.0) produces the same total order as DuckDB's
-    ICU `en_us` collation — verified on a mixed case/accent/ß/CJK
-    sample and by the driver oracle at sf0.01. universeId breaks exact
-    ties so the LIMIT cut is deterministic in both engines. The binary-
-    collation `list_games` remains the bench/default path (collated
-    sorts pay an ICU key-build per row)."""
-    return list_games_unicode_df(tables.games(spark, sf_dir), limit)
-
-def list_games_unicode_df(games_df: DataFrame, limit: int = 50) -> DataFrame:
-    g = games_df.select("universeId", "name", "rootPlaceId")
-    return g.orderBy(F.expr("collate(name, 'UNICODE')"), "universeId").limit(limit)
-
-def list_games_unicode_oracle(limit: int = 50) -> str:
-    return tables.with_domain_views(
-        f'SELECT universeId, name, rootPlaceId FROM games ORDER BY name COLLATE "en_us", universeId LIMIT {limit}'
     )
 
 def count_games_df(games_df: DataFrame) -> DataFrame:

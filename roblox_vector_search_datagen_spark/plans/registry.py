@@ -61,8 +61,8 @@ def _registry() -> dict[str, Query]:
         ("listing",),
     )
     r["list_games_unicode"] = Query(
-        lambda spark, sf: search.list_games_unicode(spark, sf),
-        search.list_games_unicode_oracle(),
+        lambda spark, sf: search.list_games(spark, sf),
+        search.list_games_oracle(),
         ("listing",),
     )
     r["count_games"] = Query(

@@ -8,9 +8,10 @@ gatherGamesRolimons.ts:76-188, generateEmbeddings.ts:53-96). Here the
 same policies live INSIDE mapInPandas functions, so a cluster gets:
 
 * concurrency = partition count (the reference's DESCRIPTION_CONCURRENCY
-  knob becomes `df.repartition(n)`)
+  knob becomes `repartition(FETCH_PARTITIONS)` in `_map_remote`)
 * batching = explicit chunking inside each Arrow batch
-* retry/bisect = per-executor, isolated to the failing id range
+* retry/bisect = per-executor, isolated to the failing id range; every
+  call goes through `request`, the one 429 retry loop
 
 Every function takes a `transport` callable so tests (and air-gapped
 runs) inject canned responses — no live network calls are made by any
@@ -25,7 +26,7 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Callable, Iterable, Iterator
-from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,6 +34,14 @@ from pyspark.sql import types as T
 
 # transport(method, url, headers, body) -> (status_code, body_bytes)
 Transport = Callable[[str, str, dict, bytes | None], tuple[int, bytes]]
+
+# Reference policy: HTTP 429 -> sleep 30 s -> retry, unbounded
+# (roblox.ts:28-34)
+RETRY_STATUS = 429
+BACKOFF_SECONDS = 30.0
+# partitions each executor-side fetch spreads its worklist over: the
+# number of concurrent remote callers
+FETCH_PARTITIONS = 4
 
 def urllib_transport(method: str, url: str, headers: dict, body: bytes | None) -> tuple[int, bytes]:
     """Default stdlib transport (no third-party HTTP deps)."""
@@ -46,44 +55,38 @@ def urllib_transport(method: str, url: str, headers: dict, body: bytes | None) -
     except urllib.error.HTTPError as e:  # non-2xx still carries a body
         return e.code, e.read()
 
-@dataclass
-class RetryPolicy:
-    """Reference policy: HTTP 429 -> sleep 30 s -> retry, unbounded
-    (roblox.ts:28-34). Tests shrink the sleep."""
-
-    backoff_seconds: float = 30.0
-    max_retries: int | None = None
-    retry_statuses: tuple[int, ...] = (429,)
+def request(
+    transport: Transport,
+    method: str,
+    url: str,
+    headers: dict | None = None,
+    body: bytes | None = None,
+) -> bytes:
+    """One request with the 429 retry loop; the body of the first
+    non-429 answer, HttpSourceError on any other status >= 400."""
+    while True:
+        status, raw = transport(method, url, headers or {}, body)
+        if status == RETRY_STATUS:
+            time.sleep(BACKOFF_SECONDS)
+            continue
+        if status >= 400:
+            raise HttpSourceError(status, url, raw[:500])
+        return raw
 
 def request_json(
     transport: Transport,
     method: str,
     url: str,
     *,
-    headers: dict | None = None,
     payload: dict | None = None,
-    retry: RetryPolicy | None = None,
-    sleep: Callable[[float], None] = time.sleep,
 ):
-    """Single JSON request with the 429 retry loop."""
-    retry = retry or RetryPolicy()
-    headers = dict(headers or {})
-    body = None
+    """`request` with an optional JSON payload; the decoded answer."""
+    headers, body = None, None
     if payload is not None:
-        headers.setdefault("Content-Type", "application/json")
+        headers = {"Content-Type": "application/json"}
         body = json.dumps(payload).encode()
-    attempts = 0
-    while True:
-        status, raw = transport(method, url, headers, body)
-        if status in retry.retry_statuses and (
-            retry.max_retries is None or attempts < retry.max_retries
-        ):
-            attempts += 1
-            sleep(retry.backoff_seconds)
-            continue
-        if status >= 400:
-            raise HttpSourceError(status, url, raw[:500])
-        return json.loads(raw) if raw else None
+    raw = request(transport, method, url, headers, body)
+    return json.loads(raw) if raw else None
 
 class HttpSourceError(RuntimeError):
     def __init__(self, status: int, url: str, body: bytes):
@@ -116,6 +119,29 @@ def bisect_batches(
             ids[mid:], fetch, on_single_failure=on_single_failure
         )
 
+def _map_remote(
+    worklist: DataFrame,
+    cols: tuple[str, ...],
+    schema: T.StructType,
+    transport_factory: Callable[[], Transport],
+    per_batch: Callable,
+) -> DataFrame:
+    """The one executor-side fetch shape: spread the worklist's `cols`
+    over FETCH_PARTITIONS partitions and map each Arrow batch through
+    `per_batch(transport, pdf) -> rows of schema`. transport_factory is
+    called once per partition ON THE EXECUTOR, so the closure ships only
+    picklable config, never live sockets."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterable) -> Iterator:
+        import pandas as pd
+
+        transport = transport_factory()
+        for pdf in batches:
+            yield pd.DataFrame(per_batch(transport, pdf), columns=names)
+
+    return worklist.select(*cols).repartition(FETCH_PARTITIONS).mapInPandas(run, schema)
+
 # ---------------------------------------------------------------------------
 # Concrete reference sources (public Roblox / OpenAI-compatible APIs)
 # ---------------------------------------------------------------------------
@@ -124,15 +150,13 @@ GAME_DETAILS_URL = "https://games.roblox.com/v1/games?universeIds={ids}"
 GAME_DETAILS_BATCH = 50  # roblox.ts:25
 EMBEDDINGS_BATCH = 10  # generateEmbeddings.ts:53
 
-def fetch_game_details_batch(
-    transport: Transport, ids: list[int], retry: RetryPolicy | None = None, sleep=time.sleep
-) -> list[dict]:
+def fetch_game_details_batch(transport: Transport, ids: list[int]) -> list[dict]:
     """S10 (roblox.ts:16-61): batch-50 universe-id lookup -> rows of
     {universeId, description, playing}."""
     out: list[dict] = []
     for chunk in chunked(ids, GAME_DETAILS_BATCH):
         url = GAME_DETAILS_URL.format(ids=",".join(str(i) for i in chunk))
-        data = request_json(transport, "GET", url, retry=retry, sleep=sleep) or {}
+        data = request_json(transport, "GET", url) or {}
         for entry in data.get("data", []):
             out.append(
                 {
@@ -151,26 +175,31 @@ DETAILS_SCHEMA = T.StructType(
     ]
 )
 
+def _details_batch(transport: Transport, pdf) -> list[dict]:
+    ids = [int(x) for x in pdf["universeId"]]
+    return bisect_batches(ids, lambda c: fetch_game_details_batch(transport, c))
+
 def enrich_with_game_details(
-    worklist: DataFrame,
-    transport_factory: Callable[[], Transport],
-    *,
-    concurrency: int = 4,
-    retry: RetryPolicy | None = None,
+    worklist: DataFrame, transport_factory: Callable[[], Transport]
 ) -> DataFrame:
-    """Distributed S10: each partition batches its ids 50-at-a-time.
-    transport_factory is called once per partition ON THE EXECUTOR so
-    the closure ships only picklable config, never live sockets."""
-    import pandas as pd
+    """Distributed S10: each partition batches its ids 50-at-a-time."""
+    return _map_remote(worklist, ("universeId",), DETAILS_SCHEMA, transport_factory, _details_batch)
 
-    def run(batches: Iterable) -> Iterator:
-        transport = transport_factory()
-        for pdf in batches:
-            ids = [int(x) for x in pdf["universeId"]]
-            rows = bisect_batches(ids, lambda c: fetch_game_details_batch(transport, c, retry=retry))
-            yield pd.DataFrame(rows, columns=["universeId", "description", "playing"])
+EMBEDDINGS_SCHEMA = T.StructType(
+    [
+        T.StructField("universeId", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.FloatType())),
+    ]
+)
 
-    return worklist.select("universeId").repartition(concurrency).mapInPandas(run, DETAILS_SCHEMA)
+def _embed_batch(transport: Transport, pdf, *, base_url: str, model: str) -> list[tuple]:
+    rows = []
+    for chunk in chunked(list(zip(pdf["universeId"], pdf["gameplayDescription"])), EMBEDDINGS_BATCH):
+        payload = {"model": model, "input": [t for _, t in chunk]}
+        data = request_json(transport, "POST", f"{base_url}/embeddings", payload=payload)
+        for (i, _), item in zip(chunk, data["data"]):
+            rows.append((int(i), [float(v) for v in item["embedding"]]))
+    return rows
 
 def embed_texts(
     texts_df: DataFrame,
@@ -178,38 +207,17 @@ def embed_texts(
     *,
     base_url: str,
     model: str,
-    id_col: str = "universeId",
-    text_col: str = "gameplayDescription",
-    concurrency: int = 4,
-    retry: RetryPolicy | None = None,
 ) -> DataFrame:
     """S15 (generateEmbeddings.ts:53-96): batch-10 embedding calls over
-    an OpenAI-compatible /embeddings endpoint, executor-side."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
+    an OpenAI-compatible /embeddings endpoint, executor-side, on each
+    game's gameplayDescription."""
+    return _map_remote(
+        texts_df,
+        ("universeId", "gameplayDescription"),
+        EMBEDDINGS_SCHEMA,
+        transport_factory,
+        partial(_embed_batch, base_url=base_url, model=model),
     )
-
-    def run(batches: Iterable) -> Iterator:
-        transport = transport_factory()
-        for pdf in batches:
-            out_ids, out_vecs = [], []
-            rows = list(zip(pdf[id_col], pdf[text_col]))
-            for chunk in chunked(rows, EMBEDDINGS_BATCH):
-                payload = {"model": model, "input": [t for _, t in chunk]}
-                data = request_json(
-                    transport, "POST", f"{base_url}/embeddings", payload=payload, retry=retry
-                )
-                for (i, _), item in zip(chunk, data["data"]):
-                    out_ids.append(int(i))
-                    out_vecs.append([float(v) for v in item["embedding"]])
-            yield pd.DataFrame({id_col: out_ids, "embedding": out_vecs})
-
-    return texts_df.select(id_col, text_col).repartition(concurrency).mapInPandas(run, schema)
 
 # ---------------------------------------------------------------------------
 # Driver-side cursor sources (inherently sequential)
@@ -217,9 +225,7 @@ def embed_texts(
 
 EXPLORE_SORTS_URL = "https://apis.roblox.com/explore-api/v1/get-sorts?sessionId={sid}{token}"
 
-def gather_games_pages(
-    transport: Transport, session_id: str, retry: RetryPolicy | None = None, sleep=time.sleep
-) -> list[dict]:
+def gather_games_pages(transport: Transport, session_id: str) -> list[dict]:
     """S5 (gatherGames.ts:9-40): paginated explore-sorts cursor loop.
     A remote cursor is sequential by nature — this stays on the driver
     and the RESULT becomes a DataFrame for the merge operator."""
@@ -227,7 +233,7 @@ def gather_games_pages(
     token = ""
     while True:
         url = EXPLORE_SORTS_URL.format(sid=session_id, token=f"&sortsPageToken={token}" if token else "")
-        data = request_json(transport, "GET", url, retry=retry, sleep=sleep)
+        data = request_json(transport, "GET", url)
         for sort in data.get("sorts", []):
             if sort.get("contentType") != "Games":  # P2
                 continue
@@ -257,16 +263,14 @@ def base64_image_expr(content_col: str = "content") -> F.Column:
 
 OMNI_SEARCH_URL = "https://apis.roblox.com/search-api/omni-search?searchQuery={q}&sessionId={sid}"
 
-def gather_games_from_search(
-    transport: Transport, query: str, session_id: str, retry: RetryPolicy | None = None, sleep=time.sleep
-) -> list[dict]:
+def gather_games_from_search(transport: Transport, query: str, session_id: str) -> list[dict]:
     """S6 (gatherGamesFromSearch.ts:32-51): single omni-search page;
     keep contentGroupType=='Game' groups (P3), flatten their contents to
     core rows + playerCount."""
     from urllib.parse import quote
 
     url = OMNI_SEARCH_URL.format(q=quote(query), sid=session_id)
-    data = request_json(transport, "GET", url, retry=retry, sleep=sleep) or {}
+    data = request_json(transport, "GET", url) or {}
     out: list[dict] = []
     for group in data.get("searchResults", []):
         if group.get("contentGroupType") != "Game":
@@ -286,13 +290,7 @@ PLACE_DETAILS_URL = "https://games.roblox.com/v1/games/multiget-place-details?pl
 UNIVERSE_URL = "https://apis.roblox.com/universes/v1/places/{pid}/universe"
 PLACE_DETAILS_BATCH = 50  # gatherGamesRolimons.ts:77
 
-def rolimons_rows(
-    transport: Transport,
-    html: str,
-    *,
-    retry: RetryPolicy | None = None,
-    sleep=time.sleep,
-) -> list[dict]:
+def rolimons_rows(transport: Transport, html: str) -> list[dict]:
     """S7+S8+S9 (gatherGamesRolimons.ts:18-188): parse the scraped
     `var games = {...}` map, resolve placeId -> universe details in
     batches of 50 with bisect-on-4xx isolation, and fall back to the
@@ -303,7 +301,7 @@ def rolimons_rows(
 
     def fetch(ids: list) -> list[dict]:
         url = PLACE_DETAILS_URL.format(ids=",".join(str(i) for i in ids))
-        data = request_json(transport, "GET", url, retry=retry, sleep=sleep) or []
+        data = request_json(transport, "GET", url) or []
         return [
             {
                 "universeId": int(d["universeId"]),
@@ -315,9 +313,7 @@ def rolimons_rows(
         ]
 
     def single_fallback(pid) -> list[dict]:
-        data = request_json(
-            transport, "GET", UNIVERSE_URL.format(pid=pid), retry=retry, sleep=sleep
-        ) or {}
+        data = request_json(transport, "GET", UNIVERSE_URL.format(pid=pid)) or {}
         uid = data.get("universeId")
         if uid is None:
             return []
@@ -355,66 +351,38 @@ IMAGE_ROWS_SCHEMA = T.StructType(
     ]
 )
 
-def download_images(
-    worklist: DataFrame,
-    transport_factory: Callable[[], Transport],
-    *,
-    concurrency: int = 4,
-    retry: RetryPolicy | None = None,
-) -> DataFrame:
+def _image_batch(transport: Transport, pdf) -> list[tuple]:
+    """Batch-50 CDN-URL lookups for icons (ids whose `need_icon` is
+    true) and thumbnails (`need_thumbnail`), then one GET per completed
+    image."""
+    rows = []
+    for flag, kind, url in (("need_icon", "icon", ICONS_URL), ("need_thumbnail", "thumbnail", THUMBS_URL)):
+        for chunk in chunked([int(x) for x in pdf.loc[pdf[flag], "universeId"]], IMAGE_BATCH):
+            data = request_json(transport, "GET", url.format(ids=",".join(str(i) for i in chunk))) or {}
+            for item in data.get("data", []):
+                if kind == "icon":
+                    uid, image = item.get("targetId"), item
+                else:  # reference takes thumbnails[0] (downloadImages.ts:186)
+                    uid, image = item.get("universeId"), (item.get("thumbnails") or [None])[0]
+                if image and image.get("state") == "Completed" and image.get("imageUrl"):
+                    uid = int(uid)
+                    content = request(transport, "GET", image["imageUrl"])
+                    rows.append((uid, kind, f"images/{uid}/{kind}.png", content))
+    return rows
+
+def download_images(worklist: DataFrame, transport_factory: Callable[[], Transport]) -> DataFrame:
     """Distributed S11/S12/S13 (downloadImages.ts:60-219): per partition,
-    batch-50 CDN-URL lookups for icons (ids whose `need_icon` is true)
-    and thumbnails (`need_thumbnail`), then one GET per completed image;
-    yields IMAGE_SCHEMA rows (binary column sink — the engine's images
+    fetch the missing kinds of each worklist game; yields
+    IMAGE_ROWS_SCHEMA rows (binary column sink — the engine's images
     table replaces the reference's loose PNG files). Skipped states
     (not 'Completed') produce no row, matching the reference's
     continue-on-missing behavior."""
-    import pandas as pd
-
-    def run(batches: Iterable) -> Iterator:
-        transport = transport_factory()
-
-        def get_bytes(url: str) -> bytes:
-            policy = retry or RetryPolicy()
-            while True:
-                status, raw = transport("GET", url, {}, None)
-                if status in policy.retry_statuses:
-                    time.sleep(policy.backoff_seconds)
-                    continue
-                if status >= 400:
-                    raise HttpSourceError(status, url, raw[:200])
-                return raw
-
-        def ids(pdf, flag: str) -> list[int]:
-            return [int(x) for x in pdf.loc[pdf[flag], "universeId"]]
-
-        for pdf in batches:
-            rows = []
-            for chunk in chunked(ids(pdf, "need_icon"), IMAGE_BATCH):
-                idstr = ",".join(str(i) for i in chunk)
-                icons = request_json(transport, "GET", ICONS_URL.format(ids=idstr), retry=retry) or {}
-                for item in icons.get("data", []):
-                    if item.get("state") == "Completed" and item.get("imageUrl"):
-                        uid = int(item["targetId"])
-                        rows.append((uid, "icon", f"images/{uid}/icon.png", get_bytes(item["imageUrl"])))
-            for chunk in chunked(ids(pdf, "need_thumbnail"), IMAGE_BATCH):
-                idstr = ",".join(str(i) for i in chunk)
-                thumbs = request_json(transport, "GET", THUMBS_URL.format(ids=idstr), retry=retry) or {}
-                for item in thumbs.get("data", []):
-                    # reference takes thumbnails[0] (downloadImages.ts:186)
-                    tlist = item.get("thumbnails") or []
-                    first = tlist[0] if tlist else None
-                    if first and first.get("state") == "Completed" and first.get("imageUrl"):
-                        uid = int(item["universeId"])
-                        rows.append(
-                            (uid, "thumbnail", f"images/{uid}/thumbnail.png", get_bytes(first["imageUrl"]))
-                        )
-            yield pd.DataFrame(rows, columns=["universeId", "kind", "path", "content"])
-
-    return (
-        worklist.select("universeId", "need_icon", "need_thumbnail")
-        .repartition(concurrency)
-        .mapInPandas(run, IMAGE_ROWS_SCHEMA)
+    return _map_remote(
+        worklist,
+        ("universeId", "need_icon", "need_thumbnail"),
+        IMAGE_ROWS_SCHEMA,
+        transport_factory,
+        _image_batch,
     )
 
 # ---------------------------------------------------------------------------
@@ -440,66 +408,61 @@ def format_gameplay_markdown(parsed: dict) -> str:
         f"**Game Features**: {', '.join(parsed['gameFeatures'])}"
     )
 
+GAMEPLAY_SYSTEM_PROMPT = "Describe the gameplay of this Roblox game."
+
+GAMEPLAY_SCHEMA = T.StructType(
+    [
+        T.StructField("universeId", T.LongType()),
+        T.StructField("gameplayDescription", T.StringType()),
+    ]
+)
+
+def _describe_batch(transport: Transport, pdf, *, base_url: str, model: str) -> list[tuple]:
+    rows = []
+    for row in pdf.itertuples(index=False):
+        user_content: list | str = f"Title: {row.name}\n\nDescription: {row.description}"
+        if row.icon_b64 or row.thumb_b64:
+            parts = [{"type": "text", "text": user_content}]
+            for url in (row.icon_b64, row.thumb_b64):
+                if url:
+                    parts.append({"type": "image_url", "image_url": {"url": url}})
+            user_content = parts
+        payload = {
+            "model": model,
+            "messages": [
+                {"role": "system", "content": GAMEPLAY_SYSTEM_PROMPT},
+                {"role": "user", "content": user_content},
+            ],
+            "response_format": {
+                "type": "json_schema",
+                "json_schema": {
+                    "name": "gameplay_analysis",
+                    "strict": True,
+                    "schema": GAMEPLAY_JSON_SCHEMA,
+                },
+            },
+        }
+        data = request_json(transport, "POST", f"{base_url}/chat/completions", payload=payload)
+        parsed = json.loads(data["choices"][0]["message"]["content"])
+        rows.append((int(row.universeId), format_gameplay_markdown(parsed)))
+    return rows
+
 def generate_descriptions(
     worklist: DataFrame,
     transport_factory: Callable[[], Transport],
     *,
     base_url: str,
     model: str,
-    system_prompt: str = "Describe the gameplay of this Roblox game.",
-    concurrency: int = 4,
-    retry: RetryPolicy | None = None,
 ) -> DataFrame:
     """Distributed S14 (generateGameplayDescriptions.ts:99-163): one
     chat-completions call per game with a strict json_schema response
     format; the validated struct is rendered to the reference's markdown
-    shape. Partition count bounds concurrency (the reference's
-    DESCRIPTION_CONCURRENCY knob). Worklist columns: universeId, name,
-    description, optional icon_b64/thumb_b64 data-URLs."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField("universeId", T.LongType()),
-            T.StructField("gameplayDescription", T.StringType()),
-        ]
+    shape. Worklist columns: universeId, name, description and the
+    icon_b64/thumb_b64 data-URLs (NULL when the image is missing)."""
+    return _map_remote(
+        worklist,
+        ("universeId", "name", "description", "icon_b64", "thumb_b64"),
+        GAMEPLAY_SCHEMA,
+        transport_factory,
+        partial(_describe_batch, base_url=base_url, model=model),
     )
-
-    def run(batches: Iterable) -> Iterator:
-        transport = transport_factory()
-        for pdf in batches:
-            out_ids, out_md = [], []
-            has_imgs = {"icon_b64", "thumb_b64"} <= set(pdf.columns)
-            for row in pdf.itertuples(index=False):
-                user_content: list | str = f"Title: {row.name}\n\nDescription: {row.description}"
-                if has_imgs and (row.icon_b64 or row.thumb_b64):
-                    parts = [{"type": "text", "text": user_content}]
-                    for url in (row.icon_b64, row.thumb_b64):
-                        if url:
-                            parts.append({"type": "image_url", "image_url": {"url": url}})
-                    user_content = parts
-                payload = {
-                    "model": model,
-                    "messages": [
-                        {"role": "system", "content": system_prompt},
-                        {"role": "user", "content": user_content},
-                    ],
-                    "response_format": {
-                        "type": "json_schema",
-                        "json_schema": {
-                            "name": "gameplay_analysis",
-                            "strict": True,
-                            "schema": GAMEPLAY_JSON_SCHEMA,
-                        },
-                    },
-                }
-                data = request_json(
-                    transport, "POST", f"{base_url}/chat/completions", payload=payload, retry=retry
-                )
-                parsed = json.loads(data["choices"][0]["message"]["content"])
-                out_ids.append(int(row.universeId))
-                out_md.append(format_gameplay_markdown(parsed))
-            yield pd.DataFrame({"universeId": out_ids, "gameplayDescription": out_md})
-
-    cols = [c for c in ("universeId", "name", "description", "icon_b64", "thumb_b64") if c in worklist.columns]
-    return worklist.select(*cols).repartition(concurrency).mapInPandas(run, schema)

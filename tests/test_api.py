@@ -88,6 +88,22 @@ def test_async_job_roundtrip(svc):
         svc.get_job("missing")
     assert e.value.status == 404
 
+def test_pipeline_jobs_run_one_at_a_time(svc, monkeypatch):
+    """Corpus rewrites are not locked, so two back-to-back pipeline
+    POSTs must not overlap: the second job starts once the first has
+    completed."""
+    from roblox_vector_search_datagen_spark import cli
+
+    monkeypatch.setattr(cli, "gather_games", lambda corpus, transport: time.sleep(0.3) or 0)
+    ids = [svc.post_gather_games()["jobId"] for _ in range(2)]
+    for _ in range(100):
+        first, second = (svc.jobs.get_job(i) for i in ids)
+        if second["status"] in ("completed", "failed"):
+            break
+        time.sleep(0.1)
+    assert first["status"] == second["status"] == "completed"
+    assert second["started_at"] >= first["completed_at"]
+
 def test_openapi_spec(svc):
     spec = svc.openapi_spec()
     ops = [(m, p) for p, methods in spec["paths"].items() for m in methods]

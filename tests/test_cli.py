@@ -240,6 +240,24 @@ def test_gather_rolimons_bisect_and_fallback(corpus):
     # place 32 rejected by batch API -> per-id universe fallback, scrape name, no description
     assert games[332]["name"] == "roli two" and games[332]["description"] is None
 
+def test_gather_rolimons_retries_429_on_the_page(corpus, monkeypatch):
+    """The scraped rolimons.com page goes through the same 429 retry
+    loop as the API calls: a 429 is waited out, not parsed."""
+    from roblox_vector_search_datagen_spark.sources import http
+
+    monkeypatch.setattr(http, "BACKOFF_SECONDS", 0)
+    pages = []
+
+    def transport(method, url, headers, body):
+        if url == "https://rolimons.com/games":
+            pages.append(url)
+            if len(pages) == 1:
+                return 429, b"Too Many Requests"
+        return FakeRoblox()(method, url, headers, body)
+
+    assert cli.gather_games_rolimons(corpus, transport) == 2
+    assert len(pages) == 2
+
 def test_download_descriptions_tristate(corpus):
     n = cli.download_descriptions(corpus, FakeRoblox)
     assert n > 0

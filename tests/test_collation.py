@@ -1,8 +1,8 @@
-"""Pins both name orderings of the games listing against non-ASCII
-names: `list_games_df` (binary collation, the documented deviation) and
-`list_games_unicode_df` (ICU root via collate(), the localeCompare-
-parity path). A collation or Spark upgrade that shifts either order
-fails here before it can silently change which rows a LIMIT keeps."""
+"""Pins the games listing's name order against non-ASCII names:
+`list_games_df` sorts by ICU root collation (collate(name, 'UNICODE')),
+the reference's localeCompare order, equal to DuckDB's ICU "en_us". A
+collation or Spark upgrade that shifts the order fails here before it
+can silently change which rows a LIMIT keeps."""
 
 from __future__ import annotations
 
@@ -19,31 +19,22 @@ def games_df(spark):
     rows = [(i + 1, 1000 + i, n, None, None, None) for i, n in enumerate(NAMES)]
     return spark.createDataFrame(rows, GAME_SCHEMA)
 
-def test_default_listing_uses_icu_order(games_df):
-    # round 3: the default listing adopts the reference's localeCompare
-    # (ICU) order whenever the Spark build supports collation
-    got = [r.name for r in search.list_games_df(games_df).collect()]
-    assert got == ["123 go", "Ängstrom", "apple pie", "Apple Pie", "éclair", "ss-test", "ß-test", "zebra", "日本語"]
+ICU_ORDER = ["123 go", "Ängstrom", "apple pie", "Apple Pie", "éclair", "ss-test", "ß-test", "zebra", "日本語"]
 
-def test_binary_fallback_order_pinned(games_df, spark):
-    # capability-check fallback: a Spark build without collation
-    # support must still produce the documented bytewise order
-    search._ICU_OK[id(spark)] = False
-    try:
-        got = [r.name for r in search.list_games_df(games_df).collect()]
-    finally:
-        search._ICU_OK.pop(id(spark), None)
-    # bytewise UTF-8: digits < uppercase < lowercase < Latin-1 < CJK
-    assert got == ["123 go", "Apple Pie", "apple pie", "ss-test", "zebra", "Ängstrom", "ß-test", "éclair", "日本語"]
+def test_default_listing_uses_icu_order(games_df):
+    # the LIMIT cut keeps the first rows of the ICU order, not of the
+    # bytewise one (which would keep "Apple Pie" and drop "Ängstrom")
+    got = [r.name for r in search.list_games_df(games_df, limit=3).collect()]
+    assert got == ICU_ORDER[:3]
 
 def test_unicode_order_pinned(games_df):
-    got = [r.name for r in search.list_games_unicode_df(games_df).collect()]
+    got = [r.name for r in search.list_games_df(games_df, limit=None).collect()]
     # ICU root: numerics first, case-insensitive primary with lowercase
     # before uppercase at tertiary, accents sort next to their base
-    assert got == ["123 go", "Ängstrom", "apple pie", "Apple Pie", "éclair", "ss-test", "ß-test", "zebra", "日本語"]
+    assert got == ICU_ORDER
 
 def test_unicode_order_matches_duckdb_icu(games_df):
-    got = [r.name for r in search.list_games_unicode_df(games_df).collect()]
+    got = [r.name for r in search.list_games_df(games_df).collect()]
     con = duckdb.connect()
     con.execute("CREATE TABLE g(n VARCHAR)")
     con.executemany("INSERT INTO g VALUES (?)", [(n,) for n in NAMES])
